@@ -149,59 +149,24 @@ def _verified_from_shared_stages(spark: SparkSession, sf_dir: str) -> dict:
     fresh: pairwise candidate edges, exact-Jaccard verification, CC, and
     the keep-rule merge — exactly pipeline.candidate_edges + the run()
     tail for verify_pairs=True."""
-    from daft_minhash_dedupe_spark.operators.edges import (
-        build_pair_edges_from_buckets,
-    )
-    from daft_minhash_dedupe_spark.operators.merge import (
-        cluster_assignments,
-        merge_results,
-    )
-    from daft_minhash_dedupe_spark.operators.verify import (
-        verify_pairs_exact_jaccard,
-    )
-
     base = _run_flagship(spark, sf_dir)
     cfg = DedupeConfig(verify_pairs=True)
-    edges = build_pair_edges_from_buckets(
-        base["bands"].select("band_key", "node"),
-        max_bucket_pairwise=cfg.pairwise_cap,
-        num_salts=cfg.num_salts,
+    pipe = MinHashDedupePipeline(cfg)
+    edges = pipe.candidate_edges(base["bands"], base["shingled"]).localCheckpoint(
+        eager=False
     )
-    edges = verify_pairs_exact_jaccard(
-        edges,
-        base["shingled"],
-        cfg.threshold,
-        node_col="node_id",
-        shingle_col="shingles",
-    ).localCheckpoint(eager=False)
     assignments = connected_components(
         edges,
         algorithm=cfg.algorithm,
         max_loops=cfg.max_loops,
         driver_fallback_edges=cfg.cc_driver_fallback_edges,
     )
-    prepped_cols = base["prepped"].select(cfg.index_col, cfg.content_col)
+    clusters, results = pipe.merge(base["prepped"], assignments, base["id_map"])
     return {
-        "results": merge_results(
-            prepped_cols,
-            assignments,
-            base["id_map"],
-            index_col=cfg.index_col,
-            component_col=cfg.component_col,
-        ),
+        **base,
+        "results": results,
         "assignments": assignments,
-        "id_map": base["id_map"],
-        "clusters": cluster_assignments(
-            prepped_cols,
-            assignments,
-            base["id_map"],
-            index_col=cfg.index_col,
-            component_col=cfg.component_col,
-        ),
-        "prepped": base["prepped"],
-        "bands": base["bands"],
-        "shingled": base["shingled"],
-        "signatures": base["signatures"],
+        "clusters": clusters,
     }
 
 

@@ -165,58 +165,6 @@ def _min_signatures_flat(
     return out
 
 
-def attach_minhash_signatures(
-    df,
-    shingle_col: str = "shingles",
-    num_perm: int = 64,
-    seed: int = 42,
-    out_col: str = "min_hashes",
-):
-    """mapInArrow variant of the kernel: reads each batch's ListArray as
-    (flat values, offsets) numpy views.
-
-    EXPERIMENTAL — measured SLOWER than the pandas-UDF path in this runtime
-    (mapInArrow serializes every passthrough column through Python; the
-    pandas-UDF ArrowEvalPython node ships only the shingle column and keeps
-    the rest JVM-side). Kept for environments where the UDF path regresses;
-    the pipeline uses ``minhash_signature``.
-    """
-    import pyarrow as pa
-
-    a, b = _permutations(num_perm, seed)
-    in_schema = df.schema
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in in_schema.fields)
-        + f", {out_col} array<bigint>"
-    )
-    col_idx = [f.name for f in in_schema.fields].index(shingle_col)
-
-    def _map(batches):
-        for batch in batches:
-            arr = batch.column(col_idx)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            la = arr.cast(pa.list_(pa.int64()))
-            offsets = np.asarray(la.offsets, dtype=np.int64)
-            values = np.asarray(la.values, dtype=np.int64)
-            # a sliced ListArray keeps absolute offsets into the full values
-            # buffer — rebase both so offsets[0] == 0
-            values = values[offsets[0] : offsets[-1]]
-            offsets = offsets - offsets[0]
-            mins = _min_signatures_flat(values, offsets, a, b)
-            n = len(offsets) - 1
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(n + 1, dtype=np.int64) * num_perm, type=pa.int32()),
-                pa.array(mins.reshape(-1), type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [sig_arr],
-                names=[f.name for f in in_schema.fields] + [out_col],
-            )
-
-    return df.mapInArrow(_map, schema=out_schema)
-
-
 def _permutations(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic (a, b) universal-hash parameters, seeded like chengmao."""
     gen = np.random.RandomState(seed)

@@ -21,7 +21,7 @@ from daft_minhash_dedupe_spark.operators.incremental import (
     incremental_assignments,
     merge_assignment_tables,
 )
-from daft_minhash_dedupe_spark.operators.merge import merge_results
+from daft_minhash_dedupe_spark.operators.merge import cluster_table, survivors
 from daft_minhash_dedupe_spark.operators.verify import verify_pairs_exact_jaccard
 
 __all__ = [
@@ -40,6 +40,7 @@ __all__ = [
     "small_star",
     "incremental_assignments",
     "merge_assignment_tables",
-    "merge_results",
+    "cluster_table",
+    "survivors",
     "verify_pairs_exact_jaccard",
 ]

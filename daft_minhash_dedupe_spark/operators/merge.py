@@ -5,9 +5,9 @@ Reference semantics (workload/minhash_dedupe.py:616-647, pinned by its tests
 any candidate edge → no assignment) or it is *its own representative* (its id
 equals the global minimum id of its component).
 
-Unlike the reference (which drops the component column, :646), we also expose
-the full cluster-assignment table — the north rule requires cluster_id
-write-back, and keeping assignments as a first-class output costs nothing.
+Unlike the reference (which drops the component column, :646), the merge
+builds the full cluster-assignment table — the north rule requires
+cluster_id write-back — and the survivors are a filter over it.
 """
 
 from __future__ import annotations
@@ -16,28 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assignments_to_index(
-    assignments: DataFrame, id_map: DataFrame, index_col: str, component_col: str
-) -> DataFrame:
-    """Map integer (u, rep) assignments back to natural-key space via two
-    joins on the id_map (reference :616-624). With deterministic hashed ids
-    the id_map is (index_col, node_id) and both joins are plain equi-joins;
-    Catalyst/AQE picks broadcast when the map is small."""
-    u_map = id_map.select(
-        F.col("node_id").alias("u"), F.col(index_col)
-    )
-    rep_map = id_map.select(
-        F.col("node_id").alias("rep"), F.col(index_col).alias(component_col)
-    )
-    return (
-        assignments.join(u_map, "u")
-        .join(rep_map, "rep")
-        .select(index_col, component_col)
-    )
-
-
-def cluster_assignments(
-    df: DataFrame,
+def cluster_table(
+    prepped: DataFrame,
     assignments: DataFrame,
     id_map: DataFrame,
     index_col: str = "block_id",
@@ -45,31 +25,29 @@ def cluster_assignments(
 ) -> DataFrame:
     """Every input row with its cluster id (north-rule write-back table).
 
-    Isolated rows (no candidate edge ever touched them) are their own
-    cluster: ``component = coalesce(rep, own index)``.
-    """
-    uniq = assignments.groupBy("u").agg(F.min("rep").alias("rep"))
-    assign_str = assignments_to_index(uniq, id_map, index_col, component_col)
-    return df.join(assign_str, index_col, "left").withColumn(
-        component_col, F.coalesce(component_col, index_col)
+    ``prepped`` carries ``node_id`` plus the columns to keep; CC's (u, rep)
+    has one row per u, so it left-joins on ``node_id`` directly and only
+    ``rep`` is mapped back to natural-key space through ``id_map``
+    (reference :616-624). Isolated rows (no candidate edge ever touched
+    them) are their own cluster: ``component = coalesce(rep's index, own
+    index)``."""
+    rep_map = id_map.select(
+        F.col("node_id").alias("rep"), F.col(index_col).alias("__rep_index")
+    )
+    return (
+        prepped.join(assignments.withColumnRenamed("u", "node_id"), "node_id", "left")
+        .join(rep_map, "rep", "left")
+        .withColumn(component_col, F.coalesce("__rep_index", index_col))
+        .drop("node_id", "rep", "__rep_index")
     )
 
 
-def merge_results(
-    df: DataFrame,
-    assignments: DataFrame,
-    id_map: DataFrame,
-    index_col: str = "block_id",
-    component_col: str = "component",
-    keep_component: bool = False,
+def survivors(
+    clusters: DataFrame, index_col: str = "block_id", component_col: str = "component"
 ) -> DataFrame:
-    """Left-join cluster assignments onto the original rows and apply the
-    keep-rule (isolated OR own-representative), reference :626-647."""
-    uniq = assignments.groupBy("u").agg(F.min("rep").alias("rep"))
-    assign_str = assignments_to_index(uniq, id_map, index_col, component_col)
-    joined = df.join(assign_str, index_col, "left")
-    kept = joined.filter(
-        F.col(component_col).isNull()
-        | (F.col(component_col) == F.col(index_col))
+    """The keep-rule over a cluster table: a row survives iff it is its own
+    cluster id — isolated rows and representatives. Null-safe, so a row whose
+    index is null (and so is its component) survives, as an isolated row."""
+    return clusters.where(F.col(component_col).eqNullSafe(F.col(index_col))).drop(
+        component_col
     )
-    return kept if keep_component else kept.drop(component_col)

@@ -42,7 +42,7 @@ from daft_minhash_dedupe_spark.operators.edges import (
     build_edges_from_buckets,
     build_pair_edges_from_buckets,
 )
-from daft_minhash_dedupe_spark.operators.merge import cluster_assignments, merge_results
+from daft_minhash_dedupe_spark.operators.merge import cluster_table, survivors
 from daft_minhash_dedupe_spark.operators.verify import verify_pairs_exact_jaccard
 
 
@@ -125,43 +125,44 @@ class MinHashDedupePipeline:
             white_space=c.white_space,
         )
 
-    def signatures(self, df: DataFrame) -> DataFrame:
-        """(index, node_id, shingles, min_hashes) — reference :218-239.
+    def shingles(self, norm: DataFrame) -> DataFrame:
+        """(node_id, shingles) — distinct shingle hashes, pure Catalyst.
 
-        Shingle hashing is pure Catalyst; the permutation kernel is either
-        the Arrow pandas-UDF (reference-parity default) or the pure-codegen
-        xxhash64 family (cfg.minhash_kernel — see functions/minhash.py)."""
-        c = self.cfg
-        shingled = add_shingles(
-            df, "content_normalized", c.ngram_size, "shingles"
-        ).select(c.index_col, "node_id", "shingles")
-        out = self._attach_signatures(shingled)
-        # the shingle arrays (~ngram_size × tokens × 8B/row) are only needed
-        # downstream by exact-Jaccard verification — don't checkpoint them
-        # otherwise (column pruning at the stage boundary)
-        if not c.verify_pairs:
-            out = out.drop("shingles")
-        return out
+        Lazily materialized: the signature kernel must read the shingle
+        arrays as a bound column. Feeding the pandas-UDF kernel an expensive
+        unmaterialized projection (or the NFD pandas UDF upstream of it)
+        measured 6–8× slower — the JVM re-buffers/spills the full input rows
+        around the Python exchange."""
+        return (
+            add_shingles(norm, "content_normalized", self.cfg.ngram_size, "shingles")
+            .select("node_id", "shingles")
+            .localCheckpoint(eager=False)
+        )
 
     def _attach_signatures(self, shingled: DataFrame) -> DataFrame:
-        """Add ``min_hashes`` to a (…, node_id, shingles) frame via the
-        configured kernel. The JVM kernel aggregates (node_id → signature)
-        and joins back only when other columns must survive."""
+        """(node_id, min_hashes) of a (node_id, shingles) frame via the
+        configured kernel — the Arrow pandas-UDF (reference-parity default)
+        or the pure-codegen families (cfg.minhash_kernel, see
+        functions/minhash.py). The shingle arrays (~ngram_size × tokens ×
+        8B/row) are kept only for exact-Jaccard verification."""
         c = self.cfg
         if c.minhash_kernel == "jvm":
             sig = minhash_signature_jvm(
                 shingled, "shingles", c.num_perm, c.seed, id_col="node_id"
             )
-            extra = [f for f in shingled.columns if f != "node_id"]
-            if not extra or extra == ["shingles"] and not c.verify_pairs:
-                return sig
-            return shingled.join(sig, "node_id")
+            return shingled.join(sig, "node_id") if c.verify_pairs else sig
         kernel = (
             minhash_signature_oph if c.minhash_kernel == "oph" else minhash_signature
         )
-        return shingled.withColumn(
+        out = shingled.withColumn(
             "min_hashes", kernel(F.col("shingles"), c.num_perm, c.seed)
         )
+        return out if c.verify_pairs else out.drop("shingles")
+
+    def signatures(self, norm: DataFrame) -> DataFrame:
+        """(node_id, min_hashes) — reference :218-239; plus ``shingles`` when
+        verifying pairs."""
+        return self._attach_signatures(self.shingles(norm))
 
     def bands(self, df: DataFrame) -> DataFrame:
         # band_idx is already folded into band_key (functions/hashing.py:36-44)
@@ -186,10 +187,26 @@ class MinHashDedupePipeline:
             edges = build_edges_from_buckets(buckets, num_salts=c.num_salts)
         return edges
 
+    def merge(
+        self, prepped: DataFrame, assignments: DataFrame, id_map: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """(clusters, survivors): the cluster table, lazily materialized so
+        that every sink reads it once, and the keep-rule survivors derived
+        from it (reference :616-647)."""
+        c = self.cfg
+        clusters = cluster_table(
+            prepped.select(c.index_col, c.content_col, "node_id"),
+            assignments,
+            id_map,
+            index_col=c.index_col,
+            component_col=c.component_col,
+        ).localCheckpoint(eager=False)
+        return clusters, survivors(clusters, c.index_col, c.component_col)
+
     # -- orchestration -----------------------------------------------------
 
     def run(self, df: DataFrame, checkpointer: StageCheckpointer | None = None) -> dict:
-        """Execute all stages; returns dict with results/assignments/id_map.
+        """Execute all stages; returns dict with results/clusters/assignments/id_map.
 
         ``checkpointer`` enables per-stage resume (north rule); without one,
         stage boundaries fall back to localCheckpoint (lineage severing only).
@@ -221,20 +238,8 @@ class MinHashDedupePipeline:
                 "node_id", "content_normalized"
             ),
         )
-        # materialize the shingle arrays BEFORE the pandas-UDF kernel: feeding
-        # the ArrowEvalPython node an expensive unmaterialized projection
-        # measured ~8× slower than a bound column (the JVM re-buffers/spills
-        # the full input rows around the Python exchange)
-        shingled = ck.iter_checkpoint(
-            add_shingles(
-                norm.repartition(par), "content_normalized", c.ngram_size, "shingles"
-            ).select("node_id", "shingles"),
-            "shingled",
-        )
-        sigs_df = self._attach_signatures(shingled)
-        if not c.verify_pairs:
-            sigs_df = sigs_df.drop("shingles") if "shingles" in sigs_df.columns else sigs_df
-        sigs = ck.stage("signatures", sigs_df)
+        shingled = self.shingles(norm.repartition(par))
+        sigs = ck.stage("signatures", self._attach_signatures(shingled))
         buckets = ck.stage("bands", self.bands(sigs))
         edges = ck.stage("pairs", self.candidate_edges(buckets, sigs))
         assignments = ck.stage(
@@ -247,20 +252,7 @@ class MinHashDedupePipeline:
                 driver_fallback_edges=c.cc_driver_fallback_edges,
             ),
         )
-        results = merge_results(
-            prepped.select(c.index_col, c.content_col),
-            assignments,
-            id_map,
-            index_col=c.index_col,
-            component_col=c.component_col,
-        )
-        clusters = cluster_assignments(
-            prepped.select(c.index_col, c.content_col),
-            assignments,
-            id_map,
-            index_col=c.index_col,
-            component_col=c.component_col,
-        )
+        clusters, results = self.merge(prepped, assignments, id_map)
         ck.flush_metrics_table()
         return {
             "results": results,

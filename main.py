@@ -173,8 +173,9 @@ def run_incremental(spark, args, df, cfg) -> None:
         new_bands.select("band_key", "node"),
         prior_bands,
         prior_assigns,
-        algorithm="hash_to_min" if cfg.algorithm == "hash_to_min" else cfg.algorithm,
+        algorithm=cfg.algorithm,
         edges_checkpoint_dir=f"{args.output}/_work",
+        driver_fallback_edges=cfg.cc_driver_fallback_edges,
     )
     # the batch's cluster rows need only this batch's labels + re-labels
     delta = new_assign.unionByName(old_updates).localCheckpoint(eager=True)
@@ -296,12 +297,16 @@ def main() -> None:
         )
 
     rows_before = df.count()
+    rows_after = res["results"].count()
     partitioned_save(
-        res["results"], f"{args.output}/survivors", args.chunk_size, args.max_partitions
+        res["results"],
+        f"{args.output}/survivors",
+        args.chunk_size,
+        args.max_partitions,
+        total_rows=rows_after,
     )
     # cluster_id write-back (north rule): every row with its cluster id
     write_table(res["clusters"], f"{args.output}/clusters")
-    rows_after = res["results"].count()
     dt = time.time() - t0
     print("─" * 70)
     print(f"rows before:  {rows_before}")

@@ -72,10 +72,18 @@ def test_e2e_cluster_parity_with_python_oracle(spark):
     assert oracle.partition_sets(assigns) == oracle.partition_sets(want)
 
 
-def test_e2e_planted_recall_and_near_miss(spark):
+@pytest.mark.parametrize("kernel", ["arrow", "jvm"])
+def test_e2e_planted_recall_and_near_miss(spark, kernel):
+    """Verified run; the jvm kernel joins its signatures back onto the
+    shingles the verification needs."""
     df, truth = generate_web_pages(spark, n_rows=300, seed=11)
     prepped = prepare_web_pages(df)
-    cfg = DedupeConfig(index_col="block_id", content_col="block_text", verify_pairs=True)
+    cfg = DedupeConfig(
+        index_col="block_id",
+        content_col="block_text",
+        verify_pairs=True,
+        minhash_kernel=kernel,
+    )
     res = MinHashDedupePipeline(cfg).run(prepped)
 
     comp = {
