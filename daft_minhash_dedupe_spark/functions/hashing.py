@@ -8,9 +8,7 @@ per-stage checkpoint/resume sound.
 
 Collision note (10^12-doc scale): a single 64-bit id space gives ~27k expected
 colliding url pairs at 10^12 docs. For this engine a collision can only merge
-two documents into one cluster (never lose rows); callers that need stronger
-guarantees can switch to ``doc_id128`` (two-long composite) at the cost of
-wider shuffles.
+two documents into one cluster (never lose rows).
 """
 
 from __future__ import annotations
@@ -22,15 +20,6 @@ from pyspark.sql import functions as F
 def doc_id_from_url(url: Column) -> Column:
     """Deterministic 64-bit node id: ``xxhash64(url)``."""
     return F.xxhash64(url)
-
-
-def doc_id128(url: Column) -> Column:
-    """Composite 128-bit id as struct<hi:bigint,lo:bigint> for collision-free
-    operation beyond ~10^11 documents."""
-    return F.struct(
-        F.xxhash64(url).alias("hi"),
-        F.xxhash64(url, F.lit(1)).alias("lo"),
-    )
 
 
 def band_key(band_idx: Column, band: Column) -> Column:

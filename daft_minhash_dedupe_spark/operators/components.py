@@ -154,7 +154,8 @@ def global_min_label_propagation(
 ) -> DataFrame:
     """Diffuse the global minimum label over the undirected graph to a unique
     fixed point (reference :429-505). Per-iteration: one join + one min-agg +
-    one join; labels checkpointed each round to sever lineage."""
+    one join; labels checkpointed each round to sever lineage. Raises when
+    ``max_iters`` runs out first: a longer chain would come back split."""
     sym = checkpoint(symmetrize(edges), "lp_edges")
     labels = checkpoint(
         assignments.select("u", F.col("rep").alias("label")), "lp_labels_0"
@@ -180,6 +181,11 @@ def global_min_label_propagation(
         if next_sum == prev_sum:
             break
         prev_sum = next_sum
+    else:
+        raise RuntimeError(
+            f"label propagation did not converge within max_loops={max_iters}; "
+            "raise max_loops or use a star algorithm (two_phase, alternating)"
+        )
     return labels.select("u", F.col("label").alias("rep"))
 
 

@@ -35,14 +35,16 @@ from daft_minhash_dedupe_spark.functions.normalize import (
     normalize_dataframe,
     normalize_text,
 )
-from daft_minhash_dedupe_spark.io import StageCheckpointer
+from daft_minhash_dedupe_spark.io import StageCheckpointer, write_table
 from daft_minhash_dedupe_spark.operators.banding import lsh_band_buckets
 from daft_minhash_dedupe_spark.operators.components import connected_components
 from daft_minhash_dedupe_spark.operators.edges import (
     build_edges_from_buckets,
     build_pair_edges_from_buckets,
 )
+from daft_minhash_dedupe_spark.operators.incremental import incremental_assignments
 from daft_minhash_dedupe_spark.operators.merge import cluster_table, survivors
+from daft_minhash_dedupe_spark.operators.state import IncrementalState
 from daft_minhash_dedupe_spark.operators.verify import verify_pairs_exact_jaccard
 
 
@@ -266,6 +268,52 @@ class MinHashDedupePipeline:
             "bands": buckets,
             "shingled": shingled,
             "signatures": sigs,
+        }
+
+    def batch_bands(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(prepped, bands) of one batch without run()'s stage checkpoints,
+        both lazily materialized."""
+        prepped = self.prep(df).localCheckpoint(eager=False)
+        bands = self.bands(self.signatures(self.normalize(prepped)))
+        return prepped, bands.localCheckpoint(eager=False)
+
+    def fold(self, df: DataFrame, state: IncrementalState, out_dir: str) -> dict:
+        """Fold one batch into ``state`` (operators/incremental.py): write the
+        batch's cluster rows to ``out_dir/clusters``, then append its bands
+        and assignment delta to ``state`` — last, so a failed write leaves
+        the state untouched. ``delta`` rows carry ``relabel``: False for the
+        batch's own labels, True for re-labelled old rows."""
+        c = self.cfg
+        state.validate_config(c)
+        prepped, bands = self.batch_bands(df)
+        new_assign, old_updates = incremental_assignments(
+            bands,
+            state.read_bands(),
+            state.read_assignments(),
+            algorithm=c.algorithm,
+            num_salts=c.num_salts,
+            edges_checkpoint_dir=f"{out_dir}/_work",
+            driver_fallback_edges=c.cc_driver_fallback_edges,
+        )
+        delta = (
+            new_assign.withColumn("relabel", F.lit(False))
+            .unionByName(old_updates.withColumn("relabel", F.lit(True)))
+            .localCheckpoint(eager=True)
+        )
+        labels = delta.where(~F.col("relabel")).withColumnRenamed("u", "node_id")
+        write_table(
+            prepped.join(labels, "node_id", "left").select(
+                c.index_col, F.coalesce("rep", "node_id").alias(c.component_col)
+            ),
+            f"{out_dir}/clusters",
+        )
+        return {
+            "batch_id": state.append(bands, delta),
+            "prepped": prepped,
+            "bands": bands,
+            "delta": delta,
+            "new_assign": new_assign,
+            "old_updates": old_updates,
         }
 
     def __call__(self, df: DataFrame) -> DataFrame:

@@ -107,8 +107,7 @@ class StreamingNearDedupe:
             F.col(self.id_col).alias(c.index_col),
             F.col(self.text_col).alias(c.content_col),
         )
-        prepped = pipe.prep(pipe_in).localCheckpoint(eager=False)
-        bands = pipe.bands(pipe.signatures(pipe.normalize(prepped)))
+        prepped, bands = pipe.batch_bands(pipe_in)
         meta = batch.select(
             F.col(self.id_col), F.col(self.ts_col).alias("_ts")
         ).join(
@@ -117,7 +116,7 @@ class StreamingNearDedupe:
             ),
             self.id_col,
         )
-        return bands.select("band_key", "node").join(
+        return bands.join(
             meta.withColumnRenamed("node_id", "node"), "node"
         )
 

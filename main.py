@@ -113,32 +113,24 @@ def parse_args():
     return args
 
 
-def run_incremental(spark, args, df, cfg) -> None:
+def run_incremental(spark, args, df, cfg, t0) -> None:
     """Fold the input batch into the prior corpus state; write the new
     batch's cluster rows plus an O(batch) state increment (append-only band
     partition + assignment delta — never a rewrite of the corpus tables)."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from daft_minhash_dedupe_spark.operators.incremental import incremental_assignments
     from daft_minhash_dedupe_spark.operators.state import (
         IncrementalState,
         meta_from_config,
     )
-    from daft_minhash_dedupe_spark.io import write_table
     from daft_minhash_dedupe_spark.pipeline import MinHashDedupePipeline
 
-    t0 = time.time()
-    prior = IncrementalState(spark, args.prior_checkpoint, n_buckets=args.state_buckets)
-    if prior.is_state_root():
-        # append IN PLACE: only a new batch_id partition is ever written, so
-        # pointing --prior-checkpoint at a previous run's state (including
-        # one under this run's own --output) can never truncate files a
-        # lazy plan is still reading
-        state = prior
-        state.validate_config(cfg)
-    else:
+    state = IncrementalState(spark, args.prior_checkpoint, n_buckets=args.state_buckets)
+    # a state root is appended IN PLACE: only a new batch_id partition is
+    # ever written, so pointing --prior-checkpoint at a previous run's state
+    # (including one under this run's own --output) can never truncate files
+    # a lazy plan is still reading
+    if not state.is_state_root():
         # legacy full-run checkpoint dir: one-time O(corpus) bootstrap of a
         # fresh append-only state root at <output>/state
         state_root = f"{args.output}/state"
@@ -147,57 +139,21 @@ def run_incremental(spark, args, df, cfg) -> None:
                 "refusing to bootstrap incremental state over the prior "
                 "checkpoint itself — pick a different --output"
             )
+        state.validate_config(cfg)  # the full run's _META.json, if any
         state = IncrementalState(spark, state_root, n_buckets=args.state_buckets)
-        state.validate_config(cfg)  # verify_pairs guard
-        legacy_meta_path = f"{args.prior_checkpoint}/_META.json"
-        if os.path.exists(legacy_meta_path):
-            legacy = IncrementalState(spark, args.prior_checkpoint)
-            legacy.validate_config(cfg)
         state.bootstrap(
-            spark.read.parquet(f"{args.prior_checkpoint}/bands").select(
-                "band_key", "node"
-            ),
-            spark.read.parquet(f"{args.prior_checkpoint}/components").select("u", "rep"),
+            spark.read.parquet(f"{args.prior_checkpoint}/bands"),
+            spark.read.parquet(f"{args.prior_checkpoint}/components"),
             meta_from_config(cfg),
         )
 
-    prior_bands = state.read_bands()
-    prior_assigns = state.read_assignments()
-
-    pipe = MinHashDedupePipeline(cfg)
-    prepped = pipe.prep(df).localCheckpoint(eager=False)
-    new_bands = pipe.bands(pipe.signatures(pipe.normalize(prepped))).localCheckpoint(
-        eager=False
-    )
-    new_assign, old_updates = incremental_assignments(
-        new_bands.select("band_key", "node"),
-        prior_bands,
-        prior_assigns,
-        algorithm=cfg.algorithm,
-        edges_checkpoint_dir=f"{args.output}/_work",
-        driver_fallback_edges=cfg.cc_driver_fallback_edges,
-    )
-    # the batch's cluster rows need only this batch's labels + re-labels
-    delta = new_assign.unionByName(old_updates).localCheckpoint(eager=True)
-    clusters_new = (
-        prepped.select(cfg.index_col, "node_id")
-        .join(
-            new_assign.withColumnRenamed("u", "node_id"), "node_id", "left"
-        )
-        .select(
-            cfg.index_col,
-            F.coalesce("rep", "node_id").alias(cfg.component_col),
-        )
-    )
-    write_table(clusters_new, f"{args.output}/clusters")
-    batch_id = state.append(new_bands.select("band_key", "node"), delta)
-    n_new = df.count()
-    n_joined = new_assign.count()
-    n_relabel = old_updates.count()
+    res = MinHashDedupePipeline(cfg).fold(df, state, args.output)
+    n_new = res["prepped"].count()
+    n_rows = dict(res["delta"].groupBy("relabel").count().collect())
     dt = time.time() - t0
     print("─" * 70)
-    print(f"incremental:  {n_new} new docs folded as batch {batch_id} of {state.root}")
-    print(f"joined:       {n_joined} new rows entered clusters; {n_relabel} old rows re-labeled")
+    print(f"incremental:  {n_new} new docs folded as batch {res['batch_id']} of {state.root}")
+    print(f"joined:       {n_rows.get(False, 0)} new rows entered clusters; {n_rows.get(True, 0)} old rows re-labeled")
     print(f"wall time:    {dt:.2f}s  ({n_new / dt:.0f} docs/s)")
     print(f"output:       {args.output}  (next increment: --prior-checkpoint {state.root})")
     print("─" * 70)
@@ -274,7 +230,7 @@ def main() -> None:
         minhash_kernel=args.minhash_kernel,
     )
     if args.prior_checkpoint:
-        run_incremental(spark, args, df, cfg)
+        run_incremental(spark, args, df, cfg, t0)
         return
 
     if args.tier_set != {"minhash"}:

@@ -71,6 +71,18 @@ def test_cc_chain_reaches_global_min(spark, algorithm):
     assert set(got) == set(range(1, 31))
 
 
+def test_cc_chain_beyond_max_loops_raises_not_splits(spark):
+    # hash_to_min needs ~diameter iterations; running out of max_loops must
+    # fail loudly rather than return the chain split into many components
+    chain = _edges(spark, [(i, i + 1) for i in range(1, 30)])
+    with pytest.raises(RuntimeError, match="max_loops=5.*two_phase"):
+        connected_components(chain, algorithm="hash_to_min", max_loops=5).collect()
+    # star contraction shrinks the diameter, so the same budget suffices
+    got = _assign(connected_components(chain, algorithm="two_phase", max_loops=5))
+    assert set(got) == set(range(1, 31))
+    assert set(got.values()) == {1}
+
+
 def test_label_propagation_drives_to_global_min(spark):
     # reference pin (tests:371-376)
     e = _edges(spark, [(1, 2), (2, 3), (3, 4)])

@@ -150,17 +150,27 @@ def test_state_chain_equals_full_run(spark, tmp_path, n_buckets):
     root = str(tmp_path / f"state_{n_buckets}")
     state = IncrementalState(spark, root, n_buckets=n_buckets)
     _, a_bands, a_assigns = _stages(pipe, a)
-    state.bootstrap(a_bands.select("band_key", "node"), a_assigns, meta_from_config(cfg))
+    state.bootstrap(a_bands, a_assigns, meta_from_config(cfg))
 
-    for batch in (b, c):
-        _, bands, _ = _stages(pipe, batch)
-        new_assign, old_updates = incremental_assignments(
-            bands.select("band_key", "node"),
-            state.read_bands(),
-            state.read_assignments(),
-        )
-        delta = new_assign.unionByName(old_updates).localCheckpoint(eager=True)
-        state.append(bands.select("band_key", "node"), delta)
+    node_of = {r[cfg.index_col]: r["node_id"] for r in pipe.prep(pages).collect()}
+    _, _, ab_assigns = _stages(pipe, a.unionByName(b))
+    prefix_full = (
+        {r["u"]: r["rep"] for r in ab_assigns.collect()},  # after folding b
+        full,  # after folding c
+    )
+    for k, (batch, want) in enumerate(zip((b, c), prefix_full), start=1):
+        out = str(tmp_path / f"out_{n_buckets}_{k}")
+        assert pipe.fold(batch, state, out)["batch_id"] == k
+        # the batch's cluster rows: every batch doc once, labelled with the
+        # representative a full run over the corpus folded so far gives it
+        # (its own node_id when unclustered)
+        rows = spark.read.parquet(f"{out}/clusters").collect()
+        got = {r[cfg.index_col]: r[cfg.component_col] for r in rows}
+        assert len(rows) == len(got)
+        assert set(got) == {r[cfg.index_col] for r in batch.collect()}
+        for doc, comp in got.items():
+            n = node_of[doc]
+            assert comp == want.get(n, n), f"doc {doc}"
 
     merged = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
     for n in all_nodes:
@@ -189,18 +199,11 @@ def test_state_append_writes_o_batch_bytes(spark, tmp_path):
     root = str(tmp_path / "state")
     state = IncrementalState(spark, root)
     _, big_bands, big_assigns = _stages(pipe, big)
-    state.bootstrap(big_bands.select("band_key", "node"), big_assigns, meta_from_config(cfg))
+    state.bootstrap(big_bands, big_assigns, meta_from_config(cfg))
     before = _snapshot_files(root)
     corpus_bytes = sum(s for s, _ in before.values())
 
-    _, s_bands, _ = _stages(pipe, small)
-    new_assign, old_updates = incremental_assignments(
-        s_bands.select("band_key", "node"), state.read_bands(), state.read_assignments()
-    )
-    state.append(
-        s_bands.select("band_key", "node"),
-        new_assign.unionByName(old_updates).localCheckpoint(eager=True),
-    )
+    pipe.fold(small, state, str(tmp_path / "out"))
 
     after = _snapshot_files(root)
     for path, sig in before.items():
@@ -224,7 +227,7 @@ def test_state_meta_guards(spark, tmp_path):
 
     root = str(tmp_path / "state")
     state = IncrementalState(spark, root)
-    state.bootstrap(bands.select("band_key", "node"), assigns, meta_from_config(cfg))
+    state.bootstrap(bands, assigns, meta_from_config(cfg))
 
     # current config wants verification -> refuse regardless of state
     with pytest.raises(ValueError, match="verify_pairs"):
@@ -244,10 +247,7 @@ def test_state_meta_guards(spark, tmp_path):
     # state persisted by a verified run -> always refused
     vroot = str(tmp_path / "vstate")
     vstate = IncrementalState(spark, vroot)
-    vstate.bootstrap(
-        bands.select("band_key", "node"), assigns,
-        meta_from_config(DedupeConfig(verify_pairs=True)),
-    )
+    vstate.bootstrap(bands, assigns, meta_from_config(DedupeConfig(verify_pairs=True)))
     with pytest.raises(ValueError, match="verify_pairs"):
         vstate.validate_config(DedupeConfig())
 
@@ -260,14 +260,9 @@ def test_state_compact(spark, tmp_path):
     pipe = MinHashDedupePipeline(cfg)
     state = IncrementalState(spark, str(tmp_path / "state"))
     _, a_bands, a_assigns = _stages(pipe, a)
-    state.bootstrap(a_bands.select("band_key", "node"), a_assigns, meta_from_config(cfg))
-    for batch in (b, c):
-        _, bands, _ = _stages(pipe, batch)
-        na, ou = incremental_assignments(
-            bands.select("band_key", "node"), state.read_bands(), state.read_assignments()
-        )
-        state.append(bands.select("band_key", "node"),
-                     na.unionByName(ou).localCheckpoint(eager=True))
+    state.bootstrap(a_bands, a_assigns, meta_from_config(cfg))
+    for k, batch in enumerate((b, c)):
+        pipe.fold(batch, state, str(tmp_path / f"out_{k}"))
 
     compacted = state.compact(str(tmp_path / "state2"))
     assert compacted.batch_ids() == [0]
@@ -276,6 +271,35 @@ def test_state_compact(spark, tmp_path):
     assert got == want
     assert state.read_bands().count() == compacted.read_bands().count()
     compacted.validate_config(cfg)
+
+
+def test_fold_empty_batch(spark, tmp_path):
+    """A zero-row batch folds to an empty increment: it takes the next
+    batch_id and leaves the folded state as it was; a later non-empty fold
+    still equals a full run."""
+    raw, _ = generate_web_pages(spark, n_rows=150, seed=11)
+    pages = prepare_web_pages(raw).localCheckpoint(eager=True)
+    a, b, _ = _split3(pages)
+    cfg = DedupeConfig()
+    pipe = MinHashDedupePipeline(cfg)
+    state = IncrementalState(spark, str(tmp_path / "state"))
+    _, a_bands, a_assigns = _stages(pipe, a)
+    state.bootstrap(a_bands, a_assigns, meta_from_config(cfg))
+    assigns_before = {(r["u"], r["rep"]) for r in state.read_assignments().collect()}
+    n_bands = state.read_bands().count()
+
+    out = str(tmp_path / "out_empty")
+    assert pipe.fold(pages.where(F.lit(False)), state, out)["batch_id"] == 1
+    assert {(r["u"], r["rep"]) for r in state.read_assignments().collect()} == assigns_before
+    assert state.read_bands().count() == n_bands
+    assert spark.read.parquet(f"{out}/clusters").count() == 0
+
+    assert pipe.fold(b, state, str(tmp_path / "out_b"))["batch_id"] == 2
+    nodes, _, full_assigns = _stages(pipe, a.unionByName(b))
+    full = {r["u"]: r["rep"] for r in full_assigns.collect()}
+    merged = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
+    for n in nodes:
+        assert merged.get(n, n) == full.get(n, n), f"node {n}"
 
 
 def test_legacy_meta_without_backend_reads_plain(spark, tmp_path):
