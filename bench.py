@@ -105,7 +105,6 @@ def run_flagship(
     min_tokens: int = 80,
     max_tokens: int = 400,
     dup_rate: float = 0.0,
-    kernel: str = "arrow",
 ) -> tuple[float, int]:
     """Dedup the deterministic synthetic web corpus; returns (sec, rows_in).
 
@@ -127,7 +126,7 @@ def run_flagship(
     ).localCheckpoint(eager=True)
     rows_in = df.count()
     t0 = time.time()
-    res = MinHashDedupePipeline(DedupeConfig(minhash_kernel=kernel)).run(df)
+    res = MinHashDedupePipeline(DedupeConfig()).run(df)
     res["results"].write.format("noop").mode("overwrite").save()
     return time.time() - t0, rows_in
 
@@ -139,7 +138,6 @@ def run_tiered(
     min_tokens: int = 80,
     max_tokens: int = 400,
     dup_rate: float = 0.0,
-    kernel: str = "arrow",
 ) -> tuple[float, int]:
     """Tiered cascade (exact tier0/1b + minhash; no line tier — the synthetic
     corpus is single-line) on the same corpus run_flagship uses. The corpus
@@ -168,7 +166,6 @@ def run_tiered(
         id_col="block_id",
         text_col="block_text",
         line_min_dup_docs=None,
-        minhash_overrides={"minhash_kernel": kernel},
         collect_metrics=False,
     )
     res["survivors"].write.format("noop").mode("overwrite").save()
@@ -577,11 +574,9 @@ def run_bloom(
     }
 
 
-def run_recall(spark, n_docs: int = 5000, seed: int = 11, kernel: str = "arrow") -> dict:
+def run_recall(spark, n_docs: int = 5000, seed: int = 11) -> dict:
     """Dup-pair recall vs planted ground truth + near-miss precision +
-    cluster parity vs the pure-Python oracle (BASELINE.md criteria).
-    Non-arrow kernels report recall/near-miss only (the exact-partition
-    oracle parity is defined for the universal-hash family)."""
+    cluster parity vs the pure-Python oracle (BASELINE.md criteria)."""
     from daft_minhash_dedupe_spark import oracle
     from daft_minhash_dedupe_spark.config import DedupeConfig
     from daft_minhash_dedupe_spark.pipeline import MinHashDedupePipeline, prepare_web_pages
@@ -592,7 +587,6 @@ def run_recall(spark, n_docs: int = 5000, seed: int = 11, kernel: str = "arrow")
         index_col="block_id",
         content_col="block_text",
         verify_pairs=True,
-        minhash_kernel=kernel,
     )
     res = MinHashDedupePipeline(cfg).run(prepare_web_pages(df))
     comp = {
@@ -604,13 +598,10 @@ def run_recall(spark, n_docs: int = 5000, seed: int = 11, kernel: str = "arrow")
     near_wrong = sum(1 for a, b in truth["near_miss_pairs"] if comp[a] == comp[b])
     out = {
         "docs": n_docs,
-        "kernel": kernel,
         "planted_dup_pairs": len(dup),
         "dup_pair_recall": round(found / len(dup), 5) if dup else 1.0,
         "near_miss_pairs_merged": near_wrong,
     }
-    if kernel != "arrow":
-        return out
     # oracle parity: same clusters as the independent python reimplementation
     assigns = {r["u"]: r["rep"] for r in res["assignments"].collect()}
     id_of = {r["block_id"]: r["node_id"] for r in res["id_map"].collect()}
@@ -713,15 +704,6 @@ def main() -> None:
         "noise, which on this sandbox drifts ~10-15%% over a session",
     )
     ap.add_argument(
-        "--kernel",
-        choices=["arrow", "jvm", "oph"],
-        default="arrow",
-        help="--flagship-only/--scaling/--tiered: signature kernel — 'arrow' (reference-parity "
-        "pandas/Arrow UDF, default) or 'jvm' (pure whole-stage-codegen "
-        "xxhash64 family, no Python worker in the stage) or 'oph' "
-        "(one-permutation hashing + optimal densification)",
-    )
-    ap.add_argument(
         "--flagship-repeats",
         type=int,
         default=2,
@@ -744,7 +726,6 @@ def main() -> None:
                 min_tokens=args.min_tokens,
                 max_tokens=args.max_tokens,
                 dup_rate=args.dup_rate,
-                kernel=args.kernel,
             )
             runs.append(round(sec, 2))
             spark.stop()
@@ -771,7 +752,7 @@ def main() -> None:
 
     if args.recall:
         spark = _fresh_spark(CPUS)
-        print(json.dumps(run_recall(spark, min(args.docs, 5000), kernel=args.kernel)))
+        print(json.dumps(run_recall(spark, min(args.docs, 5000))))
         spark.stop()
         return
 
@@ -791,7 +772,6 @@ def main() -> None:
                     min_tokens=args.min_tokens,
                     max_tokens=args.max_tokens,
                     dup_rate=args.dup_rate,
-                    kernel=args.kernel,
                 )
                 runs[arm].append(round(sec, 2))
                 spark.stop()
@@ -881,7 +861,6 @@ def main() -> None:
                 min_tokens=args.min_tokens,
                 max_tokens=args.max_tokens,
                 dup_rate=args.dup_rate,
-                kernel=args.kernel,
             )
             all_runs[n].append(
                 {

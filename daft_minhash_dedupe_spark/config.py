@@ -93,17 +93,6 @@ class DedupeConfig:
     # :740) — prefer for pathological high-diameter edge sets.
     algorithm: str = "hash_to_min"
     max_loops: int = 100
-    # Signature kernel: "arrow" = the reference-parity vectorized pandas/Arrow
-    # UDF (universal-hash family, the north rule's named approach; default);
-    # "jvm" = pure whole-stage-codegen xxhash64 re-mix family (no Python
-    # worker in the stage — explode + map-side-partial min aggregation; see
-    # functions/minhash.py:minhash_signature_jvm); "oph" = one-permutation
-    # hashing + optimal densification (Li et al. 2012 / Shrivastava 2017 —
-    # ONE hash per shingle instead of num_perm, same Arrow-UDF stage shape;
-    # estimator variance rises for docs much shorter than num_perm shingles).
-    # Different hash families ⇒ bit-different signatures, statistically
-    # identical LSH behavior (planted-pair recall pinned by test for each).
-    minhash_kernel: str = "arrow"
     # North-star addition (not in reference): exact-Jaccard verification of
     # LSH candidate pairs before clustering. Verified paths generate pairwise
     # within-bucket candidates (capped at pairwise_cap members, star fallback
@@ -136,8 +125,3 @@ class DedupeConfig:
             )
         self.B = b
         self.R = r
-        if self.minhash_kernel not in ("arrow", "jvm", "oph"):
-            raise ValueError(
-                "minhash_kernel must be 'arrow', 'jvm' or 'oph' "
-                f"(got {self.minhash_kernel!r})"
-            )

@@ -199,179 +199,3 @@ def minhash_signature(col: Column, num_perm: int = 64, seed: int = 42) -> Column
         return pd.Series(list(mins))
 
     return _sig(col)
-
-
-# -- pure-JVM kernel (no Python stage) ---------------------------------------
-
-# Empty-document sentinel for the JVM hash family: the max of the family's
-# range (full signed-64 space), playing the role MAX_HASH_32 plays for the
-# 32-bit universal-hash family.
-JVM_EMPTY_SENTINEL = (1 << 63) - 1
-
-
-def minhash_signature_jvm(
-    df,
-    shingle_col: str = "shingles",
-    num_perm: int = 64,
-    seed: int = 42,
-    id_col: str = "node_id",
-    out_col: str = "min_hashes",
-):
-    """Whole-stage-codegen MinHash: NO Python worker anywhere in the stage.
-
-    ``sig_j = min over shingles h of xxhash64(h, j, seed)`` — the j-th
-    permutation is Spark's built-in xxhash64 re-mix of the shingle hash with
-    the permutation index and seed folded in (multi-column xxhash64 chains
-    the running hash through each operand, so each j yields an independent
-    well-mixed draw). A DIFFERENT hash family than the Arrow kernel's
-    universal ``(a·h+b) mod p`` — same MinHash estimator properties (the
-    probability two shingle sets share their minimum under a uniform hash is
-    their Jaccard similarity), so LSH banding and clustering behave
-    identically in distribution; planted-pair recall is pinned by test.
-
-    Physical shape: ``explode(shingles)`` → one HashAggregate keyed by
-    ``id_col`` with ``num_perm`` ``min(xxhash64(...))`` columns. Explode,
-    hash, and min all run inside whole-stage codegen with map-side partial
-    aggregation, so each map task emits ONE 8·num_perm-byte row per document
-    into the shuffle — the same volume the signature stage materializes
-    anyway. Compared to the Arrow kernel this trades the Python exchange
-    (two Arrow serialization hops + worker processes) for one doc-keyed
-    shuffle; at web scale the shuffle is the cheaper side, and the stage
-    becomes immune to Python-worker failure modes entirely.
-
-    Documents with zero shingles (empty/whitespace-only text) get the
-    all-``JVM_EMPTY_SENTINEL`` signature, mirroring the Arrow kernel's
-    all-``MAX_HASH_32`` convention.
-
-    Input df must carry (id_col, shingle_col); returns (id_col, out_col) —
-    one row per DISTINCT id (explode_outer keeps empty docs). ``id_col``
-    must be a per-row unique key: rows sharing an id collapse into one
-    signature over the UNION of their shingle sets (a groupBy, unlike the
-    Arrow kernel's per-row map). The pipeline satisfies this by
-    construction — node_id is the xxhash64 of the unique block key — but
-    direct callers with duplicate ids get merged signatures, not per-row
-    ones.
-    """
-    sh = F.explode_outer(F.col(shingle_col)).alias("__sh")
-    exploded = df.select(id_col, sh)
-    # null __sh marks an empty shingle array: excluded from every min via the
-    # when(), leaving NULL aggregates that coalesce to the sentinel below
-    mins = [
-        F.min(
-            F.when(
-                F.col("__sh").isNotNull(),
-                F.xxhash64(F.col("__sh"), F.lit(j), F.lit(seed)),
-            )
-        ).alias(f"__m{j}")
-        for j in range(num_perm)
-    ]
-    agg = exploded.groupBy(id_col).agg(*mins)
-    sig = F.array(
-        *[F.coalesce(F.col(f"__m{j}"), F.lit(JVM_EMPTY_SENTINEL)) for j in range(num_perm)]
-    ).alias(out_col)
-    return agg.select(id_col, sig)
-
-
-# -- one-permutation hashing kernel (OPH + optimal densification) ------------
-
-# splitmix64 constants (public domain, Steele et al. / Vigna)
-_SM_C1 = np.uint64(0xBF58476D1CE4E5B9)
-_SM_C2 = np.uint64(0x94D049BB133111EB)
-_SM_GOLDEN = np.uint64(0x9E3779B97F4A7C15)
-# empty-bin sentinel: strictly above the 32-bit value domain, so detection
-# is exact (a real min can never equal it)
-_OPH_EMPTY = np.uint64(1) << np.uint64(33)
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    """Vectorized splitmix64 finalizer (uint64 wraparound is the intent)."""
-    with np.errstate(over="ignore"):
-        x = x + _SM_GOLDEN
-        x = (x ^ (x >> np.uint64(30))) * _SM_C1
-        x = (x ^ (x >> np.uint64(27))) * _SM_C2
-        return x ^ (x >> np.uint64(31))
-
-
-def _oph_signatures_flat(
-    values: np.ndarray, offsets: np.ndarray, num_perm: int, seed: int
-) -> np.ndarray:
-    """One-permutation MinHash (Li et al., NIPS 2012) with optimal
-    densification (Shrivastava, ICML 2017) on the same flattened batch
-    layout ``_min_signatures_flat`` uses.
-
-    Each shingle is hashed ONCE (splitmix64 remix of its xxhash64, seed
-    folded in) and routed to bin ``u % num_perm``; ``sig[j]`` is the bin
-    minimum — O(total_shingles) work vs the permutation kernel's
-    O(total_shingles × num_perm). Empty bins are filled by probing bins in
-    the order ``h(j, attempt)`` until an ORIGINALLY-occupied bin is hit;
-    the probe sequence depends only on (bin, attempt, seed), so identical
-    shingle sets always densify to identical signatures and the
-    position-collision probability stays an unbiased Jaccard estimator
-    (variance rises as docs get shorter than ~num_perm shingles — see the
-    kernel-choice notes in config.py).
-
-    Values live in [0, 2^32) like the universal-hash family; documents with
-    zero shingles get the all-``MAX_HASH_32`` sentinel signature.
-    """
-    n = len(offsets) - 1
-    lens = np.diff(offsets)
-    seed_mix = _splitmix64(np.uint64(np.uint64(seed) & np.uint64(0xFFFFFFFFFFFFFFFF)))
-    u = _splitmix64(values.astype(np.uint64) ^ seed_mix)
-    bins = u % np.uint64(num_perm)
-    vals = u & np.uint64(MAX_HASH_32)
-    row_of = np.repeat(np.arange(n, dtype=np.int64), lens)
-    flat = row_of * num_perm + bins.astype(np.int64)
-    sig = np.full(n * num_perm, _OPH_EMPTY, dtype=np.uint64)
-    np.minimum.at(sig, flat, vals)
-    sig = sig.reshape(n, num_perm)
-    occupied = sig != _OPH_EMPTY
-    no_shingles = lens == 0
-    rows, cols = np.nonzero(~occupied & ~no_shingles[:, None])
-    t = 0
-    # probe only ORIGINALLY-occupied bins (frozen `occupied`): fills write
-    # exclusively into originally-empty slots, so reading sig[occupied]
-    # during the loop always reads true bin minima, never a densified copy
-    while rows.size:
-        with np.errstate(over="ignore"):
-            probe_key = (
-                cols.astype(np.uint64) * _SM_C1
-                ^ np.uint64(t + 1) * _SM_C2
-                ^ seed_mix
-            )
-        p = (_splitmix64(probe_key) % np.uint64(num_perm)).astype(np.int64)
-        hit = occupied[rows, p]
-        sig[rows[hit], cols[hit]] = sig[rows[hit], p[hit]]
-        rows, cols = rows[~hit], cols[~hit]
-        t += 1
-        if t > 100 * num_perm:  # unreachable with >=1 occupied bin
-            raise AssertionError("OPH densification failed to converge")
-    sig[no_shingles] = np.uint64(MAX_HASH_32)
-    return sig.astype(np.int64)
-
-
-def minhash_signature_oph(col: Column, num_perm: int = 64, seed: int = 42) -> Column:
-    """``array<bigint>`` OPH signature of a distinct-shingle-hash array
-    column — same schema/value-domain/empty-doc convention as
-    ``minhash_signature``, ~num_perm× less hash arithmetic per shingle.
-    A different hash family: bit-different signatures, same estimator in
-    distribution (planted recall pinned by test for the pipeline path).
-    """
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(hashes: pd.Series) -> pd.Series:
-        n = len(hashes)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((len(h) for h in hashes), dtype=np.int64, count=n)
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        if offsets[-1] > 0:
-            values = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h in hashes if len(h)]
-            )
-        else:
-            values = np.empty(0, dtype=np.int64)
-        sigs = _oph_signatures_flat(values, offsets, num_perm, seed)
-        return pd.Series(list(sigs))
-
-    return _sig(col)

@@ -116,8 +116,8 @@ class StageCheckpointer:
     ``stage(name, df)``: if the stage directory is marked complete and resume
     is on → read it back (recompute skipped); else materialize the stage to
     parquet, record (stage, rows, partitions, wall_ms, per-partition rows) in
-    ``metrics.jsonl`` + a ``_metrics`` table, mark complete, and return the
-    re-read DataFrame (lineage severed — every stage boundary is a fresh scan).
+    ``metrics.jsonl``, mark complete, and return the re-read DataFrame
+    (lineage severed — every stage boundary is a fresh scan).
     """
 
     spark: SparkSession
@@ -195,17 +195,3 @@ class StageCheckpointer:
         materializing action. Iteration outputs are transient — only stage
         outputs need resume."""
         return df.localCheckpoint(eager=False)
-
-    def flush_metrics_table(self, target: str | None = None) -> None:
-        """Persist accumulated metrics as a queryable table (Iceberg when
-        available, else parquet under the checkpoint root)."""
-        if not self.metrics or not self.root:
-            return
-        rows = [
-            (m["stage"], m["rows"], m["partitions"], m["wall_ms"], json.dumps(m["partition_rows"]))
-            for m in self.metrics
-        ]
-        df = self.spark.createDataFrame(
-            rows, "stage string, rows long, partitions long, wall_ms long, partition_rows string"
-        )
-        write_table(df, target or str(Path(self.root) / "_metrics"))

@@ -112,6 +112,9 @@ def incremental_assignments(
     path = f"{edges_checkpoint_dir}/incremental_edges"
     nn_edges.unionByName(no_edges).write.mode("overwrite").parquet(path)
     edges = new_bands.sparkSession.read.parquet(path)
+    # nothing returned reads new_bands past the edges write: release it, or a
+    # long-lived driver keeps one cached band table per fold
+    new_bands.unpersist()
     assigns = connected_components(
         edges, algorithm=algorithm, driver_fallback_edges=driver_fallback_edges
     )

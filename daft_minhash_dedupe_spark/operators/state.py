@@ -51,10 +51,6 @@ _META = "_META.json"
 _META_KEYS = (
     "num_perm", "ngram_size", "threshold", "seed", "B", "R",
     "remove_punct", "lowercase", "nfd_unicode", "white_space", "verify_pairs",
-    # different signature families (arrow/jvm/oph) produce incomparable band
-    # keys — folding a batch signed with one family into state built with
-    # another silently under-merges (no cross-batch bucket ever matches)
-    "minhash_kernel",
 )
 
 BANDS_COLS = ("band_key", "node")
@@ -201,15 +197,22 @@ class IncrementalState:
                 "run; its cluster assignments are NOT bucket-connectivity "
                 "closures, so an incremental fold against it is unsound."
             )
+        # state may record the signature family that built it; a missing key
+        # means the Arrow kernel, the only one this engine signs with. Band
+        # keys of another family never match ours, so a fold would silently
+        # under-merge.
+        kernel = meta.get("minhash_kernel", "arrow")
+        if kernel != "arrow":
+            raise ValueError(
+                f"prior state at {self.root} was built with "
+                f"minhash_kernel={kernel!r}; this engine signs with the Arrow "
+                "kernel only, so its band keys are not comparable."
+            )
         want = meta_from_config(cfg)
-        # state fingerprinted before the kernel became a _META_KEY was
-        # produced by the original arrow kernel — a missing key means
-        # "arrow", not "accept any kernel" (family mismatch under-merges)
-        stored = {"minhash_kernel": "arrow", **meta}
         mismatched = {
-            k: (stored.get(k), want[k])
+            k: (meta.get(k), want[k])
             for k in _META_KEYS
-            if k in stored and stored[k] != want[k]
+            if k in meta and meta[k] != want[k]
         }
         if mismatched:
             raise ValueError(

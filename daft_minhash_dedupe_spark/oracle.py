@@ -130,47 +130,6 @@ def signature(shingles: list[int], num_perm: int, seed: int) -> np.ndarray:
     return ph.min(axis=0).astype(np.int64)
 
 
-_U64 = (1 << 64) - 1
-
-
-def _splitmix64_py(x: int) -> int:
-    """Pure-int splitmix64 finalizer — the dependency-free mirror of
-    functions/minhash._splitmix64 (same constants, 64-bit wraparound)."""
-    x = (x + 0x9E3779B97F4A7C15) & _U64
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _U64
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _U64
-    return x ^ (x >> 31)
-
-
-def oph_signature(shingles: list[int], num_perm: int, seed: int) -> list[int]:
-    """Row-at-a-time mirror of functions/minhash._oph_signatures_flat:
-    one-permutation hashing + optimal densification, pure Python ints."""
-    if not shingles:
-        return [MAX_HASH_32] * num_perm
-    seed_mix = _splitmix64_py(seed & _U64)
-    sig: list[int | None] = [None] * num_perm
-    for s in shingles:
-        u = _splitmix64_py((s & _U64) ^ seed_mix)
-        j = u % num_perm
-        v = u & MAX_HASH_32
-        if sig[j] is None or v < sig[j]:
-            sig[j] = v
-    occupied = [v is not None for v in sig]
-    out = list(sig)
-    for j in range(num_perm):
-        if occupied[j]:
-            continue
-        t = 1
-        while True:
-            key = ((j * 0xBF58476D1CE4E5B9) ^ (t * 0x94D049BB133111EB) ^ seed_mix) & _U64
-            p = _splitmix64_py(key) % num_perm
-            if occupied[p]:
-                out[j] = sig[p]
-                break
-            t += 1
-    return out
-
-
 def minhash_lsh_clusters(
     docs: dict[int, str], num_perm: int, ngram_size: int, seed: int, B: int, R: int
 ) -> dict[int, int]:

@@ -28,8 +28,6 @@ from daft_minhash_dedupe_spark.functions.hashing import doc_id_from_url
 from daft_minhash_dedupe_spark.functions.minhash import (
     add_shingles,
     minhash_signature,
-    minhash_signature_jvm,
-    minhash_signature_oph,
 )
 from daft_minhash_dedupe_spark.functions.normalize import (
     normalize_dataframe,
@@ -142,22 +140,13 @@ class MinHashDedupePipeline:
         )
 
     def _attach_signatures(self, shingled: DataFrame) -> DataFrame:
-        """(node_id, min_hashes) of a (node_id, shingles) frame via the
-        configured kernel — the Arrow pandas-UDF (reference-parity default)
-        or the pure-codegen families (cfg.minhash_kernel, see
-        functions/minhash.py). The shingle arrays (~ngram_size × tokens ×
-        8B/row) are kept only for exact-Jaccard verification."""
+        """(node_id, min_hashes) of a (node_id, shingles) frame via the Arrow
+        pandas-UDF kernel (functions/minhash.py). The shingle arrays
+        (~ngram_size × tokens × 8B/row) are kept only for exact-Jaccard
+        verification."""
         c = self.cfg
-        if c.minhash_kernel == "jvm":
-            sig = minhash_signature_jvm(
-                shingled, "shingles", c.num_perm, c.seed, id_col="node_id"
-            )
-            return shingled.join(sig, "node_id") if c.verify_pairs else sig
-        kernel = (
-            minhash_signature_oph if c.minhash_kernel == "oph" else minhash_signature
-        )
         out = shingled.withColumn(
-            "min_hashes", kernel(F.col("shingles"), c.num_perm, c.seed)
+            "min_hashes", minhash_signature(F.col("shingles"), c.num_perm, c.seed)
         )
         return out if c.verify_pairs else out.drop("shingles")
 
@@ -255,7 +244,6 @@ class MinHashDedupePipeline:
             ),
         )
         clusters, results = self.merge(prepped, assignments, id_map)
-        ck.flush_metrics_table()
         return {
             "results": results,
             "assignments": assignments,

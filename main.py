@@ -33,17 +33,6 @@ def parse_args():
     p.add_argument("--threshold", type=float, default=0.7)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--algorithm", default="two_phase", choices=["two_phase", "alternating"])
-    p.add_argument(
-        "--minhash-kernel",
-        default="arrow",
-        choices=["arrow", "jvm", "oph"],
-        help="signature kernel: 'arrow' = reference-parity vectorized "
-        "pandas/Arrow UDF (default, fastest at headline scale); 'jvm' = "
-        "pure whole-stage-codegen xxhash64 family — no Python worker in "
-        "the stage; shape-dependent speed (1.2x faster at 1M blocks, "
-        "0.8x at 5M — BENCH/BASELINE.md 3b-2); 'oph' = one-permutation "
-        "hashing + optimal densification (one hash per shingle)",
-    )
     p.add_argument("--chunk-size", type=int, default=200_000)
     p.add_argument("--max-partitions", type=int, default=2048)
     p.add_argument(
@@ -227,7 +216,6 @@ def main() -> None:
         algorithm=args.algorithm,
         verify_pairs=args.verify_pairs,
         checkpoint_dir=args.checkpoint,
-        minhash_kernel=args.minhash_kernel,
     )
     if args.prior_checkpoint:
         run_incremental(spark, args, df, cfg, t0)

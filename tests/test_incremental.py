@@ -2,6 +2,9 @@
 not merely isomorphic partitions) — the correctness contract that makes the
 O(batch) daily-crawl path safe at corpus scale."""
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from daft_minhash_dedupe_spark.config import DedupeConfig
@@ -117,6 +120,20 @@ def test_incremental_equals_full_run(spark, seed, mod):
 
     for n in all_nodes:
         assert merged.get(n, n) == full.get(n, n), f"node {n}"
+
+
+def _set_meta_kernel(root, kernel):
+    """Record ``kernel`` as the state's ``minhash_kernel`` (None: drop the
+    key) by editing its _META.json out of band, and drop Hadoop's local-FS
+    checksum sidecar, which the edit would otherwise fail on the next read."""
+    meta_path = Path(root) / "_META.json"
+    m = json.loads(meta_path.read_text())
+    m.pop("minhash_kernel", None)
+    if kernel is not None:
+        m["minhash_kernel"] = kernel
+    meta_path.write_text(json.dumps(m))
+    (meta_path.parent / "._META.json.crc").unlink(missing_ok=True)
+
 
 def _snapshot_files(root):
     """path -> (size, mtime_ns) for every data file under root."""
@@ -237,12 +254,13 @@ def test_state_meta_guards(spark, tmp_path):
         state.validate_config(DedupeConfig(ngram_size=3))
     with pytest.raises(ValueError, match="different"):
         state.validate_config(DedupeConfig(seed=7))
-    # signature-family mismatch -> refuse (band keys incomparable across
-    # kernels: a fold would silently under-merge, never matching old buckets)
-    with pytest.raises(ValueError, match="different"):
-        state.validate_config(DedupeConfig(minhash_kernel="oph"))
     # matching config passes
     state.validate_config(DedupeConfig())
+    # state signed by another hash family -> refuse (band keys incomparable:
+    # a fold would silently under-merge, never matching old buckets)
+    _set_meta_kernel(root, "oph")
+    with pytest.raises(ValueError, match="minhash_kernel"):
+        state.validate_config(DedupeConfig())
 
     # state persisted by a verified run -> always refused
     vroot = str(tmp_path / "vstate")
@@ -398,31 +416,40 @@ def test_no_meta_legacy_batches_demote_bucketed_request(spark, tmp_path):
 
 
 def test_legacy_meta_missing_kernel_means_arrow(spark, tmp_path):
-    """State fingerprinted before minhash_kernel was a _META_KEY was built by
-    the arrow kernel: a fold with a different kernel family must be refused
-    (incomparable band keys silently under-merge), while the arrow default
-    still validates."""
-    import json
-    from pathlib import Path
-
-    import pytest
-
+    """A _META.json without minhash_kernel was built by the Arrow kernel and
+    validates; one recording another kernel family is refused (incomparable
+    band keys silently under-merge)."""
     bands = spark.createDataFrame([(1, 10)], "band_key long, node long")
     assigns = spark.createDataFrame([(10, 10)], "u long, rep long")
 
     root = str(tmp_path / "prekernel")
     st = IncrementalState(spark, root)
     st.bootstrap(bands, assigns, meta_from_config(DedupeConfig()))
-    meta_path = Path(root) / "_META.json"
-    m = json.loads(meta_path.read_text())
-    del m["minhash_kernel"]
-    meta_path.write_text(json.dumps(m))
-    (meta_path.parent / "._META.json.crc").unlink(missing_ok=True)
+    _set_meta_kernel(root, None)
+    IncrementalState(spark, root).validate_config(DedupeConfig())
+    _set_meta_kernel(root, "arrow")
+    IncrementalState(spark, root).validate_config(DedupeConfig())
+    for kernel in ("jvm", "oph"):
+        _set_meta_kernel(root, kernel)
+        with pytest.raises(ValueError, match="minhash_kernel"):
+            IncrementalState(spark, root).validate_config(DedupeConfig())
 
-    reopened = IncrementalState(spark, root)
-    reopened.validate_config(DedupeConfig())  # arrow default: accepted
-    with pytest.raises(ValueError, match="minhash_kernel"):
-        reopened.validate_config(DedupeConfig(minhash_kernel="oph"))
+
+def test_fold_releases_cached_band_table(spark, tmp_path):
+    """A fold leaves nothing in Spark's cache manager, so a long-lived
+    driver folding batch after batch pins no band table per fold."""
+    raw, _ = generate_web_pages(spark, n_rows=60, seed=7)
+    pages = prepare_web_pages(raw).localCheckpoint(eager=True)
+    a, b, _ = _split3(pages)
+    cfg = DedupeConfig()
+    pipe = MinHashDedupePipeline(cfg)
+    state = IncrementalState(spark, str(tmp_path / "state"))
+    _, a_bands, a_assigns = _stages(pipe, a)
+    state.bootstrap(a_bands, a_assigns, meta_from_config(cfg))
+
+    spark.catalog.clearCache()
+    pipe.fold(b, state, str(tmp_path / "out"))["delta"].collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
 
 
 def test_bucketed_read_recovers_externally_added_partitions(spark, tmp_path):

@@ -57,11 +57,6 @@ def test_stage_checkpointer_metrics_and_resume(spark, tmp_path):
     out2 = ck2.stage("s1", spark.range(0, 5))
     assert out2.count() == 100
 
-    # metrics table flush (parquet fallback)
-    ck.flush_metrics_table()
-    mt = spark.read.parquet(str(Path(root) / "_metrics"))
-    assert mt.where(F.col("stage") == "s1").count() == 1
-
 
 def test_streaming_lang_counts(spark, tmp_path):
     from daft_minhash_dedupe_spark.streaming import streaming_lang_counts

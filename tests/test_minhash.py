@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 from daft_minhash_dedupe_spark import oracle
 from daft_minhash_dedupe_spark.config import MAX_HASH_32
 from daft_minhash_dedupe_spark.functions.minhash import (
-    JVM_EMPTY_SENTINEL,
     minhash_signature,
-    minhash_signature_jvm,
     shingle_hashes,
 )
 
@@ -126,157 +124,3 @@ def test_shingles_and_signatures_match_oracle_hypothesis(spark, texts):
         assert sorted(rows[i]["sh"]) == want_sh, t
         want_sig = oracle.signature(oracle.shingle_set(t, 5), 64, 42)
         assert rows[i]["sig"] == want_sig.tolist(), t
-
-
-# -- pure-JVM kernel (minhash_signature_jvm) ---------------------------------
-
-
-def _jvm_sig_df(spark, texts, num_perm=64, ngram=5, seed=42):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "node_id long, t string"
-    )
-    shingled = df.select(
-        "node_id", shingle_hashes(F.col("t"), ngram).alias("shingles")
-    )
-    return minhash_signature_jvm(
-        shingled, "shingles", num_perm=num_perm, seed=seed, id_col="node_id"
-    )
-
-
-def test_jvm_kernel_shape_and_row_preservation(spark):
-    texts = ["hello world foo bar baz qux", "", "one two three four five six"]
-    rows = _jvm_sig_df(spark, texts, num_perm=32).orderBy("node_id").collect()
-    assert len(rows) == len(texts)  # explode_outer keeps empty docs
-    for r in rows:
-        assert len(r["min_hashes"]) == 32
-        assert all(isinstance(v, int) for v in r["min_hashes"])
-
-
-def test_jvm_kernel_empty_doc_sentinel(spark):
-    rows = _jvm_sig_df(spark, ["", "   "]).collect()
-    for r in rows:
-        assert r["min_hashes"] == [JVM_EMPTY_SENTINEL] * 64
-
-
-def test_jvm_kernel_deterministic_across_parallelism(spark):
-    texts = [" ".join(f"w{(i * 7 + j) % 50}" for j in range(40)) for i in range(100)]
-    a = {
-        r["node_id"]: tuple(r["min_hashes"])
-        for r in _jvm_sig_df(spark, texts).collect()
-    }
-    b = {
-        r["node_id"]: tuple(r["min_hashes"])
-        for r in _jvm_sig_df(spark, texts).repartition(7).collect()
-    }
-    assert a == b
-
-
-def test_jvm_kernel_identical_texts_identical_signatures(spark):
-    t = " ".join(f"w{i}" for i in range(100))
-    rows = _jvm_sig_df(spark, [t, t]).collect()
-    assert rows[0]["min_hashes"] == rows[1]["min_hashes"]
-
-
-def test_jvm_kernel_jaccard_estimate_tracks_true_jaccard(spark):
-    """The xxhash64 re-mix family is a valid MinHash estimator: signature
-    position-agreement ≈ true shingle Jaccard (same tolerance as the Arrow
-    kernel's test above — family-independent property)."""
-    base = [f"tok{i:04d}" for i in range(200)]
-    edited = list(base)
-    edited[50] = "zzz"
-    t1, t2 = " ".join(base), " ".join(edited)
-    rows = _jvm_sig_df(spark, [t1, t2], num_perm=256).orderBy("node_id").collect()
-    s1 = np.array(rows[0]["min_hashes"])
-    s2 = np.array(rows[1]["min_hashes"])
-    est = float((s1 == s2).mean())
-    sh1, sh2 = set(oracle.shingle_set(t1, 5)), set(oracle.shingle_set(t2, 5))
-    true_j = len(sh1 & sh2) / len(sh1 | sh2)
-    assert abs(est - true_j) < 0.12
-    assert true_j > 0.9
-
-
-# -- OPH kernel (minhash_signature_oph) --------------------------------------
-
-
-def _oph_sig_df(spark, texts, num_perm=64, ngram=5, seed=42):
-    from daft_minhash_dedupe_spark.functions.minhash import minhash_signature_oph
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "node_id long, t string"
-    )
-    return df.select(
-        "node_id",
-        minhash_signature_oph(
-            shingle_hashes(F.col("t"), ngram), num_perm, seed
-        ).alias("min_hashes"),
-    )
-
-
-def test_oph_kernel_shape_domain_and_empty_sentinel(spark):
-    texts = ["hello world foo bar baz qux", "", "one two three four five six"]
-    rows = _oph_sig_df(spark, texts, num_perm=32).orderBy("node_id").collect()
-    assert len(rows) == len(texts)
-    for r in rows:
-        assert len(r["min_hashes"]) == 32
-        assert all(0 <= v <= MAX_HASH_32 for v in r["min_hashes"])
-    assert rows[1]["min_hashes"] == [MAX_HASH_32] * 32  # empty doc convention
-
-
-def test_oph_kernel_deterministic_and_batch_independent(spark):
-    texts = [" ".join(f"w{(i * 7 + j) % 50}" for j in range(40)) for i in range(100)]
-    a = {r["node_id"]: tuple(r["min_hashes"]) for r in _oph_sig_df(spark, texts).collect()}
-    b = {
-        r["node_id"]: tuple(r["min_hashes"])
-        for r in _oph_sig_df(spark, texts).repartition(7).collect()
-    }
-    assert a == b
-    # identical texts -> identical signatures (densification included)
-    t = " ".join(f"w{i}" for i in range(10))  # short doc => many empty bins
-    rows = _oph_sig_df(spark, [t, t]).collect()
-    assert rows[0]["min_hashes"] == rows[1]["min_hashes"]
-
-
-def test_oph_kernel_jaccard_estimate_tracks_true_jaccard(spark):
-    """OPH + optimal densification stays an (approximately) unbiased Jaccard
-    estimator; tolerance is looser than the permutation kernels' because one
-    permutation re-uses randomness across bins."""
-    base = [f"tok{i:04d}" for i in range(300)]
-    edited = list(base)
-    edited[50] = "zzz"
-    edited[150] = "yyy"
-    t1, t2 = " ".join(base), " ".join(edited)
-    rows = _oph_sig_df(spark, [t1, t2], num_perm=256).orderBy("node_id").collect()
-    s1 = np.array(rows[0]["min_hashes"])
-    s2 = np.array(rows[1]["min_hashes"])
-    est = float((s1 == s2).mean())
-    sh1, sh2 = set(oracle.shingle_set(t1, 5)), set(oracle.shingle_set(t2, 5))
-    true_j = len(sh1 & sh2) / len(sh1 | sh2)
-    assert true_j > 0.9
-    assert abs(est - true_j) < 0.15
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    rows=st.lists(
-        st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=40),
-        min_size=1,
-        max_size=8,
-    ),
-    num_perm=st.sampled_from([16, 64]),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_oph_flat_kernel_matches_pure_python_oracle(rows, num_perm, seed):
-    """Bit-pin the vectorized OPH kernel (numpy splitmix64 + minimum.at +
-    probe-loop densification) against the dependency-free row-at-a-time
-    reimplementation in oracle.py — any vectorization bug (dtype overflow,
-    probe order, densified-bin borrowing) shows up as a mismatch."""
-    from daft_minhash_dedupe_spark.functions.minhash import _oph_signatures_flat
-
-    lens = [len(r) for r in rows]
-    offsets = np.zeros(len(rows) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    values = np.array([v for r in rows for v in r], dtype=np.int64)
-    got = _oph_signatures_flat(values, offsets, num_perm, seed)
-    for i, r in enumerate(rows):
-        want = oracle.oph_signature(r, num_perm, seed)
-        assert got[i].tolist() == want, (i, r)

@@ -88,3 +88,15 @@ def test_local_master_rewrite_adds_task_retries():
     assert f("local[8,2]") == "local[8,2]"
     assert f("spark://host:7077") == "spark://host:7077"
     assert f("yarn") == "yarn"
+
+
+def test_small_local_masters_run_the_serial_collector():
+    from daft_minhash_dedupe_spark.session import _local_gc_option as f
+
+    # G1's pause-driven heap growth swung one run's footprint by ~0.8 GB;
+    # up to four task threads the serial collector keeps it steady
+    assert f("local[4,4]") == "-XX:+UseSerialGC"
+    assert f("local[1,4]") == "-XX:+UseSerialGC"
+    # wider local masters and cluster masters keep the JVM's default
+    assert f("local[32,4]") is None
+    assert f("spark://host:7077") is None
