@@ -70,6 +70,25 @@ def _docs_as_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Several driver queries share one computed frame or pipeline result (the
+# flagship run, the shingle and signature tables, the tier cascade, the scan
+# partition counts). _memo computes each once per Spark application. Keys
+# carry the session's applicationId, and the first lookup under a new id
+# drops every entry of the earlier one, so a long-lived process never pins
+# DataFrames of a stopped session.
+_MEMO: dict[tuple, object] = {}
+
+
+def _memo(spark: SparkSession, key: tuple, build: Callable[[], object]):
+    app = spark.sparkContext.applicationId
+    if _MEMO and next(iter(_MEMO))[0] != app:
+        _MEMO.clear()
+    full_key = (app, *key)
+    if full_key not in _MEMO:
+        _MEMO[full_key] = build()
+    return _MEMO[full_key]
+
+
 # documents.parquet is a SINGLE parquet row group at every shipped sf (50k
 # rows / 1 row group at sf1.0), so a plain scan yields one non-empty input
 # split no matter how split sizing is configured — every narrow per-doc
@@ -80,16 +99,11 @@ def _docs_as_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cluster's parallelism (scale-adaptive — a source that already scans into
 # >= defaultParallelism splits is passed through untouched, so big multi-
 # file inputs never pay the extra exchange).
-_SCAN_PARTS_MEMO: dict[tuple[str, str], int] = {}
-
-
 def _repart(df: DataFrame, key: str, memo_key: str) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    mk = (spark.sparkContext.applicationId, memo_key)
-    if mk not in _SCAN_PARTS_MEMO:
-        _SCAN_PARTS_MEMO[mk] = df.rdd.getNumPartitions()
-    if _SCAN_PARTS_MEMO[mk] >= target:
+    n_parts = _memo(spark, ("scan_parts", memo_key), lambda: df.rdd.getNumPartitions())
+    if n_parts >= target:
         return df
     return df.repartition(target, F.col(key))
 
@@ -124,19 +138,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # it once per (session, sf_dir, config) and handing the same result dict to
 # every consumer removes ~3 redundant full-pipeline executions per bench
 # sweep without changing any query's output.
-_PIPELINE_MEMO: dict[tuple[str, str, bool], dict] = {}
-
-
 def _run_flagship(spark: SparkSession, sf_dir: str, verify: bool = False) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir, verify)
-    if key not in _PIPELINE_MEMO:
+    def build() -> dict:
         if verify:
-            _PIPELINE_MEMO[key] = _verified_from_shared_stages(spark, sf_dir)
-        else:
-            _PIPELINE_MEMO[key] = MinHashDedupePipeline(DedupeConfig()).run(
-                _docs_as_blocks(spark, sf_dir)
-            )
-    return _PIPELINE_MEMO[key]
+            return _verified_from_shared_stages(spark, sf_dir)
+        return MinHashDedupePipeline(DedupeConfig()).run(_docs_as_blocks(spark, sf_dir))
+
+    return _memo(spark, ("flagship", sf_dir, verify), build)
 
 
 def _verified_from_shared_stages(spark: SparkSession, sf_dir: str) -> dict:
@@ -184,39 +192,31 @@ def _q_minhash_dedupe_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # queries each (shingle_stats / doc_fingerprints / simhash off the shingle
 # table; minhash_signatures / lsh_bands / candidate_edges off the signature
 # table). Both are per-row deterministic functions of the input, so — same
-# pattern as _PIPELINE_MEMO below — computing each once per (session, sf)
+# pattern as the flagship run above — computing each once per (session, sf)
 # and letting every consumer read the lazily-materialized frame removes
 # redundant tokenize+hash (and kernel) passes without changing any query's
 # output. First consumer pays the materialization inside its timed region.
-_SHINGLES_MEMO: dict[tuple[str, str], DataFrame] = {}
-_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, _sh array<bigint>) — distinct 5-gram shingle hashes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLES_MEMO:
-        _SHINGLES_MEMO[key] = (
-            add_shingles(_docs_par(spark, sf_dir), "text", 5, "_sh")
-            .select("doc_id", "_sh")
-            .localCheckpoint(eager=False)
-        )
-    return _SHINGLES_MEMO[key]
+    return _memo(
+        spark,
+        ("shingles", sf_dir),
+        lambda: add_shingles(_docs_par(spark, sf_dir), "text", 5, "_sh")
+        .select("doc_id", "_sh")
+        .localCheckpoint(eager=False),
+    )
 
 
 def _signatures_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, min_hashes array<bigint>) — internal; list columns crash the
     driver canonicalizer, so the exposed query explodes to scalar rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIG_MEMO:
-        _SIG_MEMO[key] = (
-            _shingled_docs(spark, sf_dir)
-            .select(
-                "doc_id", minhash_signature(F.col("_sh"), 64, 42).alias("min_hashes")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return _SIG_MEMO[key]
+    return _memo(
+        spark,
+        ("signatures", sf_dir),
+        lambda: _shingled_docs(spark, sf_dir)
+        .select("doc_id", minhash_signature(F.col("_sh"), 64, 42).alias("min_hashes"))
+        .localCheckpoint(eager=False),
+    )
 
 
 def _q_minhash_dedupe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,607 +445,6 @@ def _q_html_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = docs.select("doc_id", html.alias("content_raw"))
     return explode_blocks(pages, id_col="doc_id").select("block_id", "block_text")
-
-
-def _media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesized multimodal table: document bytes as opaque payloads, a
-    third each prefixed with JPEG / PNG magic numbers (testdata has no real
-    media; the binary plumbing is what's under test)."""
-    docs = _docs_par(spark, sf_dir)
-    raw = F.encode("text", "utf-8")
-    payload = (
-        F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit(bytes([0xFF, 0xD8, 0xFF, 0xE0])), raw))
-        .when(F.col("doc_id") % 3 == 1, F.concat(F.lit(bytes([0x89, 0x50, 0x4E, 0x47])), raw))
-        .otherwise(raw)
-    )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        payload.alias("payload"),
-    )
-
-
-def _q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode-free metadata over binary media columns: byte length + magic-
-    number MIME sniffing (pure Catalyst on binary)."""
-    from daft_minhash_dedupe_spark.extras.multimodal import attach_media_metadata
-
-    out = attach_media_metadata(_media_table(spark, sf_dir))
-    return out.select(
-        "media_id", F.col("n_bytes").cast("bigint").alias("n_bytes"), "sniffed_mime"
-    )
-
-
-def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas feature extraction (deterministic stub decoder — byte-
-    histogram features). Emitted as integer bin-0 counts so the row is
-    oracle-checkable: payload is raw ASCII text, so hist[0] = #chars in
-    {space,h,p,x} (the ord%8==0 characters present in the corpus)."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_media_features
-
-    docs = _docs_par(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    feats = extract_media_features(media, n_features=8)
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.round(F.element_at("feature", 1) * F.col("n_bytes"))
-        .cast("bigint")
-        .alias("bin0_count"),
-    )
-
-
-def _q_media_meta_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """media_metadata + media_features packed into one driver row (both are
-    keyed by media_id over the same doc population; packing keeps both arms
-    oracle-adjudicated inside the driver's 50-row window). n_bytes comes
-    from the metadata arm (payload WITH magic prefix); bin0_count from the
-    feature arm (raw-text payload)."""
-    meta = _q_media_metadata(spark, sf_dir)
-    feats = _q_media_features(spark, sf_dir).select("media_id", "bin0_count")
-    return meta.join(feats, "media_id")
-
-
-def _ascii_padded(col, n: int):
-    """ASCII-only fixed-width byte payload from a text column: strip
-    non-printable/non-ASCII, right-pad/truncate to exactly n chars → n bytes."""
-    return F.encode(F.rpad(F.regexp_replace(col, "[^ -~]", ""), n, " "), "utf-8")
-
-
-def _wav_header(n_bytes: int, sr: int = 8000, ch: int = 1, bits: int = 8) -> bytes:
-    """Canonical 44-byte PCM RIFF/WAVE header (constant across rows because
-    the synthesized payload length is fixed)."""
-    import struct
-
-    byte_rate = sr * ch * bits // 8
-    block_align = ch * bits // 8
-    return (
-        b"RIFF" + struct.pack("<I", 36 + n_bytes) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, sr, byte_rate, block_align, bits)
-        + b"data" + struct.pack("<I", n_bytes)
-    )
-
-
-def _q_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode path: synthesize valid 8-bit PCM WAV payloads from
-    document text (constant header + 256 ASCII sample bytes), decode with the
-    stdlib ``wave`` parser inside mapInPandas, emit header params + the exact
-    sample sum — every value independently computable by the SQL oracle."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_wav_features
-
-    docs = _docs_par(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(_wav_header(256)), _ascii_padded(F.col("text"), 256)).alias(
-            "payload"
-        ),
-    )
-    return extract_wav_features(media)
-
-
-def _q_ppm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode path: synthesize binary 16x16 RGB PPM (P6) payloads
-    from document text, decode header + pixels with the numpy parser, emit
-    dimensions + exact pixel sum."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_ppm_features
-
-    docs = _docs_par(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(b"P6\n16 16\n255\n"), _ascii_padded(F.col("text"), 768)).alias(
-            "payload"
-        ),
-    )
-    return extract_ppm_features(media)
-
-
-# uniform +10 brightness shift on the [space..'t'] byte alphabet, expressible
-# as translate() on BOTH engines (every char maps; no clipping, so the shift
-# is uniform and the perceptual hash must be invariant to it)
-_SHIFT_FROM = "".join(chr(c) for c in range(32, 117))
-_SHIFT_TO = "".join(chr(c + 10) for c in range(32, 117))
-
-
-def _ppm_low_alphabet(col):
-    """16x16 P6 payload over bytes 32..116 only (so a +10 shift can't clip)."""
-    return F.concat(
-        F.lit(b"P6\n16 16\n255\n"),
-        F.encode(F.rpad(F.regexp_replace(col, "[^ -t]", ""), 768, " "), "utf-8"),
-    )
-
-
-def _q_ppm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL decode -> nearest-neighbor resize path: 16x16 P6 payloads scaled
-    to 8x8 inside mapInPandas. Integer-factor nearest-neighbor is strided
-    sampling (pixels at even coords), so the resized pixel sum is exactly
-    computable by the SQL oracle from the payload byte positions."""
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_resized_ppm_features,
-    )
-
-    docs = _docs_par(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(b"P6\n16 16\n255\n"), _ascii_padded(F.col("text"), 768)).alias(
-            "payload"
-        ),
-    )
-    return extract_resized_ppm_features(media, 8, 8)
-
-
-def _q_ppm_decode_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ppm_features + ppm_resize packed into one driver row: the full-res
-    16x16 decode sums joined with the nearest-neighbor 8x8 resize sums per
-    media_id, both byte-exact against the SQL oracle. r6: one fused decode
-    pass (row-equal to the former two-extractor join, pinned by test) —
-    the join of two per-payload decodes re-parsed every payload twice and
-    shuffled both sides on media_id."""
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_ppm_features_with_resize,
-    )
-
-    docs = _docs_par(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(b"P6\n16 16\n255\n"), _ascii_padded(F.col("text"), 768)).alias(
-            "payload"
-        ),
-    )
-    return extract_ppm_features_with_resize(media, 8, 8)
-
-
-def _media_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs slice for the codec-heavy fingerprint/near-dup queries: all the
-    planted structure (50 exact copies at doc_id<50, 50 shifted copies at
-    50<=doc_id<100) lives below 100, so capping at 120 preserves every
-    invariant while cutting the encode+decode bench mass ~40x at sf0.1.
-    Every consumer's oracle SQL carries the same `doc_id < 120` filter
-    (pinned in sync with MEDIA_DOC_CAP by tests/test_entry_contract.py)."""
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < MEDIA_DOC_CAP)
-    # small fixed fan-out sized to the capped row count (~30 rows/task), NOT
-    # to core count: the codec arms stack ~18 pandas-UDF stages over these
-    # rows, and a 32-way split leaves ~4 rows per Python task — per-task
-    # Arrow round-trip overhead dominated (measured 8.6 s vs 3.6 s at
-    # sf1.0); the 6 arms' independent stages already overlap across cores
-    return docs.repartition(max(MEDIA_DOC_CAP // 30, 1), F.col("doc_id"))
-
-
-MEDIA_DOC_CAP = 120
-
-
-def _q_image_ahash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual average-hash invariants as a driver-adjudicated row: each
-    source image, an exact copy (doc_id < 50), and a uniformly brightened
-    copy (+10 on every byte, doc_id in [50,100)) must all hash identically —
-    n_violations counts source groups with >1 distinct aHash (must be 0; the
-    brightness invariance is what makes the hash perceptual rather than a
-    byte digest). Group counts are SQL-derivable from text equality."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 768, " ")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"), src.alias("src"),
-        _ppm_low_alphabet(F.col("text")).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "src", "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        src.alias("src"),
-        F.concat(
-            F.lit(b"P6\n16 16\n255\n"),
-            F.encode(F.translate(src, _SHIFT_FROM, _SHIFT_TO), "utf-8"),
-        ).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    hashed = extract_image_ahash(union, src_col="src")
-    g = hashed.groupBy("src").agg(
-        F.countDistinct("ahash").alias("k"), F.count("*").alias("n")
-    )
-    return g.agg(
-        F.count("*").alias("n_src_groups"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_groups"),
-        F.sum(F.when(F.col("k") > 1, 1).otherwise(0)).alias("n_violations"),
-    )
-
-
-def _q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs, fully SQL-adjudicated: with 4 bands over
-    64 bits, pigeonhole makes banding recall exactly 1.0 at Hamming <= 3, and
-    aHash is all-integer arithmetic — so the operator's output must equal
-    DuckDB's brute-force 'all pairs with Hamming(ahash) <= 3' recomputed from
-    the same payload bytes. Planted: 50 exact copies (hash-identical) plus 50
-    perturbed copies (first 12 bytes overwritten — lands wherever the true
-    Hamming distance lands; both engines agree either way)."""
-    from daft_minhash_dedupe_spark.extras.multimodal import image_near_dup_pairs
-
-    docs = _media_docs(spark, sf_dir)
-    # pixels from an md5 chain (replayable in DuckDB) rather than raw text
-    # bytes: ASCII text images are massively correlated under aHash (one
-    # band bucket held the ENTIRE sf0.1 corpus and the true Hamming<=3
-    # answer was ~2M pairs) — hash-derived pixels decorrelate the
-    # fingerprints so the certified pair set is the planted one
-    a = F.concat(
-        *[
-            F.md5(F.encode(F.concat(F.col("text"), F.lit(f"|{i}")), "utf-8"))
-            for i in range(24)
-        ]
-    )
-    base = docs.select(F.col("doc_id").alias("media_id"), a.alias("a"))
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "a"
-    )
-    # overwrite ONE sampled cell (first 3 bytes): flips that bit plus any
-    # mean-borderline bits — wherever the true distance lands, both engines
-    # compute it identically
-    pert = base.where((F.col("media_id") >= 50) & (F.col("media_id") < 100)).select(
-        (F.col("media_id") + 2_000_000).alias("media_id"),
-        F.concat(F.lit("!!!"), F.substring("a", 4, 765)).alias("a"),
-    )
-    union = base.unionByName(copies).unionByName(pert)
-    media = union.select(
-        "media_id",
-        F.concat(F.lit(b"P6\n16 16\n255\n"), F.encode("a", "utf-8")).alias("payload"),
-    )
-    # max_bucket_pairwise lifted so degenerate texts (hash-identical buckets)
-    # stay on the exact pairwise path — required for pair-exact oracle parity
-    return image_near_dup_pairs(
-        media, max_hamming=3, max_bucket_pairwise=1_000_000
-    ).select("u", "v")
-
-
-def _q_video_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plan (extras/multimodal.frame_sample_plan): one
-    row per (media_id, frame_ts) at a 500 ms stride, WITHOUT decoding — the
-    exploded plan is what a downstream mapInPandas decode stage consumes.
-    Durations synthesized deterministically from doc_id; pure Catalyst
-    sequence+explode, so the oracle replays it with generate_series."""
-    from daft_minhash_dedupe_spark.extras.multimodal import frame_sample_plan
-
-    docs = _docs(spark, sf_dir)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.col("doc_id") % 4 == 0, "image").otherwise("video").alias("kind"),
-        ((F.col("doc_id") % 10 + 1) * 1000).alias("duration_ms"),
-    )
-    return frame_sample_plan(media, every_ms=500)
-
-
-def _q_audio_fp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-sign audio fingerprint invariants, mirroring image_ahash_stats:
-    each source WAV, an exact copy (doc_id < 50), and a +10 DC-offset copy
-    (doc_id in [50,100)) must fingerprint identically — window-mean deltas
-    cancel a constant offset. n_violations (src groups with >1 distinct
-    fingerprint) must be 0; group counts are SQL-derivable."""
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_audio_fingerprint,
-    )
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 256, " ")
-    hdr = F.lit(_wav_header(256))
-    base = docs.select(
-        F.col("doc_id").alias("media_id"), src.alias("src"),
-        F.concat(hdr, F.encode(src, "utf-8")).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "src", "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        src.alias("src"),
-        F.concat(
-            hdr, F.encode(F.translate(src, _SHIFT_FROM, _SHIFT_TO), "utf-8")
-        ).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    hashed = extract_audio_fingerprint(union, src_col="src")
-    g = hashed.groupBy("src").agg(
-        F.countDistinct("afp").alias("k"), F.count("*").alias("n")
-    )
-    return g.agg(
-        F.count("*").alias("n_src_groups"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_groups"),
-        F.sum(F.when(F.col("k") > 1, 1).otherwise(0)).alias("n_violations"),
-    )
-
-
-def _q_png_ahash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """image_ahash_stats with the SAME pixels shipped as REAL PNGs
-    (zlib-compressed, Paeth-filtered — extras/png_codec.py) instead of raw
-    PPM bytes: the extractor must inflate + reverse the filter correctly or
-    the exact-copy / brightness-shift groups fracture (n_violations > 0).
-    This puts compressed-format decode under driver adjudication."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-
-    @F.pandas_udf("binary")
-    def png_of(src: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from daft_minhash_dedupe_spark.extras.png_codec import encode_png
-
-        return src.map(
-            lambda s: encode_png(
-                np.frombuffer(s.encode("utf-8"), dtype=np.uint8).reshape(16, 16, 3),
-                filter_type=4,
-            )
-        )
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 768, " ")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"), src.alias("src"),
-        png_of(src).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "src", "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        src.alias("src"),
-        png_of(F.translate(src, _SHIFT_FROM, _SHIFT_TO)).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    hashed = extract_image_ahash(union, src_col="src")
-    g = hashed.groupBy("src").agg(
-        F.countDistinct("ahash").alias("k"), F.count("*").alias("n")
-    )
-    return g.agg(
-        F.count("*").alias("n_src_groups"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_groups"),
-        F.sum(F.when(F.col("k") > 1, 1).otherwise(0)).alias("n_violations"),
-    )
-
-
-def _q_jpeg_ahash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The png_ahash invariants again, but the payload is a REAL baseline
-    JPEG (extras/jpeg_codec.py): the extractor must Huffman-decode the
-    entropy stream, dequantize, and IDCT correctly or the exact-copy /
-    brightness-shift groups fracture. Pixels are drawn from {32, 224}
-    (8x8 gray from the first 64 text bytes' parity) so the +/-2
-    coefficient-rounding error of the near-lossless table can never cross
-    the aHash mean threshold — the invariant is exact despite the lossy
-    container. Brightness arm: +16 on every pixel pre-encode."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-
-    @F.pandas_udf("binary")
-    def jpeg_of(src: pd.Series, shift: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from daft_minhash_dedupe_spark.extras.jpeg_codec import encode_jpeg
-
-        def enc(s: str, sh: int) -> bytes:
-            b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-            px = np.where(b & 1, 224, 32).astype(np.uint8).reshape(8, 8)
-            return encode_jpeg(px + np.uint8(sh))
-
-        return pd.Series([enc(s, sh) for s, sh in zip(src, shift)])
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 64, " ")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"), src.alias("src"),
-        jpeg_of(src, F.lit(0)).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "src", "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        src.alias("src"),
-        jpeg_of(src, F.lit(16)).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    hashed = extract_image_ahash(union, src_col="src")
-    g = hashed.groupBy("src").agg(
-        F.countDistinct("ahash").alias("k"), F.count("*").alias("n")
-    )
-    return g.agg(
-        F.count("*").alias("n_src_groups"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_groups"),
-        F.sum(F.when(F.col("k") > 1, 1).otherwise(0)).alias("n_violations"),
-    )
-
-
-def _q_gif_ahash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The compressed-container invariants once more with GIF payloads
-    (extras/gif_codec.py): the extractor must LZW-decode the variable-width
-    code stream and expand the palette correctly or the exact-copy /
-    brightness-shift groups fracture. Gray identity palette makes the
-    container lossless, so the +10 byte shift of the image arm carries over
-    exactly (16x16 gray from 256 text bytes)."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-
-    @F.pandas_udf("binary")
-    def gif_of(src: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-
-        pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-        return src.map(
-            lambda s: encode_gif(
-                [np.frombuffer(s.encode("utf-8"), dtype=np.uint8).reshape(16, 16)],
-                pal,
-            )
-        )
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 256, " ")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"), src.alias("src"),
-        gif_of(src).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "src", "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        src.alias("src"),
-        gif_of(F.translate(src, _SHIFT_FROM, _SHIFT_TO)).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    hashed = extract_image_ahash(union, src_col="src")
-    g = hashed.groupBy("src").agg(
-        F.countDistinct("ahash").alias("k"), F.count("*").alias("n")
-    )
-    return g.agg(
-        F.count("*").alias("n_src_groups"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_groups"),
-        F.sum(F.when(F.col("k") > 1, 1).otherwise(0)).alias("n_violations"),
-    )
-
-
-def _q_avi_vfp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The compressed-container invariants extended to VIDEO: each payload
-    is a REAL 3-frame MJPEG AVI (extras/avi_codec.py — RIFF container parse
-    + per-frame baseline JPEG through extras/jpeg_codec.py), fingerprinted
-    by the majority-vote video_fp64 over per-frame aHashes. The extractor
-    must walk the RIFF tree, split the movi chunks, and Huffman-decode all
-    three frames correctly or the exact-copy / brightness-shift groups
-    fracture. Pixels are drawn from {32, 224} (8x8 gray from the first 64
-    text bytes' parity; frames 2-3 are row/col rolls so every frame matters
-    to the vote) — JPEG's +/-2 rounding can never cross the aHash mean
-    threshold, and a +16 brightness shift on every frame preserves each
-    frame hash and therefore the vote."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_video_fingerprint
-
-    @F.pandas_udf("binary")
-    def avi_of(src: pd.Series, shift: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from daft_minhash_dedupe_spark.extras.avi_codec import encode_avi
-
-        def enc(s: str, sh: int) -> bytes:
-            b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-            px = np.where(b & 1, 224, 32).astype(np.uint8).reshape(8, 8)
-            px = px + np.uint8(sh)
-            frames = [px, np.roll(px, 2, axis=0), np.roll(px, 2, axis=1)]
-            return encode_avi(frames, frame_ms=40, codec="mjpg")
-
-        return pd.Series([enc(s, sh) for s, sh in zip(src, shift)])
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 64, " ")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"), src.alias("src"),
-        avi_of(src, F.lit(0)).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "src", "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        src.alias("src"),
-        avi_of(src, F.lit(16)).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    hashed = extract_video_fingerprint(union).join(
-        union.select("media_id", "src"), "media_id"
-    )
-    g = hashed.groupBy("src").agg(
-        F.countDistinct("vfp").alias("k"), F.count("*").alias("n")
-    )
-    return g.agg(
-        F.count("*").alias("n_src_groups"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_groups"),
-        F.sum(F.when(F.col("k") > 1, 1).otherwise(0)).alias("n_violations"),
-    )
-
-
-def _q_media_fp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-kernel invariants for the media modalities in one
-    adjudicated row — the rounds-2/3 queries image_ahash_stats and
-    audio_fp_stats (each green) packed under a `kind` tag so every oracle
-    row stays inside the driver's 50-entry adjudication window, plus the
-    round-4 `png_ahash` / `jpeg_ahash` arms (same planted structure but the
-    payload is a real compressed PNG / baseline JPEG). Per arm: source +
-    exact copy + brightness/DC-offset copy must hash identically
-    (n_violations must be 0)."""
-    img = _q_image_ahash_stats(spark, sf_dir).select(
-        F.lit("image_ahash").alias("kind"), "*"
-    )
-    aud = _q_audio_fp_stats(spark, sf_dir).select(
-        F.lit("audio_fp").alias("kind"), "*"
-    )
-    png = _q_png_ahash_stats(spark, sf_dir).select(
-        F.lit("png_ahash").alias("kind"), "*"
-    )
-    jpg = _q_jpeg_ahash_stats(spark, sf_dir).select(
-        F.lit("jpeg_ahash").alias("kind"), "*"
-    )
-    gif = _q_gif_ahash_stats(spark, sf_dir).select(
-        F.lit("gif_ahash").alias("kind"), "*"
-    )
-    avi = _q_avi_vfp_stats(spark, sf_dir).select(
-        F.lit("avi_mjpeg").alias("kind"), "*"
-    )
-    return (
-        img.unionByName(aud)
-        .unionByName(png)
-        .unionByName(jpg)
-        .unionByName(gif)
-        .unionByName(avi)
-    )
-
-
-def _q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-duplicate pairs, pair-exact vs SQL: for the fixed
-    256-sample payloads the 64 windows are equal-sized, so the delta-sign
-    bits reduce to integer window-sum comparisons DuckDB can replay from the
-    same bytes; 4-band pigeonhole again guarantees recall 1.0 at Hamming <=
-    3, so the operator output equals brute-force all-pairs-Hamming<=3.
-    Planted: 50 exact copies + 50 DC-offset copies (offset cancels -> Hamming
-    0, so the offset pairs MUST appear — a stronger planted check than the
-    stats row)."""
-    from daft_minhash_dedupe_spark.extras.multimodal import audio_near_dup_pairs
-
-    docs = _media_docs(spark, sf_dir)
-    src = F.rpad(F.regexp_replace("text", "[^ -t]", ""), 256, " ")
-    hdr = F.lit(_wav_header(256))
-    base = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(hdr, F.encode(src, "utf-8")).alias("payload"),
-    )
-    copies = base.where(F.col("media_id") < 50).select(
-        (F.col("media_id") + 1_000_000).alias("media_id"), "payload"
-    )
-    shifted = docs.where((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)).select(
-        (F.col("doc_id") + 2_000_000).alias("media_id"),
-        F.concat(
-            hdr, F.encode(F.translate(src, _SHIFT_FROM, _SHIFT_TO), "utf-8")
-        ).alias("payload"),
-    )
-    union = base.unionByName(copies).unionByName(shifted)
-    return audio_near_dup_pairs(
-        union, max_hamming=3, max_bucket_pairwise=1_000_000
-    ).select("u", "v")
 
 
 def _q_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1388,50 +787,48 @@ def _q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tiered_boundaries (the three SQL-expressible tier boundaries, value-hash
 # adjudicated against a chained DuckDB CTE). One cascade execution per
 # (session, sf) feeds both rows.
-_TIERED_MEMO: dict[tuple[str, str], dict] = {}
-
-
 def _run_tiered(spark: SparkSession, sf_dir: str) -> dict:
+    return _memo(spark, ("tiered", sf_dir), lambda: _build_tiered(spark, sf_dir))
+
+
+def _build_tiered(spark: SparkSession, sf_dir: str) -> dict:
     from daft_minhash_dedupe_spark.extras.tiered import tiered_dedupe
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TIERED_MEMO:
-        base = _docs_par(spark, sf_dir).select(
-            "doc_id",
-            F.concat_ws(
-                "\n",
-                F.concat(F.lit("header source "), F.col("source")),
-                F.col("text"),
-                F.lit("copyright footer all rights reserved"),
-            ).alias("text"),
-        )
-        # make every tier boundary non-vacuous (the raw sf tables carry no
-        # exact duplicates): 30 verbatim copies die at tier 0; 30 "revealed"
-        # copies differ from their base ONLY by a banner line that the line
-        # tier blocklists (30 docs >= the 5-doc threshold), so they become
-        # byte-identical to their base afterwards and die at tier 1b —
-        # exactly the re-digest rationale in extras/tiered.py
-        exact_copies = base.where(F.col("doc_id") < 30).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-        revealed = base.where(
-            (F.col("doc_id") >= 30) & (F.col("doc_id") < 60)
-        ).select(
-            (F.col("doc_id") + 2_000_000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit("\nseasonal promo banner line")).alias(
-                "text"
-            ),
-        )
-        # lazily materialize the augmented input once: tier 0 reads its
-        # input lineage 2-3x (digest agg + keep semi-join + docs_in count) —
-        # without this each read re-runs the concat_ws augmentation chain
-        aug = (
-            base.unionByName(exact_copies)
-            .unionByName(revealed)
-            .localCheckpoint(eager=False)
-        )
-        _TIERED_MEMO[key] = tiered_dedupe(aug, line_min_dup_docs=5)
-    return _TIERED_MEMO[key]
+    base = _docs_par(spark, sf_dir).select(
+        "doc_id",
+        F.concat_ws(
+            "\n",
+            F.concat(F.lit("header source "), F.col("source")),
+            F.col("text"),
+            F.lit("copyright footer all rights reserved"),
+        ).alias("text"),
+    )
+    # make every tier boundary non-vacuous (the raw sf tables carry no
+    # exact duplicates): 30 verbatim copies die at tier 0; 30 "revealed"
+    # copies differ from their base ONLY by a banner line that the line
+    # tier blocklists (30 docs >= the 5-doc threshold), so they become
+    # byte-identical to their base afterwards and die at tier 1b —
+    # exactly the re-digest rationale in extras/tiered.py
+    exact_copies = base.where(F.col("doc_id") < 30).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+    )
+    revealed = base.where(
+        (F.col("doc_id") >= 30) & (F.col("doc_id") < 60)
+    ).select(
+        (F.col("doc_id") + 2_000_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit("\nseasonal promo banner line")).alias(
+            "text"
+        ),
+    )
+    # lazily materialize the augmented input once: tier 0 reads its
+    # input lineage 2-3x (digest agg + keep semi-join + docs_in count) —
+    # without this each read re-runs the concat_ws augmentation chain
+    aug = (
+        base.unionByName(exact_copies)
+        .unionByName(revealed)
+        .localCheckpoint(eager=False)
+    )
+    return tiered_dedupe(aug, line_min_dup_docs=5)
 
 
 def _q_tiered_dedupe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1496,7 +893,10 @@ def _q_kernel_fp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = keys.join(_shingled_docs(spark, sf_dir), "doc_id").select(
         "doc_id", "text_key", "_sh"
     )
-    planted = base.where(F.col("doc_id") < 50)
+    # planted copies get fresh ids so the union keeps doc_id unique
+    planted = base.where(F.col("doc_id") < 50).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text_key", "_sh"
+    )
     # no checkpoint here: each arm's re-read only re-runs a cheap join
     # against the already-cached shingle memo (a lazy checkpoint of this
     # union measured 6.2 s cold vs 2.6 s without — the materialization of
@@ -1786,13 +1186,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "substring_dup_pairs": _q_substring_dups,
         "substring_span_removal": _q_substring_span_removal,
         "html_blocks": _q_html_blocks,
-        "media_meta_features": _q_media_meta_features,
-        "wav_features": _q_wav_features,
-        "ppm_decode_resize": _q_ppm_decode_resize,
-        "media_fp_stats": _q_media_fp_stats,
-        "image_near_dup": _q_image_near_dup,
-        "audio_near_dup": _q_audio_near_dup,
-        "video_frame_plan": _q_video_frame_plan,
         "pricing_rollup": _q_pricing_rollup,
         "status_pivot": _q_status_pivot,
         "user_sessions": _q_user_sessions,
@@ -2311,150 +1704,6 @@ def oracle_sql() -> dict[str, str]:
                    regexp_replace(text, '^\\s+|\\s+$', '', 'g') AS block_text
             FROM documents
             WHERE regexp_replace(text, '^\\s+|\\s+$', '', 'g') <> ''
-        """,
-        "wav_features": """
-            WITH s AS (
-              SELECT doc_id,
-                     rpad(regexp_replace(text, '[^ -~]', '', 'g'), 256, ' ') AS a
-              FROM documents),
-            sums AS (
-              SELECT doc_id,
-                     CAST(SUM(unicode(substr(a, CAST(i AS INT), 1))) AS BIGINT) AS sample_sum
-              FROM s, range(1, 257) t(i) GROUP BY doc_id)
-            SELECT doc_id AS media_id,
-                   CAST(8000 AS BIGINT) AS sample_rate,
-                   CAST(1 AS BIGINT) AS n_channels,
-                   CAST(256 AS BIGINT) AS n_frames,
-                   CAST(32 AS BIGINT) AS duration_ms,
-                   sample_sum
-            FROM sums
-        """,
-        "ppm_decode_resize": """
-            -- full-res decode sum + nearest-neighbor 16x16 -> 8x8 resize sum
-            -- (strided sampling: output cell (i,j,c) reads payload byte
-            -- (2i*16 + 2j)*3 + c, 0-based), packed per media_id
-            WITH s AS (
-              SELECT doc_id,
-                     rpad(regexp_replace(text, '[^ -~]', '', 'g'), 768, ' ') AS a
-              FROM documents),
-            full_sums AS (
-              SELECT doc_id,
-                     CAST(SUM(unicode(substr(a, CAST(i AS INT), 1))) AS BIGINT) AS pixel_sum
-              FROM s, range(1, 769) t(i) GROUP BY doc_id),
-            rs_sums AS (
-              SELECT doc_id,
-                     CAST(SUM(unicode(substr(a,
-                       CAST((2*i*16 + 2*j)*3 + c + 1 AS INT), 1))) AS BIGINT)
-                       AS resized_pixel_sum
-              FROM s, range(0, 8) ti(i), range(0, 8) tj(j), range(0, 3) tc(c)
-              GROUP BY doc_id)
-            SELECT f.doc_id AS media_id,
-                   CAST(16 AS BIGINT) AS width,
-                   CAST(16 AS BIGINT) AS height,
-                   f.pixel_sum,
-                   CAST(8 AS BIGINT) AS resized_width,
-                   CAST(8 AS BIGINT) AS resized_height,
-                   r.resized_pixel_sum
-            FROM full_sums f JOIN rs_sums r USING (doc_id)
-        """,
-        "media_fp_stats": """
-            WITH src AS (
-              SELECT k.kind, s.doc_id,
-                     rpad(s.src0, CASE WHEN k.kind IN ('audio_fp', 'gif_ahash') THEN 256
-                                       WHEN k.kind IN ('jpeg_ahash', 'avi_mjpeg') THEN 64
-                                       ELSE 768 END, ' ') AS src
-              FROM (SELECT doc_id, regexp_replace(text, '[^ -t]', '', 'g') AS src0
-                    FROM documents WHERE doc_id < 120) s
-              CROSS JOIN (SELECT unnest(['image_ahash', 'audio_fp', 'png_ahash', 'jpeg_ahash', 'gif_ahash', 'avi_mjpeg']) AS kind) k),
-            all_rows AS (
-              SELECT kind, src FROM src
-              UNION ALL SELECT kind, src FROM src WHERE doc_id < 50
-              UNION ALL SELECT kind, src FROM src WHERE doc_id >= 50 AND doc_id < 100),
-            g AS (SELECT kind, src, count(*) AS n FROM all_rows GROUP BY kind, src)
-            SELECT kind,
-                   CAST(count(*) AS BIGINT) AS n_src_groups,
-                   CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_groups,
-                   CAST(0 AS BIGINT) AS n_violations
-            FROM g GROUP BY kind
-        """,
-        "image_near_dup": """
-            WITH s AS (
-              SELECT doc_id AS media_id,
-                     """ + " || ".join(f"md5(text || '|{i}')" for i in range(24)) + """ AS a
-              FROM documents WHERE doc_id < 120),
-            all_rows AS (
-              SELECT media_id, a FROM s
-              UNION ALL SELECT media_id + 1000000, a FROM s WHERE media_id < 50
-              UNION ALL SELECT media_id + 2000000, '!!!' || substr(a, 4)
-                FROM s WHERE media_id >= 50 AND media_id < 100),
-            cells AS (
-              SELECT media_id,
-                list_transform(range(0, 64), k ->
-                  unicode(substr(a, CAST((2*(k//8)*16 + 2*(k%8))*3 + 1 AS INT), 1))
-                  + unicode(substr(a, CAST((2*(k//8)*16 + 2*(k%8))*3 + 2 AS INT), 1))
-                  + unicode(substr(a, CAST((2*(k//8)*16 + 2*(k%8))*3 + 3 AS INT), 1))) AS g
-              FROM all_rows),
-            packed AS (
-              SELECT media_id,
-                CAST(list_sum(list_transform(range(0, 32), k ->
-                  CASE WHEN 64 * g[CAST(k AS INT) + 1] > list_sum(g)
-                       THEN CAST(1 AS BIGINT) << k ELSE 0 END)) AS BIGINT) AS lo,
-                CAST(list_sum(list_transform(range(0, 32), k ->
-                  CASE WHEN 64 * g[CAST(k AS INT) + 33] > list_sum(g)
-                       THEN CAST(1 AS BIGINT) << k ELSE 0 END)) AS BIGINT) AS hi
-              FROM cells)
-            SELECT u.media_id AS u, v.media_id AS v
-            FROM packed u JOIN packed v ON u.media_id < v.media_id
-            WHERE bit_count(xor(u.lo, v.lo)) + bit_count(xor(u.hi, v.hi)) <= 3
-        """,
-        "audio_near_dup": f"""
-            WITH s AS (
-              SELECT doc_id AS media_id,
-                     rpad(regexp_replace(text, '[^ -t]', '', 'g'), 256, ' ') AS a
-              FROM documents WHERE doc_id < 120),
-            all_rows AS (
-              SELECT media_id, a FROM s
-              UNION ALL SELECT media_id + 1000000, a FROM s WHERE media_id < 50
-              UNION ALL SELECT media_id + 2000000,
-                        translate(a, '{_SHIFT_FROM.replace("'", "''")}',
-                                     '{_SHIFT_TO.replace("'", "''")}')
-                FROM s WHERE media_id >= 50 AND media_id < 100),
-            w AS (
-              SELECT media_id,
-                list_transform(range(0, 64), k ->
-                  unicode(substr(a, CAST(4*k + 1 AS INT), 1))
-                  + unicode(substr(a, CAST(4*k + 2 AS INT), 1))
-                  + unicode(substr(a, CAST(4*k + 3 AS INT), 1))
-                  + unicode(substr(a, CAST(4*k + 4 AS INT), 1))) AS w
-              FROM all_rows),
-            packed AS (
-              SELECT media_id,
-                CAST(list_sum(list_transform(range(0, 32), k ->
-                  CASE WHEN w[CAST((k + 1) % 64 AS INT) + 1] > w[CAST(k AS INT) + 1]
-                       THEN CAST(1 AS BIGINT) << k ELSE 0 END)) AS BIGINT) AS lo,
-                CAST(list_sum(list_transform(range(32, 64), k ->
-                  CASE WHEN w[CAST((k + 1) % 64 AS INT) + 1] > w[CAST(k AS INT) + 1]
-                       THEN CAST(1 AS BIGINT) << (k - 32) ELSE 0 END)) AS BIGINT) AS hi
-              FROM w)
-            SELECT u.media_id AS u, v.media_id AS v
-            FROM packed u JOIN packed v ON u.media_id < v.media_id
-            WHERE bit_count(xor(u.lo, v.lo)) + bit_count(xor(u.hi, v.hi)) <= 3
-        """,
-        "video_frame_plan": """
-            SELECT doc_id AS media_id,
-                   CAST(unnest(range(0, (doc_id % 10 + 1) * 1000, 500)) AS BIGINT) AS frame_ts
-            FROM documents
-            WHERE doc_id % 4 <> 0
-        """,
-        "media_meta_features": """
-            SELECT doc_id AS media_id,
-                   CASE WHEN doc_id % 3 IN (0, 1) THEN strlen(text) + 4
-                        ELSE strlen(text) END AS n_bytes,
-                   CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg'
-                        WHEN doc_id % 3 = 1 THEN 'image/png'
-                        ELSE 'application/octet-stream' END AS sniffed_mime,
-                   length(regexp_replace(text, '[^ hpx]', '', 'g')) AS bin0_count
-            FROM documents
         """,
         "pricing_rollup": """
             SELECT l_returnflag, l_linestatus, count(*) AS n,

@@ -2,11 +2,10 @@
 
 The in-tree codecs parse fully untrusted bytes (web-crawled media
 payloads). Their documented failure surface is ``ValueError`` /
-``NotImplementedError`` ONLY — the mapInPandas extractors in
-``extras/multimodal.py`` catch exactly those to route bad rows through
-``on_error`` handling; any other exception type escapes the row loop and
-kills the whole Arrow batch (and a bare ``StopIteration`` inside a
-generator-based batch iterator is silently swallowed, which is worse).
+``NotImplementedError`` ONLY, so a caller decoding many payloads can
+catch exactly those to skip a bad one; any other exception type would
+escape that handler (and a bare ``StopIteration`` inside a generator is
+silently swallowed, which is worse).
 
 Inside a parser, a truncated header surfaces as ``struct.error`` /
 ``IndexError``, a lying length field as ``KeyError`` on a table lookup,

@@ -11,11 +11,11 @@ are word-aligned: an odd-sized chunk is followed by one pad byte.
 This gives the repo an honest VIDEO decode path beyond animated GIF:
 ``avi_frames`` yields every frame with its per-frame duration, in the
 same ``(canvas, delay_ms)`` shape as ``gif_codec.gif_frames``, so the
-frame-sampling / perceptual-hash / near-dup machinery upstream
-(extras/multimodal.py) is container-agnostic.
+frame sampler and fingerprints in extras/multimodal.py are
+container-agnostic.
 
-Decoder scope (loud failure otherwise — the extractors' ``on_error``
-modes absorb corpus corruption):
+Decoder scope (loud ``ValueError`` / ``NotImplementedError`` otherwise —
+see ``_codec_util``):
 - uncompressed 24-bit DIB frames (``00db``, BI_RGB): bottom-up or
   top-down rows, BGR order, 4-byte row stride
 - MJPEG frames (``00dc``, 'MJPG'/'mjpg'): each frame is a baseline
@@ -27,12 +27,8 @@ modes absorb corpus corruption):
   NotImplementedError — those genuinely need ffmpeg
 
 The encoder exists for test/synthesis symmetry: DIB mode is lossless
-(distributed tests assert exact pixel equality across containers);
-MJPEG mode reuses ``encode_jpeg``'s near-lossless default table.
-
-Reference parity: the reference repo treats video as opaque binary with
-typed metadata only; this codec plus extract_video_frames is additive
-beyond-reference surface (SURVEY.md multimodal gap).
+(tests assert exact pixel equality across containers); MJPEG mode reuses
+``encode_jpeg``'s near-lossless default table.
 """
 
 from __future__ import annotations

@@ -12,11 +12,10 @@ dictionary to 12 bits, and reserves CLEAR / END codes at ``2^mcs`` and
 
 Because GIF89a carries multiple timed frames, it doubles as this repo's
 honest "video" decode path: ``gif_frames`` yields every presented canvas
-with its delay, which the frame-sampling plan (extras/multimodal.py) can
-feed for real instead of stubbing.
+with its delay, which the frame sampler in extras/multimodal.py consumes.
 
-Decoder scope (loud failure otherwise — the extractors' ``on_error``
-modes absorb corpus corruption):
+Decoder scope (loud ``ValueError`` / ``NotImplementedError`` otherwise —
+see ``_codec_util``):
 - GIF87a/GIF89a, global and local color tables, interlaced images,
   transparency, disposal methods 0-3 (draw-over / restore-background /
   restore-previous), multi-frame animations with per-frame delays
@@ -26,8 +25,8 @@ modes absorb corpus corruption):
 
 The encoder exists for test/synthesis symmetry: full-canvas frames over
 one global palette, optional interlace / transparency / disposal /
-delays, real LZW compression. Lossless, so distributed tests can assert
-exact pixel equality against the same pixels in other containers.
+delays, real LZW compression. Lossless, so tests can assert exact pixel
+equality against the same pixels in other containers.
 """
 
 from __future__ import annotations

@@ -12,8 +12,8 @@ markers resetting the DC predictors), dequantize, de-zigzag, IDCT with the
 orthonormal 8x8 DCT-II basis, upsample chroma, and convert JFIF YCbCr back
 to RGB.
 
-Decoder scope (loud failure on anything else — the extractors' permissive
-``on_error`` modes absorb corpus corruption):
+Decoder scope (loud ``ValueError`` / ``NotImplementedError`` on anything
+else — see ``_codec_util``):
 - baseline + extended sequential Huffman (SOF0/SOF1), 8-bit precision
 - 1-component grayscale and 3-component YCbCr with sampling factors 1-2
   (4:4:4, 4:2:2, 4:2:0); restart intervals (DRI/RSTn) supported
@@ -29,8 +29,7 @@ table-driven path it would use for a camera JPEG's optimized tables.
 
 The decoder is exercised against a hand-assembled spec fixture (flat gray
 block whose 7-bit entropy segment is derived by hand in the test),
-encoder roundtrips at tight tolerance, subsampling/restart variants, and
-the distributed aHash extractors.
+encoder roundtrips at tight tolerance, and subsampling/restart variants.
 """
 
 from __future__ import annotations

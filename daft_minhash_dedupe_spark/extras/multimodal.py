@@ -1,68 +1,31 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata.
+"""Pure-Python media decoders and perceptual fingerprints (numpy only).
 
-The Spark-side plumbing (schemas, Arrow batch shapes, mapInPandas
-signatures, partitioning) is real and tested. Decoding has two tiers:
+- Decoders: WAV/PCM audio (``decode_wav`` via stdlib ``wave``), binary
+  PPM/PGM (``decode_ppm``), and ``decode_image_real``, which dispatches
+  PNG / baseline JPEG / GIF payloads to a native decoder (Pillow) when one
+  is importable and to the in-tree codecs (``extras/png_codec.py``,
+  ``extras/jpeg_codec.py``, ``extras/gif_codec.py``) otherwise.
+- Video: ``video_frames_one`` decodes AVI (DIB / MJPEG,
+  ``extras/avi_codec.py``) and animated GIF into ``(frame, delay_ms)``
+  lists; ``_sample_frames`` keeps the frames a tick grid presents.
+- Fingerprints: ``ahash64`` (image), ``audio_fp64`` (audio) and
+  ``video_fp64`` (majority vote over frame hashes), all 64-bit signed ints
+  in integer arithmetic, so another engine recomputing them from the same
+  bytes gets identical bits.
 
-- REAL decoders for formats the standard library + numpy can parse:
-  WAV/PCM audio (``decode_wav`` via stdlib ``wave``), binary PPM/PGM
-  images (``decode_ppm``), PNG — including the compressed pixel
-  stream: zlib inflate + full scanline filter reconstruction + palette
-  lookup (``extras/png_codec.py``) — and baseline JPEG — markers, DHT
-  Huffman entropy decode, dequantize, IDCT, chroma upsample, YCbCr->RGB
-  (``extras/jpeg_codec.py``) — exercised end-to-end by the feature /
-  fingerprint extractors and oracle-checked driver queries.
-- Video decodes in-tree too: AVI containers with DIB or MJPEG streams
-  (RIFF walk + per-frame JPEG, ``extras/avi_codec.py``) and animated GIF
-  (LZW + frame compositing, ``extras/gif_codec.py``) feed the frame
-  sampler and the majority-vote video fingerprint. Still gated
-  (``NotImplementedError``): progressive/arithmetic JPEG (multi-scan
-  coefficient accumulation) and mp4/webm-style containers (need ffmpeg);
-  ``decode_image_stub`` (deterministic byte-histogram fake) stands in
-  where needed so the distributed dataflow stays fully testable.
+Every decoder fails with ``ValueError`` / ``NotImplementedError`` only
+(``extras/_codec_util.py``). Progressive/arithmetic JPEG and mp4/webm
+containers are rejected with ``NotImplementedError``.
 """
 
 from __future__ import annotations
 
 import io
 import wave
-from collections.abc import Iterator
 
 import numpy as np
 
 from daft_minhash_dedupe_spark.extras._codec_util import loud_decoder
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, "
-    "width int, height int, duration_ms long"
-)
-
-FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, feature array<float>"
-
-WAV_FEATURE_SCHEMA = (
-    "media_id long, sample_rate long, n_channels long, n_frames long, "
-    "duration_ms long, sample_sum long"
-)
-
-PPM_FEATURE_SCHEMA = "media_id long, width long, height long, pixel_sum long"
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Cheap metadata derivable without decoding: byte length + magic-number
-    sniffing (pure Catalyst on the binary column)."""
-    p = F.col(payload_col)
-    head = F.hex(F.substring(p, 1, 4))
-    return df.withColumn("n_bytes", F.length(p)).withColumn(
-        "sniffed_mime",
-        F.when(head.startswith("FFD8"), "image/jpeg")
-        .when(head.startswith("89504E47"), "image/png")
-        .when(head.startswith("47494638"), "image/gif")
-        .when(head.startswith("52494646"), "audio/wav")
-        .otherwise("application/octet-stream"),
-    )
 
 
 def _wav_samples(payload: bytes) -> tuple[dict, np.ndarray]:
@@ -75,7 +38,7 @@ def _wav_samples(payload: bytes) -> tuple[dict, np.ndarray]:
         frames = w.readframes(n)
     if width not in (1, 2):
         # 24/32-bit PCM would silently mis-decode as int16 garbage — fail
-        # loudly instead (routed through the extractors' on_error modes)
+        # loudly instead
         raise ValueError(f"unsupported WAV sample width: {width * 8}-bit PCM")
     dtype = np.uint8 if width == 1 else np.dtype("<i2")
     samples = np.frombuffer(frames, dtype=dtype)
@@ -92,8 +55,8 @@ def _wav_samples(payload: bytes) -> tuple[dict, np.ndarray]:
 def decode_wav(payload: bytes) -> dict:
     """REAL audio decode via stdlib ``wave``: parses the RIFF/WAVE header and
     PCM frames. Returns sample_rate/n_channels/n_frames/duration_ms plus the
-    exact integer sum of all 8-bit samples (an oracle-checkable content
-    feature; 16-bit samples are summed as signed int16)."""
+    exact integer sum of all 8-bit samples (16-bit samples are summed as
+    signed int16)."""
     params, samples = _wav_samples(payload)
     return {**params, "sample_sum": int(samples.astype(np.int64).sum())}
 
@@ -105,10 +68,8 @@ def audio_fp64(samples: np.ndarray, n_windows: int = 64) -> int:
 
     Differences of window means cancel any constant DC offset, so a
     uniformly offset copy of the same audio fingerprints identically — the
-    analogue of aHash's brightness invariance, and the property the
-    ``audio_fp_stats`` driver oracle pins. Near-duplicates (a short local
-    perturbation) flip only the bits whose windows they touch, so the
-    SimHash banding + Hamming-verify machinery clusters them unchanged."""
+    analogue of aHash's brightness invariance. Near-duplicates (a short
+    local perturbation) flip only the bits whose windows they touch."""
     x = samples.astype(np.float64)
     n = len(x)
     bounds = (np.arange(n_windows + 1) * n) // n_windows
@@ -163,10 +124,10 @@ def _native_image_decoder():
     """Resolve a native image decoder (Pillow) once per interpreter and cache
     the result — on a real cluster deployment with Pillow on the executors
     the compressed-format hot path runs at C speed with zero config, while
-    this container (no Pillow) falls back to the in-tree numpy codecs. The
+    a host without Pillow falls back to the in-tree numpy codecs. The
     resolved callable returns the same (H, W, channels) uint8 layout the
-    in-tree decoders produce, so every downstream extractor is
-    decoder-agnostic. Returns None when no native library is importable."""
+    in-tree decoders produce, so every caller is decoder-agnostic. Returns
+    None when no native library is importable."""
     global _NATIVE_IMAGE_DECODER
     if _NATIVE_IMAGE_DECODER == "unresolved":
         try:
@@ -203,10 +164,8 @@ def decode_image_real(payload: bytes) -> np.ndarray:
     speed — for the shared-support set (8-bit gray/LA/RGB/RGBA/palette,
     baseline JPEG; channel shapes match the in-tree codecs by construction).
     Formats the in-tree codecs gate (progressive JPEG, 16-bit, Adam7
-    interlace) DO decode on the native path instead of routing through
-    ``on_error`` — a deliberate capability upgrade on real clusters, not a
-    parity bug. The mapInPandas plumbing below is agnostic to which decoder
-    is plugged in."""
+    interlace) DO decode on the native path instead of raising — a
+    deliberate capability upgrade, not a parity bug."""
     if payload.startswith((b"P6", b"P5")):
         return decode_ppm(payload)
     compressed = payload.startswith(
@@ -236,153 +195,11 @@ def decode_image_real(payload: bytes) -> np.ndarray:
     )
 
 
-def decode_image_stub(payload: bytes, n_features: int = 8) -> np.ndarray:
-    """Deterministic fake 'decoder': derives a feature vector from the bytes
-    (length + hashed byte histogram). Stands in for decode→resize→embed so
-    the distributed plumbing is fully testable."""
-    if payload is None:
-        return np.zeros(n_features, dtype=np.float32)
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    hist = np.bincount(arr % n_features, minlength=n_features).astype(np.float32)
-    denom = float(len(arr)) if len(arr) else 1.0
-    return hist / denom
-
-
-def pixels_to_features(arr: np.ndarray, n_features: int = 8) -> np.ndarray:
-    """Reduce a decoded (H, W, C) uint8 pixel array to a length-``n_features``
-    float32 vector: normalized luminance histogram (mean over channels,
-    ``n_features`` equal-width bins over [0, 256)). Keeps the real-decoder
-    path's output shape identical to the stub's, so FEATURE_SCHEMA's
-    ``feature array<float>`` holds for both."""
-    gray = np.asarray(arr, dtype=np.float32).mean(axis=2).reshape(-1)
-    hist, _ = np.histogram(gray, bins=n_features, range=(0.0, 256.0))
-    denom = float(gray.size) if gray.size else 1.0
-    return (hist / denom).astype(np.float32)
-
-
-def extract_media_features(
-    df: DataFrame,
-    n_features: int = 8,
-    use_real_decoder: bool = False,
-    on_error: str = "fail",
-) -> DataFrame:
-    """mapInPandas feature extraction over Arrow batches of binary payloads.
-
-    Batch shape: the iterator yields pandas DataFrames whose ``payload``
-    column holds raw bytes; output conforms to FEATURE_SCHEMA. Partitioning
-    is preserved (narrow op — no shuffle). With ``use_real_decoder`` the
-    payload is pixel-decoded (PPM/PNG/JPEG/GIF) and reduced to an
-    ``n_features``-bin luminance histogram; the stub derives the vector
-    from raw bytes without decoding. ``on_error`` follows the shared
-    extractor contract (`_decode_rows`): 'fail' re-raises, 'skip' drops the
-    row, 'null' keeps it with a null feature — with the real decoder a
-    mixed-kind or corrupt payload must not kill a 100-TB job."""
-
-    def _featurize(p: bytes) -> np.ndarray:
-        if not use_real_decoder:
-            return decode_image_stub(p, n_features)
-        if p is None:
-            return np.zeros(n_features, dtype=np.float32)
-        return pixels_to_features(decode_image_real(p), n_features)
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                try:
-                    feat = _featurize(p).tolist()
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    feat = None
-                recs.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "n_bytes": len(p) if p is not None else 0,
-                        "feature": feat,
-                    }
-                )
-            # object dtype keeps None intact for Arrow's schema-directed
-            # conversion (same convention as _decode_rows)
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "kind", "n_bytes", "feature"],
-                dtype=object,
-            )
-
-    return df.mapInPandas(_extract, schema=FEATURE_SCHEMA)
-
-
-def _decode_rows(pdf, payload_col, decode_one, null_fields, on_error):
-    """Shared permissive-decode loop for the media extractors.
-
-    A 100-TB corpus WILL contain corrupt payloads, and a single bad row must
-    not kill the job: ``on_error='fail'`` re-raises (default — correct for
-    trusted fixtures), ``'skip'`` drops the row, ``'null'`` keeps the row
-    with null feature fields so corruption stays countable downstream."""
-    recs = []
-    for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-        try:
-            r = decode_one(p)
-        except Exception:
-            if on_error == "fail":
-                raise
-            if on_error == "skip":
-                continue
-            r = {k: None for k in null_fields}
-        recs.append({"media_id": mid, **r})
-    # object dtype keeps None intact for Arrow's schema-directed conversion
-    return pd.DataFrame(
-        recs, columns=["media_id", *null_fields], dtype=object
-    )
-
-
-def extract_wav_features(
-    df: DataFrame, payload_col: str = "payload", on_error: str = "fail"
-) -> DataFrame:
-    """REAL WAV decoding over Arrow batches (mapInPandas, narrow — no
-    shuffle): header params + exact PCM sample sum per payload."""
-    fields = ("sample_rate", "n_channels", "n_frames", "duration_ms", "sample_sum")
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_rows(pdf, payload_col, decode_wav, fields, on_error)
-
-    return df.mapInPandas(_extract, schema=WAV_FEATURE_SCHEMA)
-
-
-def extract_ppm_features(
-    df: DataFrame, payload_col: str = "payload", on_error: str = "fail"
-) -> DataFrame:
-    """REAL PPM/PGM decoding over Arrow batches: dimensions + exact pixel
-    sum per payload."""
-
-    def _one(p):
-        arr = decode_ppm(p)
-        return {
-            "width": arr.shape[1],
-            "height": arr.shape[0],
-            "pixel_sum": int(arr.astype(np.int64).sum()),
-        }
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_rows(
-                pdf, payload_col, _one, ("width", "height", "pixel_sum"), on_error
-            )
-
-    return df.mapInPandas(_extract, schema=PPM_FEATURE_SCHEMA)
-
-
 def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor image resize via integer index sampling (numpy-only,
     deterministic): output cell (i, j) takes source pixel
     (i*H // out_h, j*W // out_w). For exact integer downscale factors this is
-    plain strided sampling — e.g. 16×16 → 8×8 reads every other pixel —
-    which is what makes the resized pixel sums SQL-oracle-checkable."""
+    plain strided sampling — e.g. 16×16 → 8×8 reads every other pixel."""
     rows = (np.arange(out_h) * arr.shape[0]) // out_h
     cols = (np.arange(out_w) * arr.shape[1]) // out_w
     return arr[rows][:, cols]
@@ -391,22 +208,19 @@ def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 def ahash64(arr: np.ndarray, grid: int = 8) -> int:
     """Perceptual average-hash: grayscale (channel mean) → nearest-resize to
     grid×grid → bit k set iff cell k (row-major) > grid mean. 64-bit for the
-    default grid, returned as signed int64 to match Spark LongType.
+    default grid, returned as signed int64.
 
     Invariances that make it a *perceptual* fingerprint rather than a byte
     hash: a uniform brightness shift moves every cell and the mean equally,
     so the hash is unchanged; pixels not on the sampling grid don't
     contribute, so sub-sample noise is ignored. Near-duplicates land within
-    a small Hamming distance, so the SimHash banding/CC machinery clusters
-    them unchanged (same 64-bit-fingerprint shape).
+    a small Hamming distance.
 
     All-integer arithmetic: the threshold `cell > mean` is evaluated as
     `n_cells * channel_sum(cell) > total_sum` (channel SUM is a monotone
     scaling of the channel mean, and clearing the denominators keeps every
     comparison exact) — so an independent engine recomputing the hash from
-    the same bytes gets bit-identical results, with no float-tie hazard.
-    This is what lets the `image_near_dup` driver oracle recompute the hash
-    in SQL."""
+    the same bytes gets bit-identical results, with no float-tie hazard."""
     gray = (
         arr.astype(np.int64).sum(axis=2) if arr.ndim == 3 else arr.astype(np.int64)
     )
@@ -416,274 +230,6 @@ def ahash64(arr: np.ndarray, grid: int = 8) -> int:
     for k in np.nonzero(bits)[0]:
         val |= np.uint64(1) << np.uint64(int(k))
     return int(val.astype(np.int64))
-
-
-RESIZED_SCHEMA = "media_id long, width long, height long, pixel_sum long"
-AHASH_SCHEMA = "media_id long, src string, ahash long"
-
-
-def extract_resized_ppm_features(
-    df: DataFrame,
-    out_h: int,
-    out_w: int,
-    payload_col: str = "payload",
-    on_error: str = "fail",
-) -> DataFrame:
-    """REAL decode→resize over Arrow batches (mapInPandas, narrow): PPM/PGM
-    parse, nearest-neighbor resize, output dims + exact resized pixel sum."""
-
-    def _one(p):
-        small = resize_nearest(decode_ppm(p), out_h, out_w)
-        return {
-            "width": small.shape[1],
-            "height": small.shape[0],
-            "pixel_sum": int(small.astype(np.int64).sum()),
-        }
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_rows(
-                pdf, payload_col, _one, ("width", "height", "pixel_sum"), on_error
-            )
-
-    return df.mapInPandas(_extract, schema=RESIZED_SCHEMA)
-
-
-PPM_FULL_RESIZED_SCHEMA = (
-    "media_id long, width long, height long, pixel_sum long, "
-    "resized_width long, resized_height long, resized_pixel_sum long"
-)
-
-
-def extract_ppm_features_with_resize(
-    df: DataFrame,
-    out_h: int,
-    out_w: int,
-    payload_col: str = "payload",
-    on_error: str = "fail",
-) -> DataFrame:
-    """Full-res PPM features AND nearest-neighbor-resized features from ONE
-    decode per payload. Row-equal to
-    ``extract_ppm_features(df).join(extract_resized_ppm_features(df, h, w)
-    .withColumnRenamed(...), "media_id")`` but decodes each payload once and
-    removes the join/shuffle entirely (r6 optimization: the two separate
-    extractors each ran the full parse over the same bytes)."""
-
-    def _one(p):
-        arr = decode_ppm(p)
-        small = resize_nearest(arr, out_h, out_w)
-        return {
-            "width": arr.shape[1],
-            "height": arr.shape[0],
-            "pixel_sum": int(arr.astype(np.int64).sum()),
-            "resized_width": small.shape[1],
-            "resized_height": small.shape[0],
-            "resized_pixel_sum": int(small.astype(np.int64).sum()),
-        }
-
-    fields = (
-        "width",
-        "height",
-        "pixel_sum",
-        "resized_width",
-        "resized_height",
-        "resized_pixel_sum",
-    )
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_rows(pdf, payload_col, _one, fields, on_error)
-
-    return df.mapInPandas(_extract, schema=PPM_FULL_RESIZED_SCHEMA)
-
-
-def _fingerprint_rows(pdf, payload_col, src_col, out_col, fp_one, on_error):
-    """Permissive-decode loop for the fingerprint extractors (which carry a
-    ``src`` passthrough column): same fail/skip/null semantics as
-    ``_decode_rows``."""
-    srcs = pdf[src_col] if src_col else pdf["media_id"].astype(str)
-    recs = []
-    for mid, src, p in zip(pdf["media_id"], srcs, pdf[payload_col]):
-        try:
-            fp = fp_one(p)
-        except Exception:
-            if on_error == "fail":
-                raise
-            if on_error == "skip":
-                continue
-            fp = None
-        recs.append({"media_id": mid, "src": src, out_col: fp})
-    return pd.DataFrame(recs, columns=["media_id", "src", out_col], dtype=object)
-
-
-def extract_image_ahash(
-    df: DataFrame,
-    payload_col: str = "payload",
-    src_col: str | None = None,
-    on_error: str = "fail",
-) -> DataFrame:
-    """Decode (PPM/PGM) → perceptual average-hash, one signed-int64
-    fingerprint per image. ``src_col`` (optional) is carried through for
-    planted-invariant oracles (group by source, assert one hash per group)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _fingerprint_rows(
-                pdf, payload_col, src_col, "ahash",
-                lambda p: ahash64(decode_image_real(p)), on_error,
-            )
-
-    return df.mapInPandas(_extract, schema=AHASH_SCHEMA)
-
-
-AUDIO_FP_SCHEMA = "media_id long, src string, afp long"
-
-
-def extract_audio_fingerprint(
-    df: DataFrame,
-    payload_col: str = "payload",
-    src_col: str | None = None,
-    on_error: str = "fail",
-) -> DataFrame:
-    """Decode (WAV) → delta-sign audio fingerprint, one signed-int64 per
-    payload. ``src_col`` is carried through for planted-invariant oracles."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _fingerprint_rows(
-                pdf, payload_col, src_col, "afp",
-                lambda p: audio_fp64(_wav_samples(p)[1]), on_error,
-            )
-
-    return df.mapInPandas(_extract, schema=AUDIO_FP_SCHEMA)
-
-
-def audio_near_dup_pairs(
-    df: DataFrame,
-    payload_col: str = "payload",
-    node_col: str = "media_id",
-    max_hamming: int = 3,
-    max_bucket_pairwise: int = 64,
-) -> DataFrame:
-    """Audio near-duplicate candidate pairs over the same generic 64-bit
-    fingerprint machinery as SimHash / image aHash: banding bucket join +
-    exact Hamming verification — bucketed, never all-pairs."""
-    from daft_minhash_dedupe_spark.extras.simhash import simhash_candidates
-
-    fp = extract_audio_fingerprint(
-        df.select(F.col(node_col).alias("media_id"), payload_col)
-    ).select(F.col("media_id").alias(node_col), F.col("afp"))
-    return simhash_candidates(
-        fp,
-        fp_col="afp",
-        node_col=node_col,
-        max_hamming=max_hamming,
-        max_bucket_pairwise=max_bucket_pairwise,
-    )
-
-
-def image_near_dup_pairs(
-    df: DataFrame,
-    payload_col: str = "payload",
-    node_col: str = "media_id",
-    max_hamming: int = 3,
-    max_bucket_pairwise: int = 64,
-) -> DataFrame:
-    """Image near-duplicate candidate pairs: decode → aHash → SimHash-style
-    16-bit banding → bucket join → exact Hamming verification. Reuses the
-    generic 64-bit-fingerprint machinery (extras/simhash.py), so the scale
-    shape is identical: bucketed, never all-pairs.
-
-    With 4 bands over 64 bits, pigeonhole guarantees recall 1.0 for
-    ``max_hamming <= 3`` (≤3 flipped bits leave ≥1 of 4 bands intact), so as
-    long as no bucket overflows ``max_bucket_pairwise`` (which switches hot
-    buckets to star edges), the output is EXACTLY the set of all pairs with
-    Hamming ≤ 3 — the property the SQL oracle checks pair-for-pair."""
-    from daft_minhash_dedupe_spark.extras.simhash import simhash_candidates
-
-    fp = extract_image_ahash(
-        df.select(F.col(node_col).alias("media_id"), payload_col)
-    ).select(F.col("media_id").alias(node_col), F.col("ahash"))
-    return simhash_candidates(
-        fp,
-        fp_col="ahash",
-        node_col=node_col,
-        max_hamming=max_hamming,
-        max_bucket_pairwise=max_bucket_pairwise,
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per (media_id, frame_ts) without
-    decoding — the downstream decode stage consumes this exploded plan.
-    Demonstrates the explode-then-mapInPandas pattern for heavy media."""
-    return df.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts"),
-    )
-
-
-ANIMATION_FRAME_SCHEMA = (
-    "media_id long, frame_idx int, t_ms long, width int, height int, ahash long"
-)
-
-
-def extract_animation_frames(
-    df: DataFrame, payload_col: str = "payload", on_error: str = "fail"
-) -> DataFrame:
-    """REAL frame extraction from animated media (GIF89a via
-    extras/gif_codec.py): one output row per presented frame with its
-    cumulative timestamp and perceptual aHash — the decode stage the
-    ``frame_sample_plan`` explode feeds, done for real rather than stubbed.
-
-    Scale shape: mapInPandas is narrow (no shuffle); a media row fans out
-    to its frames inside the Arrow batch, so downstream frame-level
-    near-dup (banding over ``ahash``) reuses the generic 64-bit machinery.
-    ``on_error`` carries the usual fail/skip/null corpus-corruption modes
-    (null emits one frame_idx=-1 row so corruption stays countable)."""
-    from daft_minhash_dedupe_spark.extras.gif_codec import gif_frames
-
-    if on_error not in ("fail", "skip", "null"):
-        raise ValueError(f"on_error={on_error!r}")
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    frames = gif_frames(p)
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    recs.append(
-                        {"media_id": mid, "frame_idx": -1, "t_ms": None,
-                         "width": None, "height": None, "ahash": None}
-                    )
-                    continue
-                t = 0
-                for i, (canvas, delay_ms) in enumerate(frames):
-                    recs.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": i,
-                            "t_ms": t,
-                            "width": canvas.shape[1],
-                            "height": canvas.shape[0],
-                            "ahash": ahash64(canvas),
-                        }
-                    )
-                    t += delay_ms
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "frame_idx", "t_ms", "width", "height", "ahash"],
-                dtype=object,
-            )
-
-    return df.mapInPandas(_extract, schema=ANIMATION_FRAME_SCHEMA)
 
 
 def video_frames_one(payload: bytes) -> list:
@@ -722,76 +268,14 @@ def _sample_frames(frames: list, every_ms: int | None) -> list:
     return out
 
 
-def extract_video_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    every_ms: int | None = None,
-    on_error: str = "fail",
-) -> DataFrame:
-    """REAL video frame extraction + sampling: decode every frame
-    (container-dispatched), keep the frames a ``frame_sample_plan``-style
-    every_ms tick grid would present, and emit each with its timestamp and
-    perceptual aHash — the decode stage the plan explode feeds, done for
-    real over AVI and GIF payloads.
-
-    Scale shape: mapInPandas is narrow (no shuffle); one media row fans out
-    to its sampled frames inside the Arrow batch, and downstream frame- or
-    video-level near-dup reuses the generic 64-bit banding machinery.
-    ``on_error`` carries the usual fail/skip/null corpus-corruption modes
-    (null emits one frame_idx=-1 row so corruption stays countable)."""
-    if on_error not in ("fail", "skip", "null"):
-        raise ValueError(f"on_error={on_error!r}")
-    if every_ms is not None and every_ms <= 0:
-        raise ValueError("every_ms must be positive")
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                try:
-                    sampled = _sample_frames(video_frames_one(p), every_ms)
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    recs.append(
-                        {"media_id": mid, "frame_idx": -1, "t_ms": None,
-                         "width": None, "height": None, "ahash": None}
-                    )
-                    continue
-                for i, t, frame in sampled:
-                    recs.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": i,
-                            "t_ms": t,
-                            "width": frame.shape[1],
-                            "height": frame.shape[0],
-                            "ahash": ahash64(frame),
-                        }
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "frame_idx", "t_ms", "width", "height", "ahash"],
-                dtype=object,
-            )
-
-    return df.mapInPandas(_extract, schema=ANIMATION_FRAME_SCHEMA)
-
-
-VIDEO_FP_SCHEMA = "media_id long, vfp long, n_frames int"
-
-
 def video_fp64(frame_hashes: list[int]) -> int:
     """Video-level 64-bit fingerprint: strict per-bit majority vote over the
     sampled frames' aHashes. Any per-frame-invariant edit (exact copy,
     uniform brightness shift) preserves every frame hash and therefore the
     vote; a few changed/reordered frames flip only the bits near the
     majority boundary, so near-dup videos land within a small Hamming
-    distance — the same 64-bit shape SimHash / aHash / audio-fp feed into
-    the generic banding machinery. All-integer, so an independent engine
-    recomputing from the same frame hashes is bit-identical."""
+    distance. All-integer, so an independent engine recomputing from the
+    same frame hashes is bit-identical."""
     n = len(frame_hashes)
     if not n:
         raise ValueError("video_fp64 needs at least one frame hash")
@@ -805,58 +289,3 @@ def video_fp64(frame_hashes: list[int]) -> int:
         if 2 * counts[k] > n:
             val |= np.uint64(1) << np.uint64(k)
     return int(val.astype(np.int64))
-
-
-def extract_video_fingerprint(
-    df: DataFrame,
-    payload_col: str = "payload",
-    every_ms: int | None = None,
-    on_error: str = "fail",
-) -> DataFrame:
-    """Per-video fingerprint in ONE narrow pass: decode → sample → per-frame
-    aHash → majority vote, all inside the same mapInPandas batch (no
-    intermediate frame table, no shuffle). Output: (media_id, vfp,
-    n_frames)."""
-    if on_error not in ("fail", "skip", "null"):
-        raise ValueError(f"on_error={on_error!r}")
-
-    def _fp_one(p: bytes) -> dict:
-        sampled = _sample_frames(video_frames_one(p), every_ms)
-        hashes = [ahash64(frame) for _, _, frame in sampled]
-        return {"vfp": video_fp64(hashes), "n_frames": len(hashes)}
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_rows(
-                pdf, payload_col, _fp_one, ("vfp", "n_frames"), on_error
-            )
-
-    return df.mapInPandas(_extract, schema=VIDEO_FP_SCHEMA)
-
-
-def video_near_dup_pairs(
-    df: DataFrame,
-    payload_col: str = "payload",
-    node_col: str = "media_id",
-    every_ms: int | None = None,
-    max_hamming: int = 3,
-    max_bucket_pairwise: int = 64,
-) -> DataFrame:
-    """Video near-duplicate candidate pairs over the same generic 64-bit
-    machinery as SimHash / image aHash / audio fingerprints: majority-vote
-    video fingerprint → 16-bit banding bucket join → exact Hamming
-    verification — bucketed, never all-pairs, and 4-band pigeonhole keeps
-    recall 1.0 at max_hamming <= 3."""
-    from daft_minhash_dedupe_spark.extras.simhash import simhash_candidates
-
-    fp = extract_video_fingerprint(
-        df.select(F.col(node_col).alias("media_id"), payload_col),
-        every_ms=every_ms,
-    ).select(F.col("media_id").alias(node_col), F.col("vfp"))
-    return simhash_candidates(
-        fp,
-        fp_col="vfp",
-        node_col=node_col,
-        max_hamming=max_hamming,
-        max_bucket_pairwise=max_bucket_pairwise,
-    )

@@ -8,8 +8,8 @@ per scanline followed by the filtered bytes, where filters 0-4
 up / up-left neighbors. Decoding = parse IHDR, inflate, reverse the filter
 per scanline, reshape.
 
-Scope (raises on anything else, loudly — the permissive ``on_error`` modes
-of the extractors handle corpus corruption):
+Scope (raises ``ValueError`` / ``NotImplementedError`` on anything else,
+loudly — see ``_codec_util``):
 - bit depth 8; color types 0 (gray), 2 (RGB), 3 (palette via PLTE — the
   dominant flavor for icons/logos in web crawls), 4 (gray+alpha), 6 (RGBA)
 - interlace 0 (non-interlaced); Adam7 needs a 7-pass de-interleave this
@@ -17,8 +17,8 @@ of the extractors handle corpus corruption):
 - CRC verified on every chunk (corrupt payloads fail instead of decoding
   into garbage pixels)
 
-The encoder exists for test/synthesis symmetry (deterministic fixtures the
-driver oracle can reason about) and supports a per-row filter type so the
+The encoder exists for test/synthesis symmetry (deterministic fixtures)
+and supports a per-row filter type so the
 decoder's reconstruction of ALL five filters is exercised against
 hand-computed pixels, not just against this encoder's inverse.
 """

@@ -6,12 +6,10 @@ from daft_minhash_dedupe_spark.streaming.near_dedupe import (
     StreamingNearDedupe,
     streaming_near_dedupe,
 )
-from daft_minhash_dedupe_spark.streaming.sessionize import streaming_sessionize
 
 __all__ = [
     "StreamingNearDedupe",
     "streaming_exact_dedupe",
     "streaming_lang_counts",
     "streaming_near_dedupe",
-    "streaming_sessionize",
 ]

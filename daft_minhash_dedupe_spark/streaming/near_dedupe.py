@@ -44,9 +44,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from daft_minhash_dedupe_spark.config import DedupeConfig
-from daft_minhash_dedupe_spark.streaming.sessionize import _parse_duration_seconds
 
 _STATE_SCHEMA = "band_key long, last_ts timestamp, ts_bucket long, batch_id long"
+
+_UNIT_SECONDS = {
+    "milli": 0.001, "sec": 1.0, "min": 60.0, "hour": 3600.0,
+    "day": 86400.0, "week": 604800.0,
+}
+
+
+def _parse_duration_seconds(s: str) -> float:
+    """Spark CalendarInterval-style duration strings: '30 minutes', '1 min',
+    '1 hour 30 minutes', '90 seconds', ..."""
+    parts = s.split()
+    if not parts or len(parts) % 2:
+        raise ValueError(f"cannot parse duration {s!r}")
+    total = 0.0
+    for qty, unit in zip(parts[::2], parts[1::2]):
+        for prefix, mult in _UNIT_SECONDS.items():
+            if unit.lower().startswith(prefix):
+                total += float(qty) * mult
+                break
+        else:
+            raise ValueError(f"unknown duration unit {unit!r} in {s!r}")
+    return total
 
 
 def _epoch_seconds(col):

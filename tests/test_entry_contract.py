@@ -138,18 +138,28 @@ def test_oracle_rows_fit_driver_adjudication_window():
     assert [k for k in q[:len(o)] if k not in o] == []
 
 
-def test_media_doc_cap_in_sync_with_oracles():
-    """_media_docs filters Spark-side at MEDIA_DOC_CAP; the media oracles
-    hand-write the same literal in SQL. Changing the cap in one place but
-    not the other would silently compare different doc populations."""
-    import re
+def test_memo_drops_entries_of_an_earlier_application(monkeypatch):
+    """A new applicationId evicts every memo entry of the earlier one, so a
+    long-lived process does not pin frames of a stopped session."""
+    from types import SimpleNamespace
 
-    media = ("media_", "image_", "audio_", "video_", "wav_", "ppm_")
-    caps = [
-        int(m)
-        for name, sql in entry_mod.oracle_sql().items()
-        if name.startswith(media)
-        for m in re.findall(r"doc_id < (\d+)", sql)
-        if int(m) > 100  # below 100 = planted-structure slices, not the cap
-    ]
-    assert caps and all(c == entry_mod.MEDIA_DOC_CAP for c in caps)
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    monkeypatch.setattr(entry_mod, "_MEMO", {})
+    first, second = session("app-1"), session("app-2")
+    builds = []
+
+    def build(value):
+        builds.append(value)
+        return value
+
+    assert entry_mod._memo(first, ("a",), lambda: build("a1")) == "a1"
+    assert entry_mod._memo(first, ("b",), lambda: build("b1")) == "b1"
+    assert entry_mod._memo(first, ("a",), lambda: build("again")) == "a1"
+    assert builds == ["a1", "b1"]
+
+    assert entry_mod._memo(second, ("a",), lambda: build("a2")) == "a2"
+    assert builds == ["a1", "b1", "a2"]
+    assert {k[0] for k in entry_mod._MEMO} == {"app-2"}
+    assert list(entry_mod._MEMO) == [("app-2", "a")]

@@ -1,5 +1,5 @@
 """Extras: exact dedup, text analysis, simhash, ngram-jaccard, embedding ANN,
-multimodal plumbing, streaming dedup."""
+media decoders, streaming dedup."""
 
 import numpy as np
 import pytest
@@ -315,113 +315,6 @@ def test_hyperplane_band_bits_expr_matmul_parity(spark):
     }
 
 
-def test_streaming_sessionize_late_events_never_fragment(spark, tmp_path):
-    """Two late events arriving in separate batches, both older than the open
-    session, must merge into ONE session (emission waits for the watermark to
-    pass end+gap, so no admissible late event can split a session)."""
-    from daft_minhash_dedupe_spark.streaming import streaming_sessionize
-    import datetime as dt
-
-    def t(h, m=0):
-        return dt.datetime(2024, 1, 1, h, m)
-
-    src = tmp_path / "sess2_src"
-    src.mkdir()
-    schema = "user_id bigint, ts timestamp"
-
-    def _write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / name))
-
-    _write("b1", [(1, t(2, 0))])          # open session; watermark -> 01:00
-    _write("b2", [(1, t(1, 15))])         # late (>= watermark 01:00)
-    _write("b3", [(1, t(1, 20))])         # later late event, bridges b2's
-    _write("b4", [(9, t(20, 0))])         # advance watermark -> flush user 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        streaming_sessionize(stream, key_col="user_id", ts_col="ts")
-        .writeStream.format("memory")
-        .queryName("sessions_frag")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "sess2_ck"))
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("select * from sessions_frag").collect()
-    }
-    assert (1, t(1, 15), t(1, 20), 2) in rows  # merged, not two fragments
-    assert (1, t(2, 0), t(2, 0), 1) in rows
-    assert all(not (u == 1 and n == 1 and s == e == t(1, 15)) for u, s, e, n in rows)
-
-
-def test_streaming_sessionize_boundary_event_never_fragments(spark, tmp_path):
-    """Exact-boundary pin: with gap=30m and watermark exactly at
-    session_end + gap (02:30), an event at ts == watermark arriving in a
-    later batch must never fragment an emitted session. Empirically Spark's
-    stateful-op late filter drops ts <= watermark, so the 02:30 event is
-    dropped and two disjoint sessions is the batch-equivalent answer; if a
-    Spark version ever admits ts == wm, the strict-< finality in _flush
-    (sessionize.py) keeps the 02:00 session live so it merges to one session
-    of 3. Either way the fragmented outcome {(02:00,1),(02:30..02:45,2)} —
-    which a <= flush would produce under admit-at-boundary semantics — must
-    not appear."""
-    from daft_minhash_dedupe_spark.streaming import streaming_sessionize
-    import datetime as dt
-
-    def t(h, m=0):
-        return dt.datetime(2024, 1, 1, h, m)
-
-    src = tmp_path / "sess3_src"
-    src.mkdir()
-    schema = "user_id bigint, ts timestamp"
-
-    def _write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / name))
-
-    # b1 sets watermark to exactly 02:30 (max 03:30 - 1h delay)
-    _write("b1", [(1, t(2, 0)), (9, t(3, 30))])
-    # b2: key-1 event 45m later -> separate stored session; flush runs for
-    # key 1 with wm == 02:30 == first session end + gap (the boundary)
-    _write("b2", [(1, t(2, 45))])
-    # b3: event at exactly ts == wm == end + gap — admissible, bridges both
-    _write("b3", [(1, t(2, 30))])
-    _write("b4", [(8, t(23, 0))])  # advance watermark -> flush everything
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        streaming_sessionize(stream, key_col="user_id", ts_col="ts")
-        .writeStream.format("memory")
-        .queryName("sessions_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "sess3_ck"))
-        .start()
-    )
-    q.awaitTermination(180)
-    user1 = {
-        (r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql(
-            "select * from sessions_boundary where user_id = 1"
-        ).collect()
-    }
-    legal = (
-        {(t(2, 0), t(2, 0), 1), (t(2, 45), t(2, 45), 1)},  # 02:30 dropped late
-        {(t(2, 0), t(2, 45), 3)},  # 02:30 admitted -> merges everything
-    )
-    assert user1 in legal, user1  # never the fragmented {(2:00,1),(2:30-2:45,2)}
-
-
 def test_asof_join_semantics(spark):
     from daft_minhash_dedupe_spark.extras.temporal import asof_join
     import datetime as dt
@@ -564,112 +457,6 @@ def test_duplicate_ngram_fraction(spark):
     assert got == {0: 0.5, 1: 0.0, 2: 0.0}
 
 
-# -- multimodal plumbing -----------------------------------------------------
-
-
-def test_multimodal_feature_extraction(spark):
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        attach_media_metadata,
-        extract_media_features,
-        frame_sample_plan,
-    )
-
-    rows = [
-        (1, "image", b"\xff\xd8\xff\xe0fakejpeg", "image/jpeg", 4, 4, None),
-        (2, "image", b"\x89PNG\r\nfakepng", "image/png", 2, 2, None),
-        (3, "video", b"\x00\x01\x02", "video/mp4", None, None, 3500),
-        (4, "image", None, "image/jpeg", None, None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, mime string, width int, height int, duration_ms long",
-    )
-    meta = {r["media_id"]: r["sniffed_mime"] for r in attach_media_metadata(df).collect()}
-    assert meta[1] == "image/jpeg" and meta[2] == "image/png"
-
-    feats = {r["media_id"]: r for r in extract_media_features(df).collect()}
-    assert len(feats[1]["feature"]) == 8
-    assert feats[4]["n_bytes"] == 0
-    # deterministic stub: same payload → same features
-    feats2 = {r["media_id"]: r for r in extract_media_features(df).collect()}
-    assert feats[1]["feature"] == feats2[1]["feature"]
-
-    plan = frame_sample_plan(df, every_ms=1000).collect()
-    assert {(r["media_id"], r["frame_ts"]) for r in plan} == {(3, 0), (3, 1000), (3, 2000), (3, 3000)}
-
-    from daft_minhash_dedupe_spark.extras.multimodal import decode_image_real
-
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"x")
-
-
-def test_media_features_real_decoder_flat_vectors(spark):
-    """use_real_decoder=True must emit FLAT length-n_features float vectors
-    (regression: the real path used to .tolist() the raw (H,W,C) pixel
-    array, which Arrow cannot fit into `feature array<float>`)."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_media_features,
-        pixels_to_features,
-    )
-
-    dark = np.zeros((4, 4, 3), dtype=np.uint8)
-    light = np.full((4, 4, 3), 250, dtype=np.uint8)
-    rows = [
-        (1, "image", bytearray(b"P6\n4 4\n255\n" + dark.tobytes()), "image/x-ppm", 4, 4, None),
-        (2, "image", bytearray(b"P6\n4 4\n255\n" + light.tobytes()), "image/x-ppm", 4, 4, None),
-        (3, "image", None, "image/x-ppm", None, None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, mime string, width int, height int, duration_ms long",
-    )
-    got = {
-        r["media_id"]: r["feature"]
-        for r in extract_media_features(df, n_features=8, use_real_decoder=True).collect()
-    }
-    assert all(len(v) == 8 for v in got.values())
-    # histogram semantics: all-dark mass in bin 0, all-light mass in bin 7
-    assert got[1][0] == pytest.approx(1.0) and got[2][7] == pytest.approx(1.0)
-    assert got[3] == [0.0] * 8  # null payload -> zero vector, row kept
-    # kernel parity with the driver-side reduction
-    assert got[1] == pytest.approx(list(pixels_to_features(dark, 8)))
-
-
-def test_media_features_real_decoder_on_error_modes(spark):
-    """With the real decoder a mixed-kind or corrupt payload must not kill
-    the job: 'null' keeps the row with a null feature, 'skip' drops it,
-    'fail' (default) raises — the `_decode_rows` contract applied to
-    extract_media_features."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_media_features
-
-    dark = np.zeros((2, 2, 3), dtype=np.uint8)
-    rows = [
-        (1, "image", bytearray(b"P6\n2 2\n255\n" + dark.tobytes()), "image/x-ppm", 2, 2, None),
-        (2, "audio", bytearray(b"RIFF....WAVEnotanimage"), "audio/wav", None, None, None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, mime string, width int, height int, duration_ms long",
-    )
-    nulled = {
-        r["media_id"]: r["feature"]
-        for r in extract_media_features(
-            df, use_real_decoder=True, on_error="null"
-        ).collect()
-    }
-    assert len(nulled[1]) == 8 and nulled[2] is None
-    skipped = extract_media_features(
-        df, use_real_decoder=True, on_error="skip"
-    ).collect()
-    assert [r["media_id"] for r in skipped] == [1]
-    with pytest.raises(Exception, match="(?i)unrecognized image container"):
-        extract_media_features(df, use_real_decoder=True).collect()
-
-
 # -- streaming ---------------------------------------------------------------
 
 
@@ -701,65 +488,6 @@ def test_streaming_exact_dedupe(spark, tmp_path):
     out = spark.sql("select * from dedup_out").collect()
     texts = sorted(r["text"] for r in out)
     assert texts == ["other text", "same text"]
-
-
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization: in-batch closed sessions emit
-    immediately; open sessions flush via event-time timeout once the
-    watermark passes last_event + gap."""
-    from daft_minhash_dedupe_spark.streaming import streaming_sessionize
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    schema = "user_id bigint, ts timestamp"
-
-    def _write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / name)
-        )
-
-    import datetime as dt
-
-    def t(h, m=0):
-        return dt.datetime(2024, 1, 1, h, m)
-
-    # batch1: user 1 has a closed session (gap > 30min to the 02:00 event)
-    # and an open one; user 2 has one open session
-    _write("b1", [(1, t(0, 0)), (1, t(0, 10)), (1, t(2, 0)), (2, t(0, 0))])
-    # batch1b: a LATE event (within the 1h watermark) that extends user 1's
-    # open session backwards — must merge, not regress the session end
-    _write("b1b", [(1, t(1, 45))])
-    # batch2: advances the watermark to 09:00 (1h delay)
-    _write("b2", [(3, t(10, 0))])
-    # batch3: watermark 09:00 now visible to the state store -> user 1's
-    # (timeout 02:30) and user 2's (00:30) open sessions fire
-    _write("b3", [(4, t(20, 0))])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    out = streaming_sessionize(stream, key_col="user_id", ts_col="ts")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "sess_ck"))
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("select * from sessions_out").collect()
-    }
-    assert (1, t(0, 0), t(0, 10), 2) in rows  # closed within batch1
-    # the late 01:45 event merged into the open (02:00) session
-    assert (1, t(1, 45), t(2, 0), 2) in rows  # flushed by timeout
-    assert (2, t(0, 0), t(0, 0), 1) in rows  # flushed by timeout
-    # user 4's session (timeout 20:30) is past every watermark -> still open
-    assert all(u != 4 for u, *_ in rows)
 
 
 # -- substring dedupe ----------------------------------------------------------
@@ -868,40 +596,6 @@ def test_decode_ppm_variants():
         decode_image_real(b"\xff\xd8\xff\xe0fakejpeg")
 
 
-def test_wav_ppm_feature_extraction_distributed(spark):
-    """The real decoders through the mapInPandas plumbing."""
-    import io
-    import wave as wavemod
-
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_ppm_features,
-        extract_wav_features,
-    )
-
-    rows = []
-    for mid in range(6):
-        samples = (np.arange(64, dtype=np.uint8) + mid)
-        buf = io.BytesIO()
-        with wavemod.open(buf, "wb") as w:
-            w.setnchannels(1); w.setsampwidth(1); w.setframerate(16000)
-            w.writeframes(samples.tobytes())
-        rows.append((mid, bytearray(buf.getvalue())))
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r["media_id"]: r["sample_sum"] for r in extract_wav_features(df).collect()}
-    assert got == {mid: int((np.arange(64) + mid).sum()) for mid in range(6)}
-
-    prows = []
-    for mid in range(4):
-        pix = np.full(4 * 4 * 3, mid, dtype=np.uint8)
-        prows.append((mid, bytearray(b"P6\n4 4\n255\n" + pix.tobytes())))
-    pdf = spark.createDataFrame(prows, "media_id long, payload binary")
-    got = {r["media_id"]: (r["width"], r["height"], r["pixel_sum"])
-           for r in extract_ppm_features(pdf).collect()}
-    assert got == {mid: (4, 4, mid * 48) for mid in range(4)}
-
-
 def test_resize_nearest_and_ahash_unit():
     import numpy as np
 
@@ -932,62 +626,6 @@ def test_resize_nearest_and_ahash_unit():
     assert bin(np.uint64(ahash64(img3)) ^ np.uint64(h)).count("1") <= 2
 
 
-def test_image_ahash_planted_invariance_distributed(spark):
-    """Identical and uniformly-brightened copies must hash identically
-    through the full mapInPandas path (the perceptual property the
-    image_ahash_stats driver oracle pins at sf scale)."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for i in range(10):
-        base = rng.integers(0, 200, size=(16, 16, 3), dtype=np.uint8)
-        for j, arr in enumerate([base, base.copy(), (base + 20).astype(np.uint8)]):
-            rows.append(
-                (i * 10 + j, f"src{i}", bytearray(b"P6\n16 16\n255\n" + arr.tobytes()))
-            )
-    df = spark.createDataFrame(rows, "media_id long, src string, payload binary")
-    out = extract_image_ahash(df, src_col="src").toPandas()
-    assert out.groupby("src")["ahash"].nunique().max() == 1
-    assert out["src"].nunique() == 10
-
-
-def test_image_near_dup_pairs(spark):
-    """aHash + SimHash banding + Hamming verify: a mildly perturbed copy
-    (one flipped grid cell) pairs with its source; unrelated structured
-    images don't."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import image_near_dup_pairs
-
-    def block_img(pattern: np.ndarray) -> bytearray:
-        # 8x8 bit pattern -> 16x16 image of 0/200 blocks (values far from the
-        # mean so threshold jitter can't flip unrelated bits)
-        img = np.kron(pattern * 200, np.ones((2, 2), dtype=np.uint8))
-        img = np.repeat(img[:, :, None], 3, axis=2).astype(np.uint8)
-        return bytearray(b"P6\n16 16\n255\n" + img.tobytes())
-
-    rng = np.random.default_rng(3)
-    rows = []
-    for i in range(8):
-        pat = rng.integers(0, 2, size=(8, 8)).astype(np.uint8)
-        rows.append((2 * i, block_img(pat)))
-        near = pat.copy()
-        near[0, 0] ^= 1  # one grid cell flipped -> small Hamming distance
-        rows.append((2 * i + 1, block_img(near)))
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    pairs = {
-        tuple(sorted((r["u"], r["v"])))
-        for r in image_near_dup_pairs(df, max_hamming=3).collect()
-    }
-    want = {(2 * i, 2 * i + 1) for i in range(8)}
-    assert want <= pairs
-    # no cross-family merges: random 8x8 patterns differ in ~32 cells
-    assert all(a // 2 == b // 2 for a, b in pairs)
-
-
 def test_curate_corpus_each_gate(spark):
     """Every stage of the composed curation pipeline drops exactly its
     target: low quality, wrong language, exact duplicate, contaminated."""
@@ -1012,56 +650,6 @@ def test_curate_corpus_each_gate(spark):
     assert {"doc_id", "text", "quality", "lang"} <= cols
 
 
-def _wav_payload(samples) -> bytearray:
-    import io
-    import wave as wavemod
-
-    import numpy as np
-
-    buf = io.BytesIO()
-    with wavemod.open(buf, "wb") as w:
-        w.setnchannels(1); w.setsampwidth(1); w.setframerate(8000)
-        w.writeframes(np.asarray(samples, dtype=np.uint8).tobytes())
-    return bytearray(buf.getvalue())
-
-
-def test_media_decode_on_error_modes(spark):
-    """A corrupt payload among good ones: 'fail' raises, 'skip' drops the
-    row, 'null' keeps it with null feature fields — a single bad file must
-    never kill a corpus-scale job unless asked to."""
-    import numpy as np
-    import pytest as _pytest
-    from pyspark.errors.exceptions.captured import PythonException
-
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_image_ahash,
-        extract_ppm_features,
-        extract_wav_features,
-    )
-
-    pix = np.full(4 * 4 * 3, 7, dtype=np.uint8)
-    good = bytearray(b"P6\n4 4\n255\n" + pix.tobytes())
-    bad = bytearray(b"NOTANIMAGE")
-    df = spark.createDataFrame(
-        [(1, good), (2, bad), (3, good)], "media_id long, payload binary"
-    )
-
-    with _pytest.raises(PythonException):
-        extract_ppm_features(df).collect()
-    assert sorted(
-        r["media_id"] for r in extract_ppm_features(df, on_error="skip").collect()
-    ) == [1, 3]
-    rows = {r["media_id"]: r for r in extract_ppm_features(df, on_error="null").collect()}
-    assert rows[2]["pixel_sum"] is None and rows[1]["pixel_sum"] == 48 * 7
-    rows = {r["media_id"]: r for r in extract_image_ahash(df, on_error="null").collect()}
-    assert rows[2]["ahash"] is None and rows[1]["ahash"] is not None
-
-    wdf = spark.createDataFrame(
-        [(1, _wav_payload(np.arange(64))), (2, bad)], "media_id long, payload binary"
-    )
-    assert [r["media_id"] for r in extract_wav_features(wdf, on_error="skip").collect()] == [1]
-
-
 def test_audio_fp64_unit():
     import numpy as np
 
@@ -1077,30 +665,6 @@ def test_audio_fp64_unit():
     rng = np.random.default_rng(5)
     y = rng.integers(0, 200, size=256, dtype=np.uint8)
     assert audio_fp64(y) == audio_fp64(y + 20)
-
-
-def test_audio_near_dup_pairs(spark):
-    """A locally perturbed copy (one window rewritten) stays within Hamming 3
-    of its source and pairs up; unrelated random streams don't."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import audio_near_dup_pairs
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for i in range(8):
-        base = rng.integers(0, 200, size=256, dtype=np.uint8)
-        near = base.copy()
-        near[100:104] = 255  # exactly one 4-sample window -> <=2 delta bits
-        rows.append((2 * i, _wav_payload(base)))
-        rows.append((2 * i + 1, _wav_payload(near)))
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    pairs = {
-        tuple(sorted((r["u"], r["v"])))
-        for r in audio_near_dup_pairs(df, max_hamming=3).collect()
-    }
-    assert {(2 * i, 2 * i + 1) for i in range(8)} <= pairs
-    assert all(a // 2 == b // 2 for a, b in pairs)
 
 
 def test_asof_join_random_vs_bruteforce(spark):
@@ -1626,31 +1190,6 @@ def test_png_rejects_corruption_and_unsupported():
         decode_png(b"JUNK" * 4)
 
 
-def test_image_ahash_format_independent_png_vs_ppm(spark):
-    """The perceptual layer must not care about the container: the SAME
-    pixels shipped as PPM bytes and as PNG bytes (compressed, filtered)
-    produce the SAME aHash through the distributed extractor — real PNG
-    decode inside mapInPandas, not a stub."""
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-    from daft_minhash_dedupe_spark.extras.png_codec import encode_png
-
-    rng = np.random.RandomState(11)
-    imgs = [rng.randint(0, 256, size=(16, 16, 3), dtype=np.uint8) for _ in range(6)]
-    rows = []
-    for i, a in enumerate(imgs):
-        ppm = b"P6\n16 16\n255\n" + a.tobytes()
-        rows.append((i, "ppm", ppm))
-        rows.append((100 + i, "png", encode_png(a, filter_type=(i % 5))))
-    df = spark.createDataFrame(rows, "media_id long, src string, payload binary")
-    got = {
-        r["media_id"]: r["ahash"]
-        for r in extract_image_ahash(df, src_col="src").collect()
-    }
-    assert len(got) == 12
-    for i in range(6):
-        assert got[i] == got[100 + i], f"image {i}: PPM vs PNG ahash differ"
-
-
 def test_png_palette_roundtrip_and_rejection():
     """Color-type-3 (PLTE) path: index plane filters reconstruct exactly
     and the palette lookup expands to the right RGB; malformed palettes
@@ -1823,33 +1362,6 @@ def test_jpeg_rejects_unsupported_and_truncated():
         decode_jpeg(b"nope")
 
 
-def test_image_ahash_format_independent_jpeg_vs_ppm(spark):
-    """Same pixels as PPM bytes and as near-lossless JPEG bytes give the
-    SAME aHash through the distributed extractor. Pixels are drawn from
-    {32, 224} so the +/-2 coefficient-rounding error can never cross the
-    aHash mean threshold — equality is exact, no tolerance."""
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import encode_jpeg
-    from daft_minhash_dedupe_spark.extras.multimodal import extract_image_ahash
-
-    rng = np.random.RandomState(13)
-    imgs = [
-        np.where(rng.rand(16, 16, 3) < 0.5, 32, 224).astype(np.uint8)
-        for _ in range(6)
-    ]
-    rows = []
-    for i, a in enumerate(imgs):
-        rows.append((i, "ppm", b"P6\n16 16\n255\n" + a.tobytes()))
-        rows.append((100 + i, "jpeg", encode_jpeg(a, restart_interval=(i % 3))))
-    df = spark.createDataFrame(rows, "media_id long, src string, payload binary")
-    got = {
-        r["media_id"]: r["ahash"]
-        for r in extract_image_ahash(df, src_col="src").collect()
-    }
-    assert len(got) == 12
-    for i in range(6):
-        assert got[i] == got[100 + i], f"image {i}: PPM vs JPEG ahash differ"
-
-
 # -- GIF codec (LZW + animation frames) ----------------------------------------
 
 
@@ -1938,106 +1450,6 @@ def test_gif_rejects_corruption():
         decode_gif(b"JUNKJUNK")
     with _pytest.raises(ValueError):
         decode_gif(gif[: len(gif) // 2])  # truncated mid-stream
-
-
-def test_animation_frame_extraction_distributed(spark):
-    """REAL multi-frame decode through mapInPandas: per-frame rows with
-    cumulative timestamps and aHashes; the first frame's aHash equals the
-    same pixels shipped as PPM (gray identity palette makes GIF lossless
-    grayscale), and on_error='null' keeps corrupt payloads countable."""
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_animation_frames,
-        extract_image_ahash,
-    )
-
-    rng = np.random.RandomState(24)
-    gray_pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    frames_by_id = {}
-    rows = []
-    for mid in range(4):
-        n_frames = 1 + mid
-        frs = [rng.randint(0, 256, (16, 16), dtype=np.uint8) for _ in range(n_frames)]
-        frames_by_id[mid] = frs
-        rows.append(
-            (mid, encode_gif(frs, gray_pal, delays_ms=[40 * (i + 1) for i in range(n_frames)]))
-        )
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = extract_animation_frames(df).collect()
-    by_id = {}
-    for r in got:
-        by_id.setdefault(r["media_id"], []).append(r)
-    for mid, frs in frames_by_id.items():
-        rows_m = sorted(by_id[mid], key=lambda r: r["frame_idx"])
-        assert len(rows_m) == len(frs)
-        # cumulative delays: frame i starts at sum of delays of frames < i
-        want_t = 0
-        for i, r in enumerate(rows_m):
-            assert r["t_ms"] == want_t, (mid, i)
-            want_t += 40 * (i + 1)
-            assert (r["width"], r["height"]) == (16, 16)
-
-    # first-frame ahash equals the PPM ahash of the same gray pixels
-    ppm_rows = [
-        (100 + mid, b"P6\n16 16\n255\n" + gray_pal[frs[0]].tobytes())
-        for mid, frs in frames_by_id.items()
-    ]
-    pdf = spark.createDataFrame(ppm_rows, "media_id long, payload binary")
-    ppm_hash = {
-        r["media_id"] - 100: r["ahash"] for r in extract_image_ahash(pdf).collect()
-    }
-    first_hash = {
-        mid: next(r["ahash"] for r in rs if r["frame_idx"] == 0)
-        for mid, rs in by_id.items()
-    }
-    assert first_hash == ppm_hash
-
-    # corruption modes
-    bad = spark.createDataFrame(
-        [(0, rows[0][1]), (1, b"GIF89agarbage")], "media_id long, payload binary"
-    )
-    nulls = extract_animation_frames(bad, on_error="null").collect()
-    assert {r["media_id"]: r["frame_idx"] for r in nulls if r["ahash"] is None} == {1: -1}
-    skipped = extract_animation_frames(bad, on_error="skip").collect()
-    assert {r["media_id"] for r in skipped} == {0}
-
-
-def test_image_near_dup_across_containers(spark):
-    """The cross-format duplicate story end-to-end: the SAME image shipped
-    as PPM, PNG (Paeth-filtered), GIF (LZW), and near-lossless JPEG must
-    pair up as near-duplicates regardless of container — the extractor
-    dispatches per payload magic inside one mapInPandas pass, so a corpus
-    with mixed containers needs no per-format branching upstream."""
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import encode_jpeg
-    from daft_minhash_dedupe_spark.extras.multimodal import image_near_dup_pairs
-    from daft_minhash_dedupe_spark.extras.png_codec import encode_png
-
-    rng = np.random.RandomState(31)
-    gray_pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    rows = []
-    for i in range(3):
-        # blocky two-level pixels: far from the mean, so JPEG's +/-2
-        # rounding cannot flip aHash bits (Hamming 0 across containers)
-        pat = np.where(rng.rand(8, 8) < 0.5, 30, 210).astype(np.uint8)
-        img = np.kron(pat, np.ones((2, 2), dtype=np.uint8))
-        rgb = np.repeat(img[:, :, None], 3, axis=2)
-        rows.append((10 * i + 0, bytes(b"P6\n16 16\n255\n" + rgb.tobytes())))
-        rows.append((10 * i + 1, encode_png(rgb, filter_type=4)))
-        rows.append((10 * i + 2, encode_gif([img], gray_pal)))
-        rows.append((10 * i + 3, encode_jpeg(rgb)))
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    pairs = {
-        tuple(sorted((r["u"], r["v"])))
-        for r in image_near_dup_pairs(df, max_hamming=3).collect()
-    }
-    for i in range(3):
-        ids = [10 * i + j for j in range(4)]
-        for a in range(4):
-            for b in range(a + 1, 4):
-                assert (ids[a], ids[b]) in pairs, (i, a, b)
-    # distinct sources don't merge across families
-    assert all(u // 10 == v // 10 for u, v in pairs)
 
 
 def _avi_test_frames(seed=7, n=3):
@@ -2131,67 +1543,6 @@ def test_video_fp64_majority_vote():
     assert video_fp64([0b01, 0b10]) == 0  # even split: strict majority
     with pytest.raises(ValueError):
         video_fp64([])
-
-
-def test_extract_video_frames_distributed(spark):
-    """Mixed AVI + GIF payloads in one DataFrame decode in one narrow
-    mapInPandas pass; on_error modes absorb a corrupt payload."""
-    from daft_minhash_dedupe_spark.extras.avi_codec import encode_avi
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        ahash64,
-        extract_video_frames,
-    )
-
-    frames = _avi_test_frames(seed=11)
-    pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    rows = [
-        (0, encode_avi(frames, frame_ms=40, codec="dib")),
-        (1, encode_gif([f[:, :, 0] for f in frames], pal, delays_ms=[40, 40, 40])),
-        (2, b"RIFF broken"),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    ok = df.where("media_id < 2")
-    got = extract_video_frames(ok).collect()
-    expect = {(mid, i, 40 * i, ahash64(f)) for mid in (0, 1) for i, f in enumerate(frames)}
-    assert {(r["media_id"], r["frame_idx"], r["t_ms"], r["ahash"]) for r in got} == expect
-    assert all(r["width"] == 16 and r["height"] == 16 for r in got)
-    with pytest.raises(Exception):
-        extract_video_frames(df).collect()
-    nulls = extract_video_frames(df, on_error="null").collect()
-    assert {r["media_id"] for r in nulls if r["ahash"] is None} == {2}
-    assert len(extract_video_frames(df, on_error="skip").collect()) == 6
-
-
-def test_video_near_dup_across_containers(spark):
-    """The SAME video shipped as raw-DIB AVI, MJPEG AVI, and animated GIF
-    must pair up (fingerprints bit-identical across containers); distinct
-    videos must not."""
-    from daft_minhash_dedupe_spark.extras.avi_codec import encode_avi
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-    from daft_minhash_dedupe_spark.extras.multimodal import video_near_dup_pairs
-
-    pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    rows = []
-    for i in range(3):
-        frames = _avi_test_frames(seed=100 + i)
-        rows.append((10 * i + 0, encode_avi(frames, frame_ms=40, codec="dib")))
-        rows.append((10 * i + 1, encode_avi(frames, frame_ms=40, codec="mjpg")))
-        rows.append(
-            (10 * i + 2,
-             encode_gif([f[:, :, 0] for f in frames], pal, delays_ms=[40] * 3))
-        )
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    pairs = {
-        tuple(sorted((r["u"], r["v"])))
-        for r in video_near_dup_pairs(df, max_hamming=3).collect()
-    }
-    for i in range(3):
-        ids = [10 * i + j for j in range(3)]
-        for a in range(3):
-            for b in range(a + 1, 3):
-                assert (ids[a], ids[b]) in pairs, (i, a, b)
-    assert all(u // 10 == v // 10 for u, v in pairs)
 
 
 def test_jpeg_fill_bytes_between_segments():
@@ -3134,33 +2485,3 @@ def test_curate_corpus_split_gates_match_fused(spark):
     assert sorted(map(key, got.collect())) == sorted(map(key, fused.collect()))
 
 
-def test_ppm_fused_resize_matches_two_pass_join(spark):
-    """r6 optimization pin: the single-decode fused extractor must be
-    row-equal to the two separate extractors joined on media_id."""
-    from pyspark.sql import functions as F
-
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        extract_ppm_features,
-        extract_ppm_features_with_resize,
-        extract_resized_ppm_features,
-    )
-
-    docs = spark.range(6).select(
-        F.col("id").alias("media_id"),
-        F.concat(
-            F.lit(b"P6\n16 16\n255\n"),
-            F.encode(F.rpad(F.concat(F.lit("px"), F.col("id").cast("string")), 768, "x"), "utf-8"),
-        ).alias("payload"),
-    )
-    fused = extract_ppm_features_with_resize(docs, 8, 8)
-    joined = extract_ppm_features(docs).join(
-        extract_resized_ppm_features(docs, 8, 8).select(
-            "media_id",
-            F.col("width").alias("resized_width"),
-            F.col("height").alias("resized_height"),
-            F.col("pixel_sum").alias("resized_pixel_sum"),
-        ),
-        "media_id",
-    )
-    assert fused.columns == joined.columns
-    assert sorted(map(tuple, fused.collect())) == sorted(map(tuple, joined.collect()))
