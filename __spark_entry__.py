@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 from collections.abc import Callable
 
 import pandas as pd
@@ -971,10 +972,18 @@ def _q_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         algorithm="hash_to_min",
         driver_fallback_edges=100_000,
     )
+    # the returned frame reads the fold's edges lazily, so their directory
+    # lives in this application's memo: it is removed when a later
+    # application drops the memo, or at interpreter exit
+    edges_dir = _memo(
+        spark, ("incremental_edges_dir", sf_dir),
+        lambda: tempfile.TemporaryDirectory(prefix="incr_edges_"),
+    )
     new_assign, old_updates = incremental_assignments(
         b_bands,
         a_bands,
         a_assigns,
+        edges_dir.name,
         driver_fallback_edges=100_000,
     )
     merged = merge_assignment_tables(a_assigns, new_assign, old_updates)

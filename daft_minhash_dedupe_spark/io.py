@@ -86,29 +86,6 @@ def partitioned_save(
     )
 
 
-def bucketed_save(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 64,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by a join key so that
-    repeated joins/aggregations on that key are SHUFFLE-FREE at read time —
-    the co-located-join lever for tables reused across many pipeline runs
-    (e.g. the signatures or id_map tables of a 10^12-doc corpus that every
-    incremental dedup batch re-joins).
-
-    Spark bucketing requires the session catalog (``saveAsTable``); readers
-    get bucket metadata automatically via ``spark.table(table_name)``."""
-    w = df.write.mode("overwrite").format("parquet")
-    if sort_col:
-        w = w.bucketBy(n_buckets, bucket_col).sortBy(sort_col)
-    else:
-        w = w.bucketBy(n_buckets, bucket_col)
-    w.saveAsTable(table_name)
-
-
 @dataclass
 class StageCheckpointer:
     """Per-stage parquet checkpoints + resume + metrics.

@@ -17,9 +17,11 @@ Differences from the reference are purely physical, never semantic:
 
 - neighborhood minima use ``groupBy(u).agg(min(v))`` + join-back instead of
   ``collect_list`` + ``array_min`` (no giant per-node arrays at scale; min
-  gets map-side partial aggregation for free);
-- convergence checks are distributed anti-join counts
-  (edges.edge_sets_equal / pairs_equal) instead of the reference's
+  gets map-side partial aggregation for free); a label-propagation round is
+  one join and one ``groupBy(u).min`` over own ∪ neighbour labels, and
+  ``hash_to_min`` seeds min(u, neighbours) from the symmetrized edges;
+- convergence checks are one-job aggregate signatures confirmed by a
+  distributed anti-join count (edges.edge_sets_equal) instead of the reference's
   driver-side ``to_pydict()`` set comparison (:379-385) which collects the
   full edge list;
 - every iteration output is checkpointed (localCheckpoint by default,
@@ -135,45 +137,33 @@ def construct_assignments(edges: DataFrame) -> DataFrame:
     )
 
 
-def pairs_equal(a: DataFrame, b: DataFrame) -> bool:
-    """(u, rep) pair-set equality via distributed anti-joins, both directions
-    unioned into ONE job (reference :423-427 runs two driver round-trips)."""
-    diff = (
-        a.join(b, ["u", "rep"], "left_anti")
-        .unionByName(b.join(a, ["u", "rep"], "left_anti"))
-        .limit(1)
-    )
-    return diff.count() == 0
-
-
 def global_min_label_propagation(
     edges: DataFrame,
-    assignments: DataFrame,
+    assignments: DataFrame | None = None,
     max_iters: int = 100,
     checkpoint: Checkpoint = _local_checkpoint,
 ) -> DataFrame:
     """Diffuse the global minimum label over the undirected graph to a unique
-    fixed point (reference :429-505). Per-iteration: one join + one min-agg +
-    one join; labels checkpointed each round to sever lineage. Raises when
-    ``max_iters`` runs out first: a longer chain would come back split."""
+    fixed point (reference :429-505). ``assignments`` (u, rep) seeds the
+    labels; without it each node starts at min(u, neighbours), the
+    hash-to-min seed. Per round: own labels ∪ neighbours' labels (one join)
+    → min per node (one aggregate); labels checkpointed each round to sever
+    lineage. Raises when ``max_iters`` runs out first: a longer chain would
+    come back split."""
     sym = checkpoint(symmetrize(edges), "lp_edges")
+    if assignments is None:
+        assignments = _neighborhood_min(sym).withColumnRenamed("m", "rep")
     labels = checkpoint(
         assignments.select("u", F.col("rep").alias("label")), "lp_labels_0"
     )
     prev_sum = _labels_sum(labels)
     for i in range(max_iters):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("u").alias("v"), F.col("label").alias("_nl")),
-                "v",
+        labels_next = (
+            labels.unionByName(
+                sym.join(labels.withColumnRenamed("u", "v"), "v").select("u", "label")
             )
             .groupBy("u")
-            .agg(F.min("_nl").alias("nbr_min"))
-        )
-        labels_next = (
-            labels.join(nbr_min, "u", "left")
-            .select("u", F.least("label", "nbr_min").alias("label"))
-            .distinct()
+            .agg(F.min("label").alias("label"))
         )
         labels_next = checkpoint(labels_next, f"lp_labels_{i + 1}")
         next_sum = _labels_sum(labels_next)  # materializes the checkpoint too
@@ -220,18 +210,11 @@ def connected_components(
                 sorted(mapping.items()) or [], "u long, rep long"
             )
     if algorithm == "hash_to_min":
-        # no star contraction: initialize label(u) = min(u, min-neighbor) and
-        # diffuse. construct_assignments alone seeds rep = min OUTGOING
-        # neighbor, which on raw (bucket-min → member) edges can EXCEED u —
-        # star contraction normally reorients edges so that can't happen; the
-        # least(u, rep) init restores correctness for arbitrary edge sets.
+        # no star contraction: seed label(u) = min(u, neighbours) and diffuse.
         # Fastest option on low-diameter LSH graphs (~2× vs alternating);
         # star algorithms remain the safe choice for high-diameter graphs.
-        init = construct_assignments(edges).select(
-            "u", F.least("u", "rep").alias("rep")
-        )
         return global_min_label_propagation(
-            edges, init, max_iters=max_loops, checkpoint=checkpoint
+            edges, max_iters=max_loops, checkpoint=checkpoint
         )
 
     b = checkpoint(edges, "cc_edges_0")

@@ -41,15 +41,18 @@ def incremental_assignments(
     new_bands: DataFrame,
     old_bands: DataFrame,
     old_assignments: DataFrame,
+    edges_checkpoint_dir: str,
     algorithm: str = "hash_to_min",
     num_salts: int = 16,
-    edges_checkpoint_dir: str | None = None,
     driver_fallback_edges: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (new_assign, old_updates).
 
     new_bands / old_bands: (band_key, node) rows. old_assignments: (u, rep)
     for every non-isolated old node (rep = min id of its component).
+    edges_checkpoint_dir: where the fold's edges are written; the returned
+    frames read them lazily, so the directory must outlive them (on a
+    cluster, shared storage).
 
     new_assign:  (u, rep) for every new node that joined any cluster.
     old_updates: (u, rep) re-labels for old nodes whose cluster got merged
@@ -97,18 +100,6 @@ def incremental_assignments(
     # Union.rewriteConstraints ("key not found: v#…"). Neither cache() nor
     # localCheckpoint() breaks the constraint linkage; a parquet round-trip
     # does (and is the same boundary the full pipeline places here anyway).
-    # On a cluster, pass a shared-storage dir; the tempfile default is for
-    # single-node sessions.
-    if edges_checkpoint_dir is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        edges_checkpoint_dir = tempfile.mkdtemp(prefix="incr_edges_")
-        # downstream DataFrames read this parquet lazily, so it can't be
-        # removed inline; reap it at interpreter exit instead of leaking
-        # one dir per increment in long-lived drivers
-        atexit.register(shutil.rmtree, edges_checkpoint_dir, ignore_errors=True)
     path = f"{edges_checkpoint_dir}/incremental_edges"
     nn_edges.unionByName(no_edges).write.mode("overwrite").parquet(path)
     edges = new_bands.sparkSession.read.parquet(path)

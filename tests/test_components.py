@@ -10,7 +10,6 @@ from daft_minhash_dedupe_spark.operators.components import (
     construct_assignments,
     global_min_label_propagation,
     large_star,
-    pairs_equal,
     small_star,
     union_find_components,
 )
@@ -89,14 +88,6 @@ def test_label_propagation_drives_to_global_min(spark):
     init = spark.createDataFrame([(1, 1), (2, 2), (3, 3), (4, 4)], "u long, rep long")
     got = _assign(global_min_label_propagation(e, init))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-
-
-def test_pairs_equal(spark):
-    a = spark.createDataFrame([(1, 1), (2, 1)], "u long, rep long")
-    b = spark.createDataFrame([(2, 1), (1, 1)], "u long, rep long")
-    c = spark.createDataFrame([(1, 1)], "u long, rep long")
-    assert pairs_equal(a, b)
-    assert not pairs_equal(a, c)
 
 
 @pytest.mark.parametrize("algorithm", ["alternating", "two_phase", "hash_to_min"])

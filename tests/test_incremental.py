@@ -95,7 +95,7 @@ def test_incremental_cli_chaining(spark, tmp_path):
 
 
 @pytest.mark.parametrize("seed,mod", [(21, 3), (5, 2)])
-def test_incremental_equals_full_run(spark, seed, mod):
+def test_incremental_equals_full_run(spark, seed, mod, tmp_path):
     raw, _ = generate_web_pages(spark, n_rows=240, seed=seed)
     pages = prepare_web_pages(raw)
     # split batches by id hash so duplicate families straddle the boundary
@@ -109,7 +109,9 @@ def test_incremental_equals_full_run(spark, seed, mod):
     _, a_bands, a_assigns = _stages(pipe, part_a)
     b_nodes, b_bands, _ = _stages(pipe, part_b)
 
-    new_assign, old_updates = incremental_assignments(b_bands, a_bands, a_assigns)
+    new_assign, old_updates = incremental_assignments(
+        b_bands, a_bands, a_assigns, str(tmp_path)
+    )
     merged_df = merge_assignment_tables(a_assigns, new_assign, old_updates)
     merged = {r["u"]: r["rep"] for r in merged_df.collect()}
 

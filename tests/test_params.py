@@ -91,12 +91,33 @@ def test_local_master_rewrite_adds_task_retries():
 
 
 def test_small_local_masters_run_the_serial_collector():
-    from daft_minhash_dedupe_spark.session import _local_gc_option as f
+    from daft_minhash_dedupe_spark.session import C2_THRESHOLDS
+    from daft_minhash_dedupe_spark.session import _local_driver_java_options as f
 
     # G1's pause-driven heap growth swung one run's footprint by ~0.8 GB;
-    # up to four task threads the serial collector keeps it steady
-    assert f("local[4,4]") == "-XX:+UseSerialGC"
-    assert f("local[1,4]") == "-XX:+UseSerialGC"
-    # wider local masters and cluster masters keep the JVM's default
-    assert f("local[32,4]") is None
+    # up to four task threads the serial collector keeps it steady. Every
+    # local master raises the C2 thresholds.
+    assert f("local[4,4]") == f"-XX:+UseSerialGC {C2_THRESHOLDS}"
+    assert f("local[1,4]") == f"-XX:+UseSerialGC {C2_THRESHOLDS}"
+    # wider local masters keep the JVM's collector; cluster masters get nothing
+    assert f("local[32,4]") == C2_THRESHOLDS
     assert f("spark://host:7077") is None
+
+
+def test_session_jvm_runs_the_compile_profile(spark):
+    """The live driver JVM runs C2 thresholds above the JDK 17 defaults, and
+    the codegen cache is sized to hold a run's generated classes (Spark's
+    default of 100 evicted the previous operation's plans)."""
+    jdk17_defaults = {
+        "Tier4InvocationThreshold": 5000,
+        "Tier4MinInvocationThreshold": 600,
+        "Tier4CompileThreshold": 15000,
+        "Tier4BackEdgeThreshold": 40000,
+    }
+    runtime = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(runtime.getRuntimeMXBean().getInputArguments())
+    tier4 = dict(a[len("-XX:"):].split("=") for a in args if a.startswith("-XX:Tier4"))
+    assert set(tier4) == set(jdk17_defaults), args
+    assert all(int(tier4[k]) > v for k, v in jdk17_defaults.items()), tier4
+    assert "-XX:+UseSerialGC" in args
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"

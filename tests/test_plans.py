@@ -73,31 +73,6 @@ def test_left_anti_join_plan(spark):
     assert "LeftAnti" in plan
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Co-located join: two tables bucketed on the join key must join with
-    ZERO Exchange nodes (the shuffle-free lever for reused 100-TB tables)."""
-    from daft_minhash_dedupe_spark.io import bucketed_save
-
-    a = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x"))
-    b = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("y"))
-    bucketed_save(a, "bkt_a", "k", n_buckets=8, sort_col="k")
-    bucketed_save(b, "bkt_b", "k", n_buckets=8, sort_col="k")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        plan = _plan(joined)
-        # sort-merge join straight off the bucket layout: no ShuffleExchange
-        # (broadcast disabled so the small test tables don't sidestep it)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
