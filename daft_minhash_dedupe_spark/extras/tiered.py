@@ -62,7 +62,6 @@ def tiered_dedupe(
     minhash_overrides: dict | None = None,
     run_minhash: bool = True,
     drop_empty_after_line: bool = True,
-    collect_metrics: bool = True,
 ) -> dict:
     """Run the tier cascade; returns {"survivors", "metrics", "cleaned_col"}.
 
@@ -70,7 +69,7 @@ def tiered_dedupe(
     rewrite tier: cleaned_text after the line tier, substr_text after the
     substr tier; "cleaned_col" names the final one) — one row per kept doc.
     metrics: list of {"tier", "docs_in", "docs_out"} dicts (counted at tier
-    boundaries; pass collect_metrics=False to stay fully lazy).
+    boundaries).
     """
     metrics: list[dict] = []
     _counts: dict[int, int] = {}
@@ -95,10 +94,7 @@ def tiered_dedupe(
         return _counts[k]
 
     def _record(tier: str, before: DataFrame, after: DataFrame) -> None:
-        if collect_metrics:
-            metrics.append(
-                {"tier": tier, "docs_in": _n(before), "docs_out": _n(after)}
-            )
+        metrics.append({"tier": tier, "docs_in": _n(before), "docs_out": _n(after)})
 
     # NOT materialized: tier 0's own boundary checkpoint below severs all
     # upstream lineage, so an eager copy of the RAW input here would be a
@@ -107,8 +103,8 @@ def tiered_dedupe(
     # source scan into the first (shrinking) tier. Measured at 2M short
     # blocks, dropping it cut the cascade's fixed cost materially (round 5).
     # The trade: tier 0 evaluates this lineage 2-3x (exact_dedupe reads its
-    # input for both the digest agg and the keep semi-join; collect_metrics
-    # adds a docs_in count) — cheap column-pruned scans for a stable source,
+    # input for both the digest agg and the keep semi-join; the metrics add
+    # a docs_in count) — cheap column-pruned scans for a stable source,
     # but the input MUST be deterministic across re-evaluations. A
     # nondeterministic frame (sample(), shuffling limit, changing view)
     # must be checkpointed by the caller first.
@@ -202,10 +198,7 @@ def tiered_dedupe(
 
 
 def tiered_stats(result: dict) -> DataFrame:
-    """Metrics as a one-row-per-tier DataFrame (for sinks/reporting).
-
-    Requires the tiered_dedupe call to have run with collect_metrics=True.
-    """
+    """Metrics as a one-row-per-tier DataFrame (for sinks/reporting)."""
     survivors = result["survivors"]
     spark = survivors.sparkSession
     return spark.createDataFrame(

@@ -75,11 +75,11 @@ C2_THRESHOLDS = (
 def _with_local_task_retries(master: str, max_failures: int = 4) -> str:
     """Rewrite ``local[N]``/``local[*]``/``local`` to ``local[N,F]``.
 
-    Local mode defaults to maxFailures=1: one Python-worker crash (a
-    throttle-window casualty on this sandbox — see BENCH/BASELINE.md §1) kills
-    the whole job, where a real cluster would retry the task up to
-    spark.task.maxFailures=4 times. Masters that already carry a failure count
-    (``local[8,2]``) and non-local masters pass through untouched. Bare
+    Local mode defaults to maxFailures=1: one Python-worker crash kills the
+    whole job (a 2×10⁷-doc run on a loaded host died of one), where a real
+    cluster would retry the task up to spark.task.maxFailures=4 times.
+    Masters that already carry a failure count (``local[8,2]``) and
+    non-local masters pass through untouched. Bare
     ``local`` means ONE thread in Spark, so it rewrites to ``local[1,4]`` —
     preserving parallelism, only adding retries.
     """

@@ -1,6 +1,7 @@
 """Connected components (reference tests:303-383) + union-find oracle parity."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -146,22 +147,63 @@ def test_driver_fallback_identical_to_distributed(spark):
     assert connected_components(empty, driver_fallback_edges=100).count() == 0
 
 
+def _cc_stress_edges(spark, n_nodes: int, star_size: int):
+    """Star-chained single component: n_nodes/star_size stars (leaf→hub
+    edges) whose hubs form one long chain — a component whose hub-chain
+    diameter (~n_nodes/star_size) is the worst shape for label-diffusion
+    CC. Star contraction must still converge in O(log diameter) rounds or
+    a boilerplate cluster (every page sharing one template) would never
+    finish."""
+    leaves = (
+        spark.range(n_nodes)
+        .where(F.col("id") % star_size != 0)
+        .select(
+            (F.col("id") - F.col("id") % star_size).alias("u"),
+            F.col("id").alias("v"),
+        )
+    )
+    n_hubs = n_nodes // star_size
+    chain = spark.range(n_hubs - 1).select(
+        (F.col("id") * star_size).alias("u"),
+        ((F.col("id") + 1) * star_size).alias("v"),
+    )
+    return leaves.unionByName(chain)
+
+
+class _RoundCounter:
+    """Checkpoint wrapper that records the per-phase iteration names the CC
+    loop passes it — the observable for max_loops-margin assertions."""
+
+    def __init__(self):
+        from daft_minhash_dedupe_spark.operators.components import _local_checkpoint
+
+        self.names: list[str] = []
+        self._inner = _local_checkpoint
+
+    def __call__(self, df, name):
+        self.names.append(name)
+        return self._inner(df, name)
+
+    def rounds(self) -> dict:
+        def max_idx(pat):
+            idxs = [int(m.group(1)) for n in self.names if (m := re.match(pat, n))]
+            return max(idxs, default=0)
+
+        return {
+            "small_star_rounds": max_idx(r"cc_edges_(\d+)$"),
+            "large_star_steps": sum(1 for n in self.names if n.startswith("cc_large_")),
+            "label_prop_iters": max_idx(r"lp_labels_(\d+)$"),
+        }
+
+
 def test_cc_star_chain_converges_with_max_loops_margin(spark):
-    """Star-chained worst case (bench --cc-stress at 25x smaller scale):
+    """Star-chained worst case, 25x smaller than a 10^6-node stress run:
     one component of 40k nodes whose 200-hub chain gives diameter ~200.
     Star contraction must converge in O(log diameter) rounds — assert a
     4x margin under the default max_loops=100 budget, and exact
     correctness (single component labeled by the global min)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from bench import RoundCounter, cc_stress_edges
-
-    from daft_minhash_dedupe_spark.operators.components import connected_components
-
-    edges = cc_stress_edges(spark, 40_000, 200).localCheckpoint(eager=True)
-    counter = RoundCounter()
+    edges = _cc_stress_edges(spark, 40_000, 200).localCheckpoint(eager=True)
+    counter = _RoundCounter()
     assigns = connected_components(
         edges, algorithm="two_phase", max_loops=100, checkpoint=counter
     )

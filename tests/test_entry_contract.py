@@ -66,7 +66,7 @@ def test_query_matches_duckdb_oracle(spark, ddb, name):
     assert len(s_rows) == len(d_rows), f"{name}: rowcount {len(s_rows)} vs {len(d_rows)}"
     # the driver hashes pandas values, so a dtype drift (DuckDB HUGEINT →
     # Decimal vs Spark int64) is a red row even when values are equal —
-    # compare cell TYPES per column too (CORRECTNESS_r01 user_sessions lesson)
+    # compare cell TYPES per column too
     def _type_fp(cols, rows):
         idx = sorted(range(len(cols)), key=lambda i: cols[i])
         fp = {}

@@ -1,5 +1,5 @@
 """Extras: exact dedup, text analysis, simhash, ngram-jaccard, embedding ANN,
-media decoders, streaming dedup."""
+streaming dedup."""
 
 import numpy as np
 import pytest
@@ -539,93 +539,6 @@ def test_ann_topk_ivf_and_lsh_recall_vs_brute_force(spark):
     assert len(lsh) >= 1
 
 
-def test_decode_wav_roundtrip():
-    """decode_wav must recover exactly what stdlib wave wrote (8- and 16-bit)."""
-    import io
-    import wave as wavemod
-
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import decode_wav
-
-    samples8 = np.arange(200, dtype=np.uint8)
-    buf = io.BytesIO()
-    with wavemod.open(buf, "wb") as w:
-        w.setnchannels(1); w.setsampwidth(1); w.setframerate(8000)
-        w.writeframes(samples8.tobytes())
-    got = decode_wav(buf.getvalue())
-    assert got == {
-        "sample_rate": 8000, "n_channels": 1, "n_frames": 200,
-        "duration_ms": 25, "sample_sum": int(samples8.sum()),
-    }
-
-    samples16 = (np.arange(100, dtype=np.int16) - 50) * 131
-    buf = io.BytesIO()
-    with wavemod.open(buf, "wb") as w:
-        w.setnchannels(2); w.setsampwidth(2); w.setframerate(44100)
-        w.writeframes(samples16.tobytes())
-    got = decode_wav(buf.getvalue())
-    assert got["n_channels"] == 2 and got["sample_rate"] == 44100
-    assert got["n_frames"] == 50  # 100 samples / 2 channels
-    assert got["sample_sum"] == int(samples16.astype(np.int64).sum())
-
-
-def test_decode_ppm_variants():
-    import numpy as np
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        decode_image_real,
-        decode_ppm,
-    )
-
-    pix = np.arange(2 * 3 * 3, dtype=np.uint8)
-    p6 = b"P6\n3 2\n255\n" + pix.tobytes()
-    arr = decode_ppm(p6)
-    assert arr.shape == (2, 3, 3) and int(arr.sum()) == int(pix.sum())
-    # comment in header + CRLF-ish whitespace
-    p6c = b"P6 # a comment\n# another\n 3\t2 255\n" + pix.tobytes()
-    assert decode_ppm(p6c).shape == (2, 3, 3)
-    gray = np.arange(6, dtype=np.uint8)
-    p5 = b"P5\n3 2\n255\n" + gray.tobytes()
-    assert decode_ppm(p5).shape == (2, 3, 1)
-    # dispatch: PPM decodes for real; a truncated JPEG fails loudly (real
-    # parser, not a gate) and unknown containers stay NotImplementedError
-    assert decode_image_real(p6).shape == (2, 3, 3)
-    with _pytest.raises(ValueError, match="missing SOF"):
-        decode_image_real(b"\xff\xd8\xff\xe0fakejpeg")
-
-
-def test_resize_nearest_and_ahash_unit():
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import ahash64, resize_nearest
-
-    # 4x4 -> 2x2 integer downscale is strided sampling: picks (0,0),(0,2),(2,0),(2,2)
-    a = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    assert resize_nearest(a, 2, 2).tolist() == [[0, 2], [8, 10]]
-    # non-integer ratio still floor-maps: 3 -> 2 picks rows 0 and 1
-    assert resize_nearest(a[:3], 2, 4).tolist() == [a[0].tolist(), a[1].tolist()]
-
-    # hand-checked hash: 16x16 image, top half 200, bottom half 0 -> grid mean
-    # 100, top 4 rows of the 8x8 grid above mean = bits 0..31 set
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    img[:8] = 200
-    h = ahash64(img)
-    assert h == int(np.uint64(0x00000000FFFFFFFF).astype(np.int64))
-
-    # uniform brightness shift leaves the hash unchanged (mean shifts equally)
-    assert ahash64(np.clip(img.astype(np.int16) + 30, 0, 255).astype(np.uint8)) == h
-    # pixels off the sampling grid (odd coords for 16->8) don't contribute
-    img2 = img.copy()
-    img2[1, 1] = 123
-    assert ahash64(img2) == h
-    # flipping one sampled cell far past the mean flips exactly that bit
-    img3 = img.copy()
-    img3[0, 0] = 0  # grid cell (0,0) drops below mean
-    assert bin(np.uint64(ahash64(img3)) ^ np.uint64(h)).count("1") <= 2
-
-
 def test_curate_corpus_each_gate(spark):
     """Every stage of the composed curation pipeline drops exactly its
     target: low quality, wrong language, exact duplicate, contaminated."""
@@ -651,9 +564,7 @@ def test_curate_corpus_each_gate(spark):
 
 
 def test_audio_fp64_unit():
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.multimodal import audio_fp64
+    from daft_minhash_dedupe_spark.extras.media_fingerprint import audio_fp64
 
     # 8 windows of 1 sample each: bit k = x[(k+1)%8] > x[k], hand-checked
     x = np.array([10, 20, 5, 5, 30, 10, 40, 40], dtype=np.uint8)
@@ -665,6 +576,16 @@ def test_audio_fp64_unit():
     rng = np.random.default_rng(5)
     y = rng.integers(0, 200, size=256, dtype=np.uint8)
     assert audio_fp64(y) == audio_fp64(y + 20)
+
+
+def test_video_fp64_majority_vote():
+    from daft_minhash_dedupe_spark.extras.media_fingerprint import video_fp64
+
+    assert video_fp64([0b1011, 0b1011, 0b0100]) == 0b1011
+    assert video_fp64([-1, -1, 0]) == -1  # signed int64 round trip
+    assert video_fp64([0b01, 0b10]) == 0  # even split: strict majority
+    with pytest.raises(ValueError):
+        video_fp64([])
 
 
 def test_asof_join_random_vs_bruteforce(spark):
@@ -783,23 +704,6 @@ def test_asof_join_split_buckets_null_struct_and_ties(spark):
             ).collect()
         }
         assert out == {1: (None, 9), 2: (50, 7), 3: (1, 1)}, (sb, out)
-
-
-def test_wav_unsupported_sample_width_fails_loudly():
-    """24-bit PCM must raise (not silently mis-decode as int16 garbage)."""
-    import io as _io
-    import wave as _wave
-
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.multimodal import decode_wav
-
-    buf = _io.BytesIO()
-    with _wave.open(buf, "wb") as w:
-        w.setnchannels(1); w.setsampwidth(3); w.setframerate(8000)
-        w.writeframes(b"\x01\x02\x03" * 4)
-    with _pytest.raises(ValueError, match="24-bit"):
-        decode_wav(buf.getvalue())
 
 
 # -- line-level boilerplate dedup -------------------------------------------
@@ -1105,755 +1009,6 @@ def test_remove_duplicate_spans_min_dup_docs_threshold(spark):
         _docs(spark, t), window_tokens=3, min_dup_docs=3
     ).collect()
     assert all(r["removed_tokens"] == 0 for r in rows)
-
-
-# -- PNG codec (stdlib zlib + filter reconstruction) ---------------------------
-
-
-def test_decode_png_hand_built_fixture():
-    """A PNG assembled by hand in the test (struct+zlib, independent of
-    encode_png): 3x2 gray, row 0 Sub-filtered, row 1 Up-filtered, with
-    hand-derived filtered bytes. Pins the decoder against the spec math."""
-    import struct
-    import zlib
-
-    from daft_minhash_dedupe_spark.extras.png_codec import decode_png
-
-    # target pixels: row0 = [10, 30, 60], row1 = [15, 35, 70]
-    # Sub (row0):  f[x] = p[x] - left  -> [10, 20, 30]
-    # Up  (row1):  f[x] = p[x] - up    -> [5, 5, 10]
-    raw = bytes([1, 10, 20, 30]) + bytes([2, 5, 5, 10])
-
-    def chunk(tag, body):
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", 3, 2, 8, 0, 0, 0, 0)
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    arr = decode_png(png)
-    assert arr.shape == (2, 3, 1)
-    assert arr[:, :, 0].tolist() == [[10, 30, 60], [15, 35, 70]]
-
-
-def test_png_roundtrip_all_filters_and_channels():
-    """encode -> decode is exact for every filter type and channel count
-    (filters are distinct code paths on both sides, so a filter-math error
-    on either side breaks equality)."""
-    from daft_minhash_dedupe_spark.extras.png_codec import decode_png, encode_png
-
-    rng = np.random.RandomState(7)
-    for ch in (1, 2, 3, 4):
-        arr = rng.randint(0, 256, size=(5, 4, ch), dtype=np.uint8)
-        for ft in range(5):
-            out = decode_png(encode_png(arr, filter_type=ft))
-            assert out.shape == (5, 4, ch), (ch, ft)
-            assert np.array_equal(out, arr), f"channels={ch} filter={ft}"
-
-
-def test_png_paeth_against_reference_predictor():
-    """The vectorized Paeth predictor equals the spec's scalar pseudo-code
-    on the full byte cube sample."""
-    from daft_minhash_dedupe_spark.extras.png_codec import _paeth
-
-    def paeth_scalar(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
-    rng = np.random.RandomState(3)
-    a, b, c = (rng.randint(0, 256, 500).astype(np.uint8) for _ in range(3))
-    got = _paeth(a, b, c)
-    want = [paeth_scalar(int(x), int(y), int(z)) for x, y, z in zip(a, b, c)]
-    assert got.tolist() == want
-
-
-def test_png_rejects_corruption_and_unsupported():
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.png_codec import decode_png, encode_png
-
-    arr = np.arange(12, dtype=np.uint8).reshape(2, 2, 3)
-    png = bytearray(encode_png(arr))
-    png[40] ^= 0xFF  # flip a byte inside a chunk body -> CRC mismatch
-    with _pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(png))
-    with _pytest.raises(ValueError, match="not a PNG"):
-        decode_png(b"JUNK" * 4)
-
-
-def test_png_palette_roundtrip_and_rejection():
-    """Color-type-3 (PLTE) path: index plane filters reconstruct exactly
-    and the palette lookup expands to the right RGB; malformed palettes
-    fail loudly instead of decoding garbage."""
-    import struct
-    import zlib
-
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.png_codec import (
-        decode_png,
-        encode_png_palette,
-    )
-
-    rng = np.random.RandomState(5)
-    pal = rng.randint(0, 256, (16, 3), dtype=np.uint8)
-    idx = rng.randint(0, 16, (7, 5), dtype=np.uint8)
-    for ft in range(5):
-        out = decode_png(encode_png_palette(idx, pal, filter_type=ft))
-        assert out.shape == (7, 5, 3)
-        assert np.array_equal(out, pal[idx]), f"filter {ft}"
-
-    # strip the PLTE chunk -> must raise, not decode indices as gray
-    png = encode_png_palette(idx, pal)
-    pos = 8
-    stripped = png[:8]
-    while pos + 8 <= len(png):
-        (length,) = struct.unpack(">I", png[pos : pos + 4])
-        tag = png[pos + 4 : pos + 8]
-        if tag != b"PLTE":
-            stripped += png[pos : pos + 12 + length]
-        pos += 12 + length
-    with _pytest.raises(ValueError, match="PLTE"):
-        decode_png(stripped)
-
-    # out-of-range index vs a short palette -> loud failure
-    def chunk(tag, body):
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", 2, 1, 8, 3, 0, 0, 0)
-    bad = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", bytes(pal[:2].tobytes()))
-        + chunk(b"IDAT", zlib.compress(bytes([0, 0, 9])))
-        + chunk(b"IEND", b"")
-    )
-    with _pytest.raises(ValueError, match="palette index"):
-        decode_png(bad)
-
-
-# -- JPEG codec (markers + Huffman + DCT, no Pillow) ---------------------------
-
-
-def _jpeg_seg(marker, body):
-    import struct
-
-    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-
-def test_decode_jpeg_hand_built_fixture():
-    """A JPEG assembled by hand (independent of encode_jpeg): 8x8 flat gray,
-    all-ones quant, single-symbol Huffman tables, entropy segment derived by
-    hand. v=130: DC=8*(130-128)=16, cat 5, bits '0'+'10000'+EOB'0' padded
-    -> 0x41. v=120: DC=-64, cat 7, '01'+'0111111'+'0' padded -> 0x5F 0xBF
-    (pins negative EXTEND). IDCT of DC-only must give the flat value back."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg
-
-    def build(dc_syms, entropy):
-        dqt = _jpeg_seg(0xDB, bytes([0]) + bytes([1] * 64))
-        sof = _jpeg_seg(0xC0, bytes([8, 0, 8, 0, 8, 1, 1, 0x11, 0]))
-        dc_bits = [0] * 16
-        # all symbols at the minimal fixed length used by the encoder
-        ln = 1 if len(dc_syms) == 1 else 2
-        dc_bits[ln - 1] = len(dc_syms)
-        dht_dc = _jpeg_seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_syms))
-        ac_bits = [1] + [0] * 15
-        dht_ac = _jpeg_seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes([0x00]))
-        sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        return (
-            b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + entropy + b"\xff\xd9"
-        )
-
-    arr = decode_jpeg(build([5], bytes([0x41])))
-    assert arr.shape == (8, 8, 1)
-    assert (arr == 130).all(), arr[:, :, 0]
-
-    arr = decode_jpeg(build([5, 7], bytes([0x5F, 0xBF])))
-    assert (arr == 120).all(), arr[:, :, 0]
-
-
-def test_jpeg_roundtrip_tight_tolerance():
-    """All-ones quant = near-lossless: the only error is coefficient
-    rounding, so encode->decode must be within a few gray levels for every
-    shape family (multiple-of-8, ragged, gray, RGB)."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(2)
-    for shape in [(8, 8), (16, 16), (10, 13), (24, 33)]:
-        g = rng.randint(0, 256, shape, dtype=np.uint8)
-        out = decode_jpeg(encode_jpeg(g))
-        assert out.shape == (*shape, 1)
-        assert np.abs(out[:, :, 0].astype(int) - g.astype(int)).max() <= 2, shape
-        c = rng.randint(0, 256, (*shape, 3), dtype=np.uint8)
-        out = decode_jpeg(encode_jpeg(c))
-        assert out.shape == (*shape, 3)
-        assert np.abs(out.astype(int) - c.astype(int)).max() <= 2, shape
-
-
-def test_jpeg_subsampling_and_restarts():
-    """4:2:0 reproduces a smooth gradient exactly (chroma constant per 2x2);
-    restart markers (DRI/RSTn + DC predictor reset) decode identically to
-    the unrestarted stream."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-
-    grad = np.tile(
-        np.linspace(40, 200, 16).astype(np.uint8)[None, :, None], (16, 1, 3)
-    )
-    out = decode_jpeg(encode_jpeg(grad, subsample=True))
-    assert np.abs(out.astype(int) - grad.astype(int)).max() <= 2
-
-    rng = np.random.RandomState(3)
-    c = rng.randint(0, 256, (24, 33, 3), dtype=np.uint8)
-    plain = decode_jpeg(encode_jpeg(c))
-    for ri in (1, 3):
-        assert np.array_equal(decode_jpeg(encode_jpeg(c, restart_interval=ri)), plain)
-
-
-def test_jpeg_coarse_quant_still_faithful_on_smooth_content():
-    """A realistic coarse quant table (16 everywhere) keeps smooth content
-    recognizable — error bounded by the quant step, not garbage. Pins that
-    dequantization actually multiplies the table back in."""
-    import numpy as np
-
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-
-    grad = np.add.outer(
-        np.linspace(30, 220, 16), np.linspace(0, 30, 16)
-    ).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(grad, quant=np.full(64, 16)))
-    assert np.abs(out[:, :, 0].astype(int) - grad.astype(int)).max() <= 24
-
-
-def test_jpeg_rejects_unsupported_and_truncated():
-    import numpy as np
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-
-    g = np.zeros((8, 8), dtype=np.uint8)
-    png = encode_jpeg(g)
-    # rewrite SOF0 -> SOF2 (progressive)
-    prog = png.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with _pytest.raises(NotImplementedError, match="progressive"):
-        decode_jpeg(prog)
-    with _pytest.raises(ValueError):
-        decode_jpeg(b"\xff\xd8\xff\xe0fakejpeg")
-    with _pytest.raises(ValueError, match="truncated"):
-        decode_jpeg(png[:-20])  # cut lands inside the AC Huffman table
-    with _pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg(b"nope")
-
-
-# -- GIF codec (LZW + animation frames) ----------------------------------------
-
-
-def test_decode_gif_hand_built_fixture():
-    """A GIF assembled by hand (independent of encode_gif), with the LZW
-    entropy bytes derived by hand for indices [1,2,2,1] at min-code-size 2:
-    codes [CLEAR=4@3b, 1@3b, 2@3b, 2@3b, 1@4b, END=5@4b] packed LSB-first
-    -> 0x8C 0x14 0x05 (the width bumps to 4 bits after the third add
-    because the decoder's table lags the encoder's by one entry)."""
-    import struct
-
-    from daft_minhash_dedupe_spark.extras.gif_codec import decode_gif
-
-    pal = bytes([10, 10, 10, 20, 20, 20, 30, 30, 30, 40, 40, 40])
-    gif = (
-        b"GIF89a"
-        + struct.pack("<HHBBB", 2, 2, 0x80 | 1, 0, 0)  # 4-entry global table
-        + pal
-        + b"\x2c" + struct.pack("<HHHHB", 0, 0, 2, 2, 0)
-        + bytes([2])  # LZW min code size
-        + bytes([3, 0x8C, 0x14, 0x05, 0])  # one sub-block + terminator
-        + b"\x3b"
-    )
-    arr = decode_gif(gif)
-    assert arr.shape == (2, 2, 3)
-    assert arr[:, :, 0].tolist() == [[20, 30], [30, 20]]
-
-
-def test_gif_roundtrip_palettes_interlace_and_dict_freeze():
-    """Lossless roundtrip across palette sizes, interlace (4-pass row
-    reorder), and a 128x128 high-entropy image that drives the LZW
-    dictionary to the 4096-entry frozen state across every code width."""
-    from daft_minhash_dedupe_spark.extras.gif_codec import decode_gif, encode_gif
-
-    rng = np.random.RandomState(21)
-    for k in (2, 4, 16, 256):
-        pal = rng.randint(0, 256, (k, 3), dtype=np.uint8)
-        idx = rng.randint(0, k, (10, 13), dtype=np.uint8)
-        assert np.array_equal(decode_gif(encode_gif([idx], pal)), pal[idx]), k
-        assert np.array_equal(
-            decode_gif(encode_gif([idx], pal, interlace=True)), pal[idx]
-        ), f"interlace k={k}"
-    pal = rng.randint(0, 256, (256, 3), dtype=np.uint8)
-    big = rng.randint(0, 256, (128, 128), dtype=np.uint8)
-    assert np.array_equal(decode_gif(encode_gif([big], pal)), pal[big])
-    rep = np.tile(np.arange(16, dtype=np.uint8), (64, 8))
-    assert np.array_equal(decode_gif(encode_gif([rep], pal)), pal[rep])
-
-
-def test_gif_animation_transparency_and_disposal():
-    """Multi-frame presentation semantics: delays, transparent pixels
-    showing the prior canvas, restore-to-background (disposal 2) and
-    restore-to-previous (disposal 3)."""
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif, gif_frames
-
-    rng = np.random.RandomState(22)
-    pal = rng.randint(0, 256, (4, 3), dtype=np.uint8)
-    f1 = rng.randint(0, 4, (8, 8), dtype=np.uint8)
-    f2 = rng.randint(0, 4, (8, 8), dtype=np.uint8)
-
-    frames = gif_frames(encode_gif([f1, f2], pal, delays_ms=[100, 250]))
-    assert [d for _, d in frames] == [100, 250]
-    assert np.array_equal(frames[0][0], pal[f1])
-    assert np.array_equal(frames[1][0], pal[f2])
-
-    fr = gif_frames(encode_gif([f1, f2], pal, transparent=0))
-    want = np.where((f2 == 0)[:, :, None], pal[f1], pal[f2])
-    assert np.array_equal(fr[1][0], want)
-
-    fr = gif_frames(encode_gif([f1, f2, f1], pal, disposal=2, bg_index=1))
-    assert np.array_equal(fr[1][0], pal[f2])  # bg restore between frames
-    fr = gif_frames(encode_gif([f1, f2, f1], pal, disposal=3))
-    assert np.array_equal(fr[2][0], pal[f1])
-
-
-def test_gif_rejects_corruption():
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.gif_codec import decode_gif, encode_gif
-
-    rng = np.random.RandomState(23)
-    pal = rng.randint(0, 256, (4, 3), dtype=np.uint8)
-    idx = rng.randint(0, 4, (6, 6), dtype=np.uint8)
-    gif = encode_gif([idx], pal)
-    with _pytest.raises(ValueError, match="not a GIF"):
-        decode_gif(b"JUNKJUNK")
-    with _pytest.raises(ValueError):
-        decode_gif(gif[: len(gif) // 2])  # truncated mid-stream
-
-
-def _avi_test_frames(seed=7, n=3):
-    rng = np.random.RandomState(seed)
-    pat = np.where(rng.rand(8, 8) < 0.5, 30, 210).astype(np.uint8)
-    img = np.kron(pat, np.ones((2, 2), dtype=np.uint8))
-    rgb = np.repeat(img[:, :, None], 3, axis=2)
-    return [np.roll(rgb, 4 * i, axis=i % 2) for i in range(n)]
-
-
-def test_avi_dib_roundtrip_exact():
-    """DIB mode is lossless: odd width exercises the 4-byte row stride,
-    bottom-up BGR row order must invert exactly."""
-    from daft_minhash_dedupe_spark.extras.avi_codec import avi_frames, encode_avi
-
-    rng = np.random.RandomState(3)
-    frames = [rng.randint(0, 256, (11, 5, 3), dtype=np.uint8) for _ in range(4)]
-    out = avi_frames(encode_avi(frames, frame_ms=33, codec="dib"))
-    assert len(out) == 4
-    for (f, ms), orig in zip(out, frames):
-        assert ms == 33
-        assert np.array_equal(f, orig)
-
-
-def test_avi_mjpeg_roundtrip_near_lossless():
-    """MJPEG frames route through the in-tree JPEG codec: blocky two-level
-    pixels survive the near-lossless table within +/-2, so perceptual
-    hashes are bit-identical across the container round trip."""
-    from daft_minhash_dedupe_spark.extras.avi_codec import avi_frames, encode_avi
-    from daft_minhash_dedupe_spark.extras.multimodal import ahash64
-
-    frames = _avi_test_frames()
-    out = avi_frames(encode_avi(frames, frame_ms=40, codec="mjpg"))
-    assert len(out) == len(frames)
-    for (f, ms), orig in zip(out, frames):
-        assert ms == 40
-        assert int(np.abs(f.astype(int) - orig.astype(int)).max()) <= 2
-        assert ahash64(f) == ahash64(orig)
-
-
-def test_avi_rejects_malformed():
-    from daft_minhash_dedupe_spark.extras.avi_codec import avi_frames, encode_avi
-
-    good = encode_avi(_avi_test_frames(), codec="dib")
-    with pytest.raises(ValueError):
-        avi_frames(b"RIFF\x10\x00\x00\x00WAVEdata")  # RIFF but not AVI
-    with pytest.raises(ValueError):
-        avi_frames(good[:40])  # truncated headers
-    with pytest.raises(ValueError):
-        avi_frames(b"nope")
-    # unknown compression fourcc fails loudly, not silently
-    import struct
-    comp_off = good.find(struct.pack("<IiiHH", 40, 5, 11, 1, 24))
-    assert comp_off == -1  # frames are 16x16 here; find the real strf
-    comp_off = good.find(struct.pack("<IiiHH", 40, 16, 16, 1, 24)) + 16
-    bad = good[:comp_off] + b"XVID" + good[comp_off + 4 :]
-    with pytest.raises(NotImplementedError):
-        avi_frames(bad)
-
-
-def test_video_frame_sampling_semantics():
-    """every_ms keeps exactly the frames a tick grid would present: with
-    40ms frames and a 100ms grid, ticks 0/100/200/300 land in the
-    presentation intervals of frames 0, 2, 5, 7."""
-    from daft_minhash_dedupe_spark.extras.avi_codec import encode_avi
-    from daft_minhash_dedupe_spark.extras.multimodal import (
-        _sample_frames,
-        video_frames_one,
-    )
-
-    rng = np.random.RandomState(5)
-    frames = [rng.randint(0, 256, (4, 4, 3), dtype=np.uint8) for _ in range(8)]
-    decoded = video_frames_one(encode_avi(frames, frame_ms=40, codec="dib"))
-    assert [i for i, _, _ in _sample_frames(decoded, None)] == list(range(8))
-    sampled = _sample_frames(decoded, 100)
-    assert [(i, t) for i, t, _ in sampled] == [(0, 0), (2, 80), (5, 200), (7, 280)]
-    # GIF variable delays flow through the same dispatcher
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-
-    pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    gray = [f[:, :, 0] for f in frames[:3]]
-    g = encode_gif(gray, pal, delays_ms=[500, 500, 500])
-    assert [i for i, _, _ in _sample_frames(video_frames_one(g), 1000)] == [0, 2]
-
-
-def test_video_fp64_majority_vote():
-    from daft_minhash_dedupe_spark.extras.multimodal import video_fp64
-
-    assert video_fp64([0b1011, 0b1011, 0b0100]) == 0b1011
-    assert video_fp64([-1, -1, 0]) == -1  # signed int64 round trip
-    assert video_fp64([0b01, 0b10]) == 0  # even split: strict majority
-    with pytest.raises(ValueError):
-        video_fp64([])
-
-
-def test_jpeg_fill_bytes_between_segments():
-    """T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a marker
-    code — padded files must decode identically to unpadded ones."""
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(31)
-    g = rng.randint(0, 256, (16, 16), dtype=np.uint8)
-    jpg = encode_jpeg(g)
-    want = decode_jpeg(jpg)
-    # pad right after SOI and before the SOF0 marker code
-    padded = jpg[:2] + b"\xff" * 3 + jpg[2:]
-    padded = padded.replace(b"\xff\xc0", b"\xff\xff\xff\xc0", 1)
-    assert np.array_equal(decode_jpeg(padded), want)
-
-
-def test_gif_encode_rejects_delay_count_mismatch():
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-
-    pal = np.repeat(np.arange(4, dtype=np.uint8)[:, None], 3, axis=1)
-    idx = np.zeros((4, 4), dtype=np.uint8)
-    with _pytest.raises(ValueError, match="delays_ms"):
-        encode_gif([idx, idx], pal, delays_ms=[40])
-
-
-def test_png_loud_value_errors_on_missing_idat_and_bad_streams():
-    """decode_png's documented contract is loud ValueError on malformed
-    input — no raw zlib.error / struct.error escapes: empty IDAT, corrupt
-    deflate stream, and an oversized chunk-length field all raise ValueError
-    with a descriptive message."""
-    import struct
-    import zlib
-
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.png_codec import (
-        _SIG,
-        _chunk,
-        decode_png,
-        encode_png,
-    )
-
-    arr = np.arange(12, dtype=np.uint8).reshape(2, 2, 3)
-    ihdr = _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0))
-    # no IDAT chunk at all
-    with _pytest.raises(ValueError, match="IDAT"):
-        decode_png(_SIG + ihdr + _chunk(b"IEND", b""))
-    # IDAT present but the deflate stream is garbage (CRC is valid)
-    with _pytest.raises(ValueError, match="deflate"):
-        decode_png(
-            _SIG + ihdr + _chunk(b"IDAT", b"notdeflate") + _chunk(b"IEND", b"")
-        )
-    # chunk length field pointing past the end of the payload
-    png = bytearray(encode_png(arr))
-    struct.pack_into(">I", png, 8, 1 << 30)  # IHDR length -> huge
-    with _pytest.raises(ValueError, match="overruns"):
-        decode_png(bytes(png))
-
-
-def test_png_deflate_bomb_rejected_without_materializing():
-    """A PNG whose IHDR declares 1x1 (passing check_dims, valid CRCs) but
-    whose IDAT inflates to megabytes must be rejected by the BOUNDED inflate
-    — the decompressobj cap stops at expected+1 bytes, so the bomb's
-    expansion never allocates."""
-    import struct
-    import zlib
-
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.png_codec import _SIG, _chunk, decode_png
-
-    ihdr = _chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
-    bomb = _chunk(b"IDAT", zlib.compress(b"\x00" * 10_000_000))  # ~10KB payload
-    with _pytest.raises(ValueError, match="length mismatch"):
-        decode_png(_SIG + ihdr + bomb + _chunk(b"IEND", b""))
-
-
-def test_gif_frame_descriptor_bombs_rejected():
-    """Frame descriptors are guarded like the logical screen: huge per-frame
-    dims and frames overflowing the canvas both raise ValueError before any
-    LZW decode or canvas allocation."""
-    import struct
-
-    import pytest as _pytest
-
-    from daft_minhash_dedupe_spark.extras.gif_codec import decode_gif
-
-    def gif(screen_w, screen_h, left, top, fw, fh):
-        head = b"GIF89a" + struct.pack("<HHBBB", screen_w, screen_h, 0x80, 0, 0)
-        pal = b"\x00\x00\x00\xff\xff\xff"  # 2-entry global palette
-        desc = b"\x2c" + struct.pack("<HHHHB", left, top, fw, fh, 0)
-        lzw = b"\x02\x02\x44\x01\x00"  # mcs=2 + one tiny sub-block
-        return head + pal + desc + lzw + b"\x3b"
-
-    with _pytest.raises(ValueError, match="GIF frame"):
-        decode_gif(gif(10, 10, 0, 0, 60000, 60000))
-    with _pytest.raises(ValueError, match="exceeds"):
-        decode_gif(gif(10, 10, 5, 5, 8, 8))
-
-
-def _fake_pil(monkeypatch, open_fn):
-    """Install a fake PIL package (Image.open = open_fn) and reset the
-    multimodal native-decoder cache so the next decode re-resolves. Pillow
-    is absent in this container, so the plug point is pinned with a
-    monkeypatched module — on a real deployment the same dispatch resolves
-    the real library."""
-    import sys
-    import types
-
-    from daft_minhash_dedupe_spark.extras import multimodal
-
-    pil = types.ModuleType("PIL")
-    image_mod = types.ModuleType("PIL.Image")
-    image_mod.open = open_fn
-    pil.Image = image_mod
-    monkeypatch.setitem(sys.modules, "PIL", pil)
-    monkeypatch.setitem(sys.modules, "PIL.Image", image_mod)
-    monkeypatch.setattr(multimodal, "_NATIVE_IMAGE_DECODER", "unresolved")
-
-
-class _FakePILImage:
-    """Minimal PIL.Image.Image stand-in: context manager + __array__."""
-
-    def __init__(self, arr, mode="RGB"):
-        self._arr = arr
-        self.mode = mode
-        self.converted_to = None
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        return False
-
-    def __array__(self, dtype=None, copy=None):
-        return self._arr.astype(dtype) if dtype is not None else self._arr
-
-    def convert(self, mode):
-        assert mode == "RGB"
-        out = _FakePILImage(self._arr[:, :, :3], mode)
-        self.converted_to = mode
-        return out
-
-
-def test_native_image_decoder_preferred_when_present(monkeypatch):
-    """When a native decoder (Pillow) is importable it wins on compressed
-    containers; PPM stays in-tree (header parse + reshape, nothing to win)."""
-    from daft_minhash_dedupe_spark.extras import multimodal
-    from daft_minhash_dedupe_spark.extras.png_codec import encode_png
-
-    sentinel = np.full((4, 4, 3), 7, dtype=np.uint8)
-    calls = []
-
-    def fake_open(bio):
-        calls.append(bio.read(4))
-        return _FakePILImage(sentinel)
-
-    _fake_pil(monkeypatch, fake_open)
-    arr = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    out = multimodal.decode_image_real(encode_png(arr))
-    assert np.array_equal(out, sentinel) and len(calls) == 1  # native won
-    # PPM bypasses the native path entirely
-    ppm = b"P6\n4 4\n255\n" + arr.tobytes()
-    assert np.array_equal(multimodal.decode_image_real(ppm), arr)
-    assert len(calls) == 1
-
-
-def test_native_image_decoder_same_ahash_both_paths(monkeypatch):
-    """A correct native decoder and the in-tree codecs produce the SAME
-    aHash for the same payload (PNG, JPEG and GIF), and a native decoder
-    that fails on a payload falls back to the in-tree codec instead of
-    erroring — a Pillow build-gap changes speed, never results."""
-    from daft_minhash_dedupe_spark.extras import multimodal
-    from daft_minhash_dedupe_spark.extras.gif_codec import encode_gif
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-    from daft_minhash_dedupe_spark.extras.png_codec import decode_png, encode_png
-    from daft_minhash_dedupe_spark.extras.gif_codec import decode_gif
-
-    rng = np.random.RandomState(47)
-    rgb = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-    gray = rng.randint(0, 256, (16, 16), dtype=np.uint8)
-    pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    payloads = [
-        encode_png(rgb, filter_type=4),
-        encode_jpeg(gray),
-        encode_gif([gray], pal),
-    ]
-
-    # in-tree reference hashes (native disabled)
-    monkeypatch.setattr(multimodal, "_NATIVE_IMAGE_DECODER", None)
-    want = [multimodal.ahash64(multimodal.decode_image_real(p)) for p in payloads]
-
-    # "native" decoder that is simply correct (delegates to the in-tree
-    # codecs, shaped like Pillow output) — hashes must match exactly
-    def good_open(bio):
-        data = bio.read()
-        if data.startswith(b"\x89PNG"):
-            return _FakePILImage(decode_png(data))
-        if data.startswith(b"\xff\xd8"):
-            a = decode_jpeg(data)
-            return _FakePILImage(a[:, :, 0], mode="L") if a.shape[2] == 1 else _FakePILImage(a)
-        return _FakePILImage(decode_gif(data))
-
-    _fake_pil(monkeypatch, good_open)
-    got = [multimodal.ahash64(multimodal.decode_image_real(p)) for p in payloads]
-    assert got == want
-
-    # native decoder that blows up -> in-tree fallback, same hashes
-    def broken_open(bio):
-        raise OSError("decoder plugin missing")
-
-    _fake_pil(monkeypatch, broken_open)
-    got = [multimodal.ahash64(multimodal.decode_image_real(p)) for p in payloads]
-    assert got == want
-
-
-def test_native_image_decoder_channel_shape_parity(monkeypatch):
-    """The native path preserves the in-tree channel widths: RGBA (PNG color
-    type 6) stays 4-channel and LA (type 4) stays 2-channel instead of being
-    flattened to RGB — otherwise the same corpus would fingerprint
-    differently on a Pillow cluster vs the in-tree fallback."""
-    from daft_minhash_dedupe_spark.extras import multimodal
-    from daft_minhash_dedupe_spark.extras.png_codec import decode_png, encode_png
-
-    rng = np.random.RandomState(51)
-    rgba = rng.randint(0, 256, (8, 8, 4), dtype=np.uint8)
-    payload = encode_png(rgba)
-    assert decode_png(payload).shape == (8, 8, 4)  # in-tree keeps alpha
-
-    opened = []
-
-    def fake_open(bio):
-        im = _FakePILImage(decode_png(bio.read()), mode="RGBA")
-        opened.append(im)
-        return im
-
-    _fake_pil(monkeypatch, fake_open)
-    out = multimodal.decode_image_real(payload)
-    assert out.shape == (8, 8, 4) and opened[0].converted_to is None
-    assert np.array_equal(out, rgba)
-
-
-def test_codec_fuzz_error_contract_all_decoders():
-    """Every in-tree decoder's failure surface is ValueError /
-    NotImplementedError, never a raw zlib.error / struct.error /
-    IndexError / KeyError: the mapInPandas extractors catch the two
-    documented types to route rows to on_error handling, so any other
-    escape would kill the whole Arrow batch. Fuzz each decoder with
-    random blobs, truncations at every boundary class, and single-byte
-    flips of a valid payload (deterministic seed)."""
-    import struct as _struct
-    import wave as _wave
-    from io import BytesIO as _BytesIO
-
-    from daft_minhash_dedupe_spark.extras import multimodal
-    from daft_minhash_dedupe_spark.extras.avi_codec import avi_frames, encode_avi
-    from daft_minhash_dedupe_spark.extras.gif_codec import decode_gif, encode_gif
-    from daft_minhash_dedupe_spark.extras.jpeg_codec import decode_jpeg, encode_jpeg
-    from daft_minhash_dedupe_spark.extras.png_codec import decode_png, encode_png
-
-    rng = np.random.RandomState(77)
-    rgb = rng.randint(0, 256, (9, 7, 3), dtype=np.uint8)
-    pal = np.repeat(np.arange(8, dtype=np.uint8)[:, None] * 32, 3, axis=1)
-    idx = rng.randint(0, 8, (9, 7)).astype(np.uint8)
-    bio = _BytesIO()
-    with _wave.open(bio, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        wf.writeframes(rng.randint(-300, 300, 64).astype("<i2").tobytes())
-    ppm = b"P6\n7 9\n255\n" + rgb.tobytes()
-    cases = [
-        (decode_png, encode_png(rgb)),
-        (decode_jpeg, encode_jpeg(rgb)),
-        (decode_gif, encode_gif([idx], pal)),
-        (avi_frames, encode_avi([rgb, rgb], frame_ms=200)),
-        (multimodal.decode_ppm, ppm),
-        (multimodal.decode_wav, bio.getvalue()),
-    ]
-    allowed = (ValueError, NotImplementedError)
-
-    def poke(decoder, payload):
-        try:
-            decoder(payload)
-        except allowed:
-            pass  # the documented loud-failure surface
-        # success is fine too: some mutations leave a decodable payload
-
-    for decoder, good in cases:
-        poke(decoder, good)  # baseline must not raise at all
-        decoder(good)
-        # random blobs, incl. ones opening with the right magic
-        for n in (0, 1, 7, 64, 513):
-            poke(decoder, bytes(rng.randint(0, 256, n, dtype=np.uint8)))
-        poke(decoder, good[:8] + bytes(rng.randint(0, 256, 96, dtype=np.uint8)))
-        # truncations: every prefix length class
-        for cut in range(1, len(good), max(1, len(good) // 37)):
-            poke(decoder, good[:cut])
-        # single-byte flips across the payload
-        for pos in range(0, len(good), max(1, len(good) // 53)):
-            mutated = bytearray(good)
-            mutated[pos] ^= 0x5A
-            poke(decoder, bytes(mutated))
-        # length-field inflation: overwrite each 4-byte window with 0xFFFFFFFF
-        for pos in range(0, min(len(good) - 4, 64), 4):
-            mutated = bytearray(good)
-            mutated[pos : pos + 4] = _struct.pack(">I", 0xFFFFFFFF)
-            poke(decoder, bytes(mutated))
 
 
 # ---------------------------------------------------------------------------

@@ -130,7 +130,7 @@ def test_short_and_empty_docs_survive(spark):
 
 
 def test_bench_corpus_dup_rate_knob(spark):
-    """The --dup-rate re-crawl knob: deterministic, shape-preserving, and
+    """The dup_rate re-crawl knob: deterministic, shape-preserving, and
     the verbatim-duplicate mass moves with the rate (the tiered cascade's
     tier-0 economics depend on exactly this mass)."""
     from pyspark.sql import functions as F
