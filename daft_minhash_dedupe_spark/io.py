@@ -114,11 +114,13 @@ class StageCheckpointer:
         if d is None:
             # no checkpoint dir configured → in-memory lineage severing only
             return df.localCheckpoint(eager=True)
+        # re-read with the stage's own schema: no schema-inference job
+        reread = self.spark.read.schema(df.schema)
         if self.resume and self.has(name):
-            return self.spark.read.parquet(str(d))
+            return reread.parquet(str(d))
         t0 = time.time()
         df.write.mode("overwrite").option("compression", "snappy").parquet(str(d))
-        out = self.spark.read.parquet(str(d))
+        out = reread.parquet(str(d))
         # per-partition lineage/row-count metrics (north rule). Fast path:
         # the parquet footers already carry exact per-file row counts — read
         # them directly instead of paying an extra Spark scan per stage

@@ -18,7 +18,7 @@ only ever needs each bucket's MIN node (star edges — see edges.py), no
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from daft_minhash_dedupe_spark.functions.hashing import band_key
@@ -59,7 +59,11 @@ def lsh_band_buckets(
 
 
 def salted_bucket_min(
-    buckets: DataFrame, num_salts: int = 16, key_col: str = "band_key", val_col: str = "node"
+    buckets: DataFrame,
+    num_salts: int = 16,
+    key_col: str = "band_key",
+    val_col: str = "node",
+    mins: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Two-phase salted min per bucket → (band_key, u = min node).
 
@@ -67,13 +71,15 @@ def salted_bucket_min(
     reducers; stage 2 merges the S partial minima. min/max already get
     map-side partial aggregation from Catalyst, so salting is strictly about
     reducer-key cardinality under extreme skew (a >10^7-member hot band).
+    ``mins`` (output column → expression) takes several minima in the same
+    two phases instead of ``u``, e.g. one per tagged subset of the rows.
     """
+    mins = mins or {"u": F.col(val_col)}
     salt = F.pmod(F.xxhash64(F.col(val_col)), F.lit(num_salts))
-    partial = (
-        buckets.groupBy(F.col(key_col), salt.alias("_salt"))
-        .agg(F.min(val_col).alias("_partial_min"))
+    partial = buckets.groupBy(F.col(key_col), salt.alias("_salt")).agg(
+        *(F.min(e).alias(f"_partial_{n}") for n, e in mins.items())
     )
-    return partial.groupBy(key_col).agg(F.min("_partial_min").alias("u"))
+    return partial.groupBy(key_col).agg(*(F.min(f"_partial_{n}").alias(n) for n in mins))
 
 
 def lsh_banding(

@@ -21,10 +21,13 @@ Correctness argument (exact equivalence with a full re-run, proven by
   global minimum a full run would pick — cluster ids come out identical,
   not merely isomorphic.
 
-Scale shape: one semi-join of old bands against the new batch's band keys
-(bucket-prunable / bucketed-table-friendly), salted bucket minima, CC over
-O(batch) edges, and an assignment update that touches only old clusters a
-new document actually bridged.
+Scale shape: one pass over the touched buckets. The stored bands are
+semi-joined to the batch's band keys (bucket-prunable), one salted two-phase
+min gives each touched bucket's new and old minimum, and one join emits both
+edge kinds. CC runs over O(batch) edges. The split looks up the stored
+labels once, and re-labels the old members of a cluster only when its
+representative moved to a smaller id; a touched cluster whose
+representative stays writes just that representative's own row.
 """
 
 from __future__ import annotations
@@ -34,7 +37,6 @@ from pyspark.sql import functions as F
 
 from daft_minhash_dedupe_spark.operators.banding import salted_bucket_min
 from daft_minhash_dedupe_spark.operators.components import connected_components
-from daft_minhash_dedupe_spark.operators.edges import build_edges_from_buckets
 
 
 def incremental_assignments(
@@ -54,77 +56,76 @@ def incremental_assignments(
     frames read them lazily, so the directory must outlive them (on a
     cluster, shared storage).
 
-    new_assign:  (u, rep) for every new node that joined any cluster.
-    old_updates: (u, rep) re-labels for old nodes whose cluster got merged
-                 (bridged by a new document) — apply with a left join +
-                 coalesce over the stored assignment table.
+    new_assign:  (u, rep) for every edge node that is not an old
+                 representative (every new node that joined any cluster).
+    old_updates: (u, rep) for every old representative among the edge
+                 nodes, plus the old members of each representative that
+                 moved — apply with a left join + coalesce over the stored
+                 assignment table.
     """
-    # cache (NOT localCheckpoint): the band table feeds several branches that
-    # later self-union; localCheckpoint's LogicalRDD carries originConstraints
-    # with the original attribute ids, and Spark's self-union deduplication
-    # (newInstance) leaves them stale → Union.rewriteConstraints crashes with
-    # "key not found: v#…". A cached plan keeps plan-based children, which
-    # that rewrite handles correctly.
-    new_bands = new_bands.select("band_key", "node").cache()
-
-    # new-new connectivity: star edges within the new batch's buckets
-    nn_edges = build_edges_from_buckets(new_bands, num_salts=num_salts)
-
-    # new-old connectivity: for each bucket the new batch touches, link the
-    # new bucket min to ONE old member's representative
-    touched = new_bands.select("band_key").distinct()
-    old_touched = old_bands.select("band_key", "node").join(touched, "band_key")
-    old_min = salted_bucket_min(old_touched, num_salts=num_salts).withColumnRenamed(
-        "u", "old_node"
+    # one salted two-phase min over the batch's rows (tagged new) and the
+    # stored rows of the buckets the batch touches (tagged old) gives each
+    # touched bucket's new and old minimum in one shared aggregate
+    batch = new_bands.select("band_key", "node")
+    rows = batch.withColumn("_new", F.lit(True)).unionByName(
+        old_bands.select("band_key", "node")
+        .join(batch, "band_key", "left_semi")
+        .withColumn("_new", F.lit(False))
     )
-    old_min_rep = (
-        old_min.join(
-            old_assignments.withColumnRenamed("u", "old_node"), "old_node", "left"
-        )
-        .select("band_key", F.coalesce("rep", "old_node").alias("old_rep"))
-    )
-    new_min = salted_bucket_min(new_bands, num_salts=num_salts)
-    no_edges = (
-        new_min.join(old_min_rep, "band_key")
-        .select(
-            F.least("u", "old_rep").alias("u"), F.greatest("u", "old_rep").alias("v")
-        )
+    mins = salted_bucket_min(rows, num_salts=num_salts, mins={
+        "new_min": F.when(F.col("_new"), F.col("node")),
+        "old_min": F.when(~F.col("_new"), F.col("node")),
+    })
+
+    # per batch row: the star edge to its bucket's new min, and the link from
+    # that min to ONE old member's representative (least() skips the null of
+    # a bucket without old rows, which the u != v filter then drops)
+    stored = old_assignments.select("u", "rep")
+    old_rep = F.coalesce("rep", "old_min")
+    edges = (
+        batch.join(mins, "band_key")
+        .join(stored.withColumnRenamed("u", "old_min"), "old_min", "left")
+        .select(F.inline(F.array(
+            F.struct(F.col("new_min").alias("u"), F.col("node").alias("v")),
+            F.struct(
+                F.least("new_min", old_rep).alias("u"),
+                F.greatest("new_min", old_rep).alias("v"),
+            ),
+        )))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
 
-    # materialize the combined edges through a REAL storage boundary before
-    # CC: the two branches share the new_bands lineage, and Spark 4.1's
-    # Union self-reference deduplication leaves constraints referencing
-    # pre-dedup attribute ids — the CC star steps then crash inside
-    # Union.rewriteConstraints ("key not found: v#…"). Neither cache() nor
-    # localCheckpoint() breaks the constraint linkage; a parquet round-trip
-    # does (and is the same boundary the full pipeline places here anyway).
+    # a parquet round trip cuts the edges' lineage before CC: Spark 4.1's
+    # Union self-reference deduplication leaves constraints on pre-dedup
+    # attribute ids, and CC's star steps then crash inside
+    # Union.rewriteConstraints ("key not found: v#…"); neither cache() nor
+    # localCheckpoint() breaks that constraint linkage
     path = f"{edges_checkpoint_dir}/incremental_edges"
-    nn_edges.unionByName(no_edges).write.mode("overwrite").parquet(path)
-    edges = new_bands.sparkSession.read.parquet(path)
-    # nothing returned reads new_bands past the edges write: release it, or a
-    # long-lived driver keeps one cached band table per fold
-    new_bands.unpersist()
+    edges.write.mode("overwrite").parquet(path)
     assigns = connected_components(
-        edges, algorithm=algorithm, driver_fallback_edges=driver_fallback_edges
+        new_bands.sparkSession.read.schema("u long, v long").parquet(path),
+        algorithm=algorithm,
+        driver_fallback_edges=driver_fallback_edges,
     )
 
-    # split the result: labels for new nodes vs merged-old-rep re-labels
-    old_reps = old_assignments.select(F.col("rep").alias("u")).distinct()
-    rep_moves = assigns.join(old_reps, "u")  # an old rep absorbed a smaller id
-    new_assign = assigns.join(old_reps, "u", "left_anti")
-
-    # propagate rep moves to every old row of the affected clusters
-    old_updates = (
-        old_assignments.withColumnRenamed("rep", "old_rep")
-        .join(
-            rep_moves.select(F.col("u").alias("old_rep"), "rep"),
-            "old_rep",
-        )
-        .select("u", "rep")
-        .unionByName(rep_moves.select("u", "rep"))
-        .distinct()
+    # split with one lookup of the stored labels, evaluated once: an old
+    # representative is a node whose stored label is itself
+    split = assigns.join(
+        stored.withColumnRenamed("rep", "_stored"), "u", "left"
+    ).localCheckpoint(eager=False)
+    is_old_rep = F.col("_stored").eqNullSafe(F.col("u"))
+    new_assign = split.where(~is_old_rep).select("u", "rep")
+    rep_moves = split.where(is_old_rep).select("u", "rep")
+    # an old representative keeps its own row; its members are re-labelled
+    # only when it moved to a smaller id
+    moved = rep_moves.where(F.col("rep") != F.col("u")).select(
+        F.col("u").alias("rep"), F.col("rep").alias("_moved_to")
+    )
+    old_updates = rep_moves.unionByName(
+        stored.where(F.col("u") != F.col("rep"))
+        .join(moved, "rep")
+        .select("u", F.col("_moved_to").alias("rep"))
     )
     return new_assign, old_updates
 

@@ -12,8 +12,9 @@ layout where each increment writes ONLY its own rows:
 
 Reading folds the deltas: batch 0 is the bootstrap corpus; for every node
 ``u`` the assignment written by the LATEST batch wins (a batch writes a row
-for ``u`` only when it labels a new node or re-labels an old cluster that a
-new document bridged). ``read_bands`` is a plain union — band keys are
+for ``u`` only when it labels a new node, when ``u`` is an old representative
+a new document touched, or when ``u``'s representative moved to a smaller
+id). ``read_bands`` is a plain union — band keys are
 deterministic per document, so the concatenation of per-batch band tables IS
 the full-corpus band table (operators/incremental.py's correctness argument).
 
@@ -258,7 +259,9 @@ class IncrementalState:
         if self.n_buckets:
             self._register_tables(refresh=True)
             return self.spark.table(table)
-        df = self.spark.read.parquet(path)
+        # a known schema spares Spark the footer-reading schema job; the
+        # batch_id partition column is still discovered from the directories
+        df = self.spark.read.schema(", ".join(f"{c} long" for c in cols)).parquet(path)
         keep = [c for c in (*cols, "batch_id") if c in df.columns]
         return df.select(*keep)
 

@@ -131,30 +131,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") != "1":
-        _warm_python_workers(spark)
     return spark
-
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Session-bootstrap warmup: spawn the reusable Python UDF workers and pay
-    their pandas/pyarrow import cost (~2 s, concurrent) HERE rather than
-    inside the first pandas-UDF query a user times. One task per scheduler
-    slot so EVERY reusable worker exists warm — a single-row warmup left the
-    other cores' workers to spawn (and import pandas) inside the first wide
-    pandas-UDF stage, charging ~2-4 s to whichever query hit it first
-    (guide §4.5: heavyweight init once per task, amortized — here once per
-    session)."""
-    try:
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("long")
-        def _noop(s: pd.Series) -> pd.Series:
-            return s
-
-        n = spark.sparkContext.defaultParallelism
-        spark.range(n).repartition(n).select(_noop(F.col("id"))).collect()
-    except Exception:
-        pass  # warmup is best-effort; never block session creation

@@ -476,3 +476,115 @@ def test_bucketed_read_recovers_externally_added_partitions(spark, tmp_path):
     # appended partition, then read — RECOVER must re-discover it
     spark.sql(f"ALTER TABLE {st._bands_table} DROP PARTITION (batch_id=1)")
     assert st.read_bands().count() == 3
+
+
+def _jobs_of(spark, group, fn):
+    """(fn's result, Spark jobs it ran), counted through statusTracker()."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_state_reads_run_no_job_on_either_layout(spark, tmp_path):
+    """State reads carry the known schema, so building them runs no Spark
+    job. A batch-partitioned root folds its deltas (latest batch wins); a
+    flat root without batch_id= directories reads its rows as they are."""
+    flat = tmp_path / "flat"
+    spark.createDataFrame([(11, 10), (10, 10)], "u long, rep long").write.parquet(
+        str(flat / "components")
+    )
+    spark.createDataFrame([(1, 10), (1, 11)], "band_key long, node long").write.parquet(
+        str(flat / "bands")
+    )
+    st = IncrementalState(spark, str(tmp_path / "parts"))
+    st.append(
+        spark.createDataFrame([(1, 10)], "band_key long, node long"),
+        spark.createDataFrame([(10, 10)], "u long, rep long"),
+    )
+    st.append(
+        spark.createDataFrame([(1, 9)], "band_key long, node long"),
+        spark.createDataFrame([(10, 9), (9, 9)], "u long, rep long"),
+    )
+    for state, bands, assigns in (
+        (IncrementalState(spark, str(flat)), {(1, 10), (1, 11)}, {(11, 10), (10, 10)}),
+        (st, {(1, 10), (1, 9)}, {(10, 9), (9, 9)}),
+    ):
+        (b, a), jobs = _jobs_of(
+            spark, "state_reads", lambda s=state: (s.read_bands(), s.read_assignments())
+        )
+        assert jobs == 0
+        assert b.columns == ["band_key", "node"] and a.columns == ["u", "rep"]
+        assert {tuple(r) for r in b.collect()} == bands
+        assert {tuple(r) for r in a.collect()} == assigns
+
+
+def test_fold_rewrites_only_moved_clusters(spark, tmp_path):
+    """A batch doc that joins an old cluster without undercutting its
+    representative rewrites none of that cluster's old rows (only the
+    representative's own row is in the delta); a batch doc with a smaller id
+    moves its cluster's representative and re-labels every old member. The
+    folded state still equals a full run."""
+    cfg = DedupeConfig()
+    pipe = MinHashDedupePipeline(cfg)
+    urls = [f"https://example.org/moved/{i}" for i in range(10)]
+    ids = pipe.prep(
+        spark.createDataFrame([(u, "") for u in urls], "block_id string, block_text string")
+    ).collect()
+    s = [r["block_id"] for r in sorted(ids, key=lambda r: r["node_id"])]  # by node id
+    text_a = " ".join(f"alpha{i}" for i in range(60))
+    text_b = " ".join(f"beta{i}" for i in range(60))
+    # cluster a: the batch doc s[8] sorts after the old representative s[1];
+    # cluster b: the batch doc s[0] sorts before the old representative s[2]
+    base = [(u, text_a) for u in (s[1], s[3], s[5], s[7])]
+    base += [(u, text_b) for u in (s[2], s[4], s[6], s[9])]
+    base += [(f"https://example.org/solo/{i}", f"gamma{i} " * 30) for i in range(5)]
+    batch = [(s[8], text_a), (s[0], text_b)]
+    batch += [(f"https://example.org/new/{i}", f"delta{i} " * 30) for i in range(5)]
+    schema = "block_id string, block_text string"
+    base_df, batch_df = (spark.createDataFrame(rows, schema) for rows in (base, batch))
+
+    state = IncrementalState(spark, str(tmp_path / "state"))
+    _, bands, assigns = _stages(pipe, base_df)
+    state.bootstrap(bands, assigns, meta_from_config(cfg))
+    stored = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
+    node = {r["block_id"]: r["node_id"] for r in ids}
+
+    delta = pipe.fold(batch_df, state, str(tmp_path / "out"))["delta"].collect()
+    relabels = {(r["u"], r["rep"]) for r in delta if r["relabel"]}
+    unchanged = {(u, rep) for u, rep in relabels if stored.get(u) == rep and u != rep}
+    assert not unchanged, f"old rows re-written with their stored label: {unchanged}"
+    # the moved cluster: every old member carries the batch doc's smaller id
+    assert relabels == {(node[u], node[s[0]]) for u in (s[2], s[4], s[6], s[9])} | {
+        (node[s[1]], node[s[1]])
+    }
+
+    all_nodes, _, full_assigns = _stages(pipe, base_df.unionByName(batch_df))
+    full = {r["u"]: r["rep"] for r in full_assigns.collect()}
+    merged = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
+    for n in all_nodes:
+        assert merged.get(n, n) == full.get(n, n), f"node {n}"
+
+
+# Spark jobs of one warm shipped fold (driver-fallback CC) on the fixture
+# below; a change that adds jobs back to the fold has to raise this bound
+FOLD_JOBS_BOUND = 20
+
+
+def test_warm_fold_job_count(spark, tmp_path):
+    """One warm ``pipe.fold`` runs at most FOLD_JOBS_BOUND Spark jobs: the
+    fold's cost at these sizes is fixed cost per job, not data."""
+    raw, _ = generate_web_pages(spark, n_rows=150, seed=21)
+    pages = prepare_web_pages(raw).localCheckpoint(eager=True)
+    a, b, c = _split3(pages)
+    cfg = DedupeConfig()
+    pipe = MinHashDedupePipeline(cfg)
+    state = IncrementalState(spark, str(tmp_path / "state"))
+    _, a_bands, a_assigns = _stages(pipe, a)
+    state.bootstrap(a_bands, a_assigns, meta_from_config(cfg))
+    pipe.fold(b, state, str(tmp_path / "out_b"))  # warm-up fold
+    _, jobs = _jobs_of(spark, "warm_fold", lambda: pipe.fold(c, state, str(tmp_path / "out_c")))
+    assert 0 < jobs <= FOLD_JOBS_BOUND, jobs
