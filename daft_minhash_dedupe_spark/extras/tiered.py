@@ -61,7 +61,6 @@ def tiered_dedupe(
     minhash_config: DedupeConfig | None = None,
     minhash_overrides: dict | None = None,
     run_minhash: bool = True,
-    drop_empty_after_line: bool = True,
 ) -> dict:
     """Run the tier cascade; returns {"survivors", "metrics", "cleaned_col"}.
 
@@ -115,7 +114,7 @@ def tiered_dedupe(
     _record("exact", cur, t0)
     cur = t0
 
-    # tier 1: line-level boilerplate removal (+ optional empty-doc drop)
+    # tier 1: line-level boilerplate removal, then drop docs it emptied
     cleaned_col = text_col
     if line_min_dup_docs is not None:
         lines = line_dedupe(
@@ -125,10 +124,7 @@ def tiered_dedupe(
             min_dup_docs=line_min_dup_docs,
             out_col="cleaned_text",
         ).select(id_col, "cleaned_text")
-        t1 = cur.join(lines, id_col)
-        if drop_empty_after_line:
-            t1 = t1.where(F.col("cleaned_text") != "")
-        t1 = _mat(t1)
+        t1 = _mat(cur.join(lines, id_col).where(F.col("cleaned_text") != ""))
         cleaned_col = "cleaned_text"
         _record("line_boilerplate", cur, t1)
         # tier 1b: exact again on the cleaned text — boilerplate stripping
@@ -152,10 +148,7 @@ def tiered_dedupe(
             window_tokens=substring_window_tokens,
             out_col="substr_text",
         ).select(id_col, "substr_text")
-        t1c = cur.join(spans, id_col)
-        if drop_empty_after_line:
-            t1c = t1c.where(F.col("substr_text") != "")
-        t1c = _mat(t1c)
+        t1c = _mat(cur.join(spans, id_col).where(F.col("substr_text") != ""))
         cleaned_col = "substr_text"
         _record("substr_spans", cur, t1c)
         # tier 1d: exact again — cutting shared runs can reveal verbatim

@@ -18,18 +18,12 @@ id). ``read_bands`` is a plain union — band keys are
 deterministic per document, so the concatenation of per-batch band tables IS
 the full-corpus band table (operators/incremental.py's correctness argument).
 
-Two storage backends, same layout:
-
-- ``parquet`` (default, portable): plain directories; partition discovery
-  gives the ``batch_id`` column for free.
-- ``bucketed:N`` : the same directories registered as EXTERNAL bucketed
-  catalog tables (bands CLUSTERED BY band_key, components CLUSTERED BY u,
-  both PARTITIONED BY batch_id) written via ``insertInto`` so files carry
-  real bucket ids. Every per-batch operation that touches state — the
-  old-bands semi-join on band_key and the assignment fold on u — then runs
-  WITHOUT shuffling the corpus-sized side (pinned by tests/test_plans.py).
-  Tables are re-registered idempotently per session (external location =
-  the state dir), so cross-run / cross-session chaining needs no metastore.
+One layout: plain parquet directories, where partition discovery gives the
+``batch_id`` column for free. Roots written by the retired ``bucketed:N``
+backend (external bucketed catalog tables over the same directories) read
+as plain parquet with the same rows: their files sit in the same
+``batch_id=N`` directories, and a ``backend`` key in their _META.json is
+ignored.
 
 The parameter fingerprint (_META.json) guards the two invariants the
 incremental fold relies on: identical banding parameters (band keys must be
@@ -40,7 +34,6 @@ batch into verified-run state would reconnect pairs verification rejected).
 
 from __future__ import annotations
 
-import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,29 +105,9 @@ def _list_batch_ids(spark: SparkSession, path: str) -> list[int]:
 class IncrementalState:
     """Append-only persisted band table + assignment deltas (see module doc)."""
 
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self._requested_buckets = n_buckets
-        meta = self.read_meta()
-        if meta and "backend" in meta:
-            # the on-disk format wins over the requested one: reading plain
-            # parquet as if bucketed would silently mis-aggregate
-            backend = meta["backend"]
-            self.n_buckets = (
-                int(backend.split(":", 1)[1]) if backend.startswith("bucketed") else None
-            )
-        elif _list_batch_ids(spark, f"{root.rstrip('/')}/bands"):
-            # batches on disk without a backend tag (meta missing entirely,
-            # or written before the bucketed backend existed) = plain parquet
-            # dirs; honoring a bucketed request over them would mis-aggregate
-            self.n_buckets = None
-        else:
-            self.n_buckets = n_buckets
-        self._tables_registered = False
-        tag = hashlib.sha1(self.root.encode()).hexdigest()[:10]
-        self._bands_table = f"inc_state_bands_{tag}"
-        self._assign_table = f"inc_state_components_{tag}"
 
     # -------------------------------------------------------------- layout
     @property
@@ -171,7 +144,6 @@ class IncrementalState:
     def write_meta(self, meta: dict) -> None:
         meta = dict(meta)
         meta["layout"] = "incremental-v1"
-        meta["backend"] = f"bucketed:{self.n_buckets}" if self.n_buckets else "parquet"
         _write_text(self.spark, f"{self.root}/{_META}", json.dumps(meta, indent=1))
 
     def validate_config(self, cfg) -> None:
@@ -222,43 +194,8 @@ class IncrementalState:
                 "keys/cluster ids are not comparable across configs."
             )
 
-    # ------------------------------------------------------------- catalog
-    def _register_tables(self, refresh: bool = False) -> None:
-        assert self.n_buckets
-        if self._tables_registered:
-            # DROP/CREATE runs once per instance: this session's appends go
-            # through insertInto, which keeps the catalog's partition list
-            # current by itself. Reads still RECOVER (cheap, no DROP/CREATE)
-            # so batches appended by ANOTHER session/process — whose
-            # insertInto updated its own catalog, not ours — are visible.
-            if refresh:
-                for name in (self._bands_table, self._assign_table):
-                    self.spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
-            return
-        fs, hroot, _ = _fs(self.spark, self.root)
-        for sub in (self.bands_path, self.components_path):
-            p = _fs(self.spark, sub)[1]
-            if not fs.exists(p):
-                fs.mkdirs(p)
-        for name, loc, cols, key in (
-            (self._bands_table, self.bands_path, "band_key BIGINT, node BIGINT", "band_key"),
-            (self._assign_table, self.components_path, "u BIGINT, rep BIGINT", "u"),
-        ):
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            self.spark.sql(
-                f"""CREATE TABLE {name} ({cols}, batch_id INT)
-                USING PARQUET PARTITIONED BY (batch_id)
-                CLUSTERED BY ({key}) SORTED BY ({key}) INTO {self.n_buckets} BUCKETS
-                LOCATION '{loc}'"""
-            )
-            self.spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
-        self._tables_registered = True
-
     # --------------------------------------------------------------- reads
-    def _read(self, path: str, table: str, cols: tuple[str, ...]) -> DataFrame:
-        if self.n_buckets:
-            self._register_tables(refresh=True)
-            return self.spark.table(table)
+    def _read(self, path: str, cols: tuple[str, ...]) -> DataFrame:
         # a known schema spares Spark the footer-reading schema job; the
         # batch_id partition column is still discovered from the directories
         df = self.spark.read.schema(", ".join(f"{c} long" for c in cols)).parquet(path)
@@ -267,36 +204,23 @@ class IncrementalState:
 
     def read_bands(self) -> DataFrame:
         """Full-corpus band table: plain concatenation of the batch tables."""
-        return self._read(self.bands_path, self._bands_table, BANDS_COLS).select(
-            *BANDS_COLS
-        )
+        return self._read(self.bands_path, BANDS_COLS).select(*BANDS_COLS)
 
     def read_assignments(self) -> DataFrame:
-        """Current (u, rep) for every non-isolated node: latest batch wins.
-
-        With the bucketed backend this fold is shuffle-free (components is
-        CLUSTERED BY u)."""
-        df = self._read(self.components_path, self._assign_table, ASSIGN_COLS)
+        """Current (u, rep) for every non-isolated node: latest batch wins."""
+        df = self._read(self.components_path, ASSIGN_COLS)
         if "batch_id" not in df.columns:
             return df.select(*ASSIGN_COLS)
         return df.groupBy("u").agg(F.max_by("rep", "batch_id").alias("rep"))
 
     # -------------------------------------------------------------- writes
-    def _write_batch(self, df: DataFrame, path: str, table: str,
-                     cols: tuple[str, ...], batch_id: int) -> None:
-        out = df.select(*cols)
-        if self.n_buckets:
-            self._register_tables()
-            # insertInto is position-based: (cols..., batch_id) matches DDL
-            out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).insertInto(table)
-        else:
-            # only this batch's directory is ever (over)written — overwrite
-            # here is idempotent-retry safety, not corpus truncation
-            out.write.mode("overwrite").option("compression", "snappy").parquet(
-                f"{path}/batch_id={batch_id}"
-            )
+    def _write_batch(self, df: DataFrame, path: str, cols: tuple[str, ...],
+                     batch_id: int) -> None:
+        # only this batch's directory is ever (over)written — overwrite here
+        # is idempotent-retry safety, not corpus truncation
+        df.select(*cols).write.mode("overwrite").option(
+            "compression", "snappy"
+        ).parquet(f"{path}/batch_id={batch_id}")
 
     def append(self, bands: DataFrame, assign_delta: DataFrame,
                batch_id: int | None = None) -> int:
@@ -304,10 +228,8 @@ class IncrementalState:
         (new labels ∪ old-cluster re-labels). Bytes written are O(batch)."""
         if batch_id is None:
             batch_id = self.next_batch_id()
-        self._write_batch(bands, self.bands_path, self._bands_table, BANDS_COLS, batch_id)
-        self._write_batch(
-            assign_delta, self.components_path, self._assign_table, ASSIGN_COLS, batch_id
-        )
+        self._write_batch(bands, self.bands_path, BANDS_COLS, batch_id)
+        self._write_batch(assign_delta, self.components_path, ASSIGN_COLS, batch_id)
         return batch_id
 
     def bootstrap(self, bands: DataFrame, assignments: DataFrame, meta: dict) -> None:
@@ -323,9 +245,7 @@ class IncrementalState:
         Iceberg-compaction analogue; the old root stays readable until the
         caller swaps pointers). Bounds read amplification after many
         increments; never needed for correctness."""
-        fresh = IncrementalState(self.spark, new_root, n_buckets=self.n_buckets)
-        meta = self.read_meta() or {}
-        meta.pop("backend", None)
-        fresh.write_meta(meta)
+        fresh = IncrementalState(self.spark, new_root)
+        fresh.write_meta(self.read_meta() or {})
         fresh.append(self.read_bands(), self.read_assignments(), batch_id=0)
         return fresh

@@ -11,7 +11,7 @@ scaling-study corpora can be generated at any size:
 - one hot family of ``hot_size`` near-identical rows (skew driver);
 - remaining rows are unique documents of 80-400 tokens.
 
-Determinism: every token is ``tok{xxhash64(seed, ...) % vocab}`` — same seed
+Determinism: every token is ``tok{xxhash64(seed, ...) % VOCAB}`` — same seed
 ⇒ byte-identical corpus, any cluster size, any partitioning.
 """
 
@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+VOCAB = 2000  # distinct tokens
 
 
 def _canonical_template(seed: int, n_rows: int, hot_size: int):
@@ -44,7 +46,6 @@ def bench_corpus(
     spark: SparkSession,
     n_rows: int,
     seed: int = 42,
-    vocab: int = 2000,
     hot_size: int = 100,
     min_tokens: int = 80,
     max_tokens: int = 400,
@@ -129,7 +130,7 @@ def bench_corpus(
                     & (F.pmod(F.xxhash64(F.lit(seed), F.col("id"), i, F.lit("noise")), F.lit(50)) == 0),
                     F.xxhash64(F.lit(seed), F.col("id"), i, F.lit("sub")),
                 ).otherwise(F.xxhash64(F.lit(seed), F.col("template"), i, F.lit("tok"))),
-                F.lit(vocab),
+                F.lit(VOCAB),
             ),
         ),
     )

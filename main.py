@@ -48,14 +48,6 @@ def parse_args():
         "after exact-Jaccard verification).",
     )
     p.add_argument(
-        "--state-buckets",
-        type=int,
-        default=None,
-        help="incremental mode: persist state as external bucketed tables "
-        "(bands by band_key, components by u) so per-batch state joins and "
-        "the assignment fold never shuffle the corpus-sized side.",
-    )
-    p.add_argument(
         "--tiers",
         default="minhash",
         help="comma list from {exact,line,substr,minhash} (cascade always "
@@ -114,7 +106,7 @@ def run_incremental(spark, args, df, cfg, t0) -> None:
     )
     from daft_minhash_dedupe_spark.pipeline import MinHashDedupePipeline
 
-    state = IncrementalState(spark, args.prior_checkpoint, n_buckets=args.state_buckets)
+    state = IncrementalState(spark, args.prior_checkpoint)
     # a state root is appended IN PLACE: only a new batch_id partition is
     # ever written, so pointing --prior-checkpoint at a previous run's state
     # (including one under this run's own --output) can never truncate files
@@ -129,7 +121,7 @@ def run_incremental(spark, args, df, cfg, t0) -> None:
                 "checkpoint itself — pick a different --output"
             )
         state.validate_config(cfg)  # the full run's _META.json, if any
-        state = IncrementalState(spark, state_root, n_buckets=args.state_buckets)
+        state = IncrementalState(spark, state_root)
         state.bootstrap(
             spark.read.parquet(f"{args.prior_checkpoint}/bands"),
             spark.read.parquet(f"{args.prior_checkpoint}/components"),

@@ -153,10 +153,9 @@ def _split3(pages):
     return (pages.where(h == 0), pages.where(h == 1), pages.where(h == 2))
 
 
-@pytest.mark.parametrize("n_buckets", [None, 8])
-def test_state_chain_equals_full_run(spark, tmp_path, n_buckets):
-    """Three batches folded through the persisted IncrementalState (both
-    backends) must produce exactly the full-run cluster ids."""
+def test_state_chain_equals_full_run(spark, tmp_path):
+    """Three batches folded through the persisted IncrementalState must
+    produce exactly the full-run cluster ids."""
     raw, _ = generate_web_pages(spark, n_rows=240, seed=21)
     pages = prepare_web_pages(raw).localCheckpoint(eager=True)
     a, b, c = _split3(pages)
@@ -166,8 +165,8 @@ def test_state_chain_equals_full_run(spark, tmp_path, n_buckets):
     all_nodes, _, full_assigns = _stages(pipe, pages)
     full = {r["u"]: r["rep"] for r in full_assigns.collect()}
 
-    root = str(tmp_path / f"state_{n_buckets}")
-    state = IncrementalState(spark, root, n_buckets=n_buckets)
+    root = str(tmp_path / "state")
+    state = IncrementalState(spark, root)
     _, a_bands, a_assigns = _stages(pipe, a)
     state.bootstrap(a_bands, a_assigns, meta_from_config(cfg))
 
@@ -178,7 +177,7 @@ def test_state_chain_equals_full_run(spark, tmp_path, n_buckets):
         full,  # after folding c
     )
     for k, (batch, want) in enumerate(zip((b, c), prefix_full), start=1):
-        out = str(tmp_path / f"out_{n_buckets}_{k}")
+        out = str(tmp_path / f"out_{k}")
         assert pipe.fold(batch, state, out)["batch_id"] == k
         # the batch's cluster rows: every batch doc once, labelled with the
         # representative a full run over the corpus folded so far gives it
@@ -322,99 +321,136 @@ def test_fold_empty_batch(spark, tmp_path):
         assert merged.get(n, n) == full.get(n, n), f"node {n}"
 
 
-def test_legacy_meta_without_backend_reads_plain(spark, tmp_path):
-    """A _META.json predating the backend tag means the batch dirs were
-    written as plain parquet — a bucketed open request must be demoted, or
-    Spark would trust bucket metadata the files don't satisfy."""
-    import json
-    from pathlib import Path
+def _write_bucketed_root(spark, root, bands, assigns, meta):
+    """Write ``root`` the way the retired ``bucketed:N`` state backend did:
+    external bucketed catalog tables over ``bands/`` and ``components/``,
+    filled through ``insertInto`` as batch 0, then dropped (the files
+    stay)."""
+    tables = (
+        ("legacy_bucketed_bands", "bands", "band_key BIGINT, node BIGINT", "band_key", bands),
+        ("legacy_bucketed_components", "components", "u BIGINT, rep BIGINT", "u", assigns),
+    )
+    for name, sub, cols, key, df in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(
+            f"""CREATE TABLE {name} ({cols}, batch_id INT)
+            USING PARQUET PARTITIONED BY (batch_id)
+            CLUSTERED BY ({key}) SORTED BY ({key}) INTO 4 BUCKETS
+            LOCATION '{root}/{sub}'"""
+        )
+        df.withColumn("batch_id", F.lit(0)).write.mode("append").insertInto(name)
+    Path(root, "_META.json").write_text(
+        json.dumps({**meta, "layout": "incremental-v1", "backend": "bucketed:4"})
+    )
+    for name, *_ in tables:
+        spark.sql(f"DROP TABLE {name}")
 
-    bands = spark.createDataFrame([(1, 10), (1, 11)], "band_key long, node long")
-    assigns = spark.createDataFrame([(11, 10)], "u long, rep long")
 
-    root = str(tmp_path / "legacy")
-    st = IncrementalState(spark, root)  # plain-parquet backend
-    st.bootstrap(bands, assigns, meta_from_config(DedupeConfig()))
-    meta_path = Path(root) / "_META.json"
-    m = json.loads(meta_path.read_text())
-    del m["backend"]
-    meta_path.write_text(json.dumps(m))
-    # drop Hadoop's local-FS checksum sidecar: the out-of-band edit above
-    # would otherwise fail CRC validation on the next Hadoop read
-    (meta_path.parent / "._META.json.crc").unlink(missing_ok=True)
+@pytest.mark.parametrize("kind", ["meta_without_backend", "no_meta", "bucketed_writer"])
+def test_legacy_root_reads_and_folds(spark, tmp_path, kind):
+    """Roots from older writers read as plain parquet and fold on: a
+    _META.json without the ``backend`` tag, batches with no _META.json at
+    all, and a root the retired bucketed backend wrote (bucketed files,
+    ``"backend": "bucketed:4"`` in its meta). Each returns the written rows,
+    takes the next fold as batch 1, and then equals a full run."""
+    raw, _ = generate_web_pages(spark, n_rows=150, seed=11)
+    pages = prepare_web_pages(raw).localCheckpoint(eager=True)
+    a, b, _ = _split3(pages)
+    cfg = DedupeConfig()
+    pipe = MinHashDedupePipeline(cfg)
+    _, a_bands, a_assigns = _stages(pipe, a)
+    bands = a_bands.select("band_key", "node").localCheckpoint(eager=True)
+    assigns = a_assigns.select("u", "rep").localCheckpoint(eager=True)
 
-    reopened = IncrementalState(spark, root, n_buckets=8)
-    assert reopened.n_buckets is None
-    assert {(r["u"], r["rep"]) for r in reopened.read_assignments().collect()} == {
-        (11, 10)
+    root = str(tmp_path / kind)
+    if kind == "bucketed_writer":
+        _write_bucketed_root(spark, root, bands, assigns, meta_from_config(cfg))
+        assert any(Path(root, "bands", "batch_id=0").glob("*_0000[0-3]*.parquet"))
+    else:
+        IncrementalState(spark, root).bootstrap(bands, assigns, meta_from_config(cfg))
+        meta_path = Path(root) / "_META.json"
+        if kind == "no_meta":
+            meta_path.unlink()
+            (meta_path.parent / "._META.json.crc").unlink(missing_ok=True)
+        else:
+            assert "backend" not in json.loads(meta_path.read_text())
+
+    state = IncrementalState(spark, root)
+    assert state.is_state_root()
+    assert state.batch_ids() == [0]
+    state.validate_config(cfg)
+    assert sorted(state.read_bands().collect()) == sorted(bands.collect())
+    assert sorted(state.read_assignments().collect()) == sorted(assigns.collect())
+
+    assert pipe.fold(b, state, str(tmp_path / "out"))["batch_id"] == 1
+    assert state.batch_ids() == [0, 1]
+    nodes, _, full_assigns = _stages(pipe, a.unionByName(b))
+    full = {r["u"]: r["rep"] for r in full_assigns.collect()}
+    merged = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
+    for n in nodes:
+        assert merged.get(n, n) == full.get(n, n), f"node {n}"
+
+
+def test_fold_nfd_twins_join_their_base_clusters(spark, tmp_path):
+    """Non-ASCII text takes normalize's NFD UDF branch in a fold: a batch of
+    decomposed-accent twins ("cafe\\u0301") of composed-accent base docs
+    ("caf\\u00e9"), plus one non-Latin doc. Each twin's cluster row carries
+    its base doc's representative, and the folded state equals a full run
+    over base ∪ batch."""
+    import random
+    import unicodedata
+
+    from daft_minhash_dedupe_spark.functions.normalize import _PUNCT_CLASS
+
+    words = (
+        "café élan résumé naïve crème brûlée façade déjà señor über jalapeño "
+        "piñata fiancé entrée soufflé protégé cliché rosé sauté touché"
+    ).split()
+    rng = random.Random(5)
+    base_texts = {
+        f"base-{i}": ", ".join(" ".join(rng.choices(words, k=6)) for _ in range(6))
+        for i in range(6)
     }
-
-    # meta but NO batches on disk: nothing written yet, honor the request
-    root2 = tmp_path / "fresh"
-    root2.mkdir()
-    (root2 / "_META.json").write_text(json.dumps(m))
-    assert IncrementalState(spark, str(root2), n_buckets=8).n_buckets == 8
-
-
-def test_register_tables_once_per_instance(spark, tmp_path, monkeypatch):
-    """The bucketed backend's DROP/CREATE/RECOVER registration runs once per
-    instance, not once per read/write — appends flow through insertInto,
-    which keeps the catalog's partition list current by itself."""
-    bands = spark.createDataFrame([(1, 10), (1, 11)], "band_key long, node long")
-    assigns = spark.createDataFrame([(11, 10)], "u long, rep long")
-
-    root = str(tmp_path / "bucketed")
-    IncrementalState(spark, root, n_buckets=4).bootstrap(
-        bands, assigns, meta_from_config(DedupeConfig())
+    assert all(unicodedata.is_normalized("NFC", t) for t in base_texts.values())
+    twins = {f"twin-{i}": f"base-{i}" for i in range(3)}
+    batch_texts = {t: unicodedata.normalize("NFD", base_texts[b]) for t, b in twins.items()}
+    assert all(batch_texts[t] != base_texts[b] for t, b in twins.items())
+    batch_texts["greek-0"] = (
+        "η γρήγορη καφέ αλεπού πηδά πάνω από τον τεμπέλη σκύλο "
+        "και τρέχει στο δάσος με τους φίλους της κάθε πρωί"
     )
+    cfg = DedupeConfig()
+    pipe = MinHashDedupePipeline(cfg)
+    schema = f"{cfg.index_col} string, {cfg.content_col} string"
+    base = spark.createDataFrame(sorted(base_texts.items()), schema)
+    batch = spark.createDataFrame(sorted(batch_texts.items()), schema)
 
-    st = IncrementalState(spark, root)  # backend picked up from meta
-    assert st.n_buckets == 4
-    drops = []
-    orig_sql = spark.sql
+    # every batch row is still non-ASCII after punctuation removal, so it
+    # takes normalize's NFD UDF branch, not the JVM-only ASCII branch
+    stripped = F.regexp_replace(cfg.content_col, _PUNCT_CLASS, "")
+    assert batch.where(~stripped.rlike(r"^[\x00-\x7F]*$")).count() == len(batch_texts)
 
-    def spy(query, *args, **kwargs):
-        if query.lstrip().upper().startswith("DROP TABLE"):
-            drops.append(query)
-        return orig_sql(query, *args, **kwargs)
+    nodes, _, full_assigns = _stages(pipe, base.unionByName(batch))
+    full = {r["u"]: r["rep"] for r in full_assigns.collect()}
+    node_of = {r[cfg.index_col]: r["node_id"] for r in pipe.prep(base.unionByName(batch)).collect()}
 
-    monkeypatch.setattr(spark, "sql", spy)
-    assert st.read_bands().count() == 2  # first touch registers both tables
-    assert st.read_assignments().count() == 1
-    st.append(
-        spark.createDataFrame([(2, 12)], "band_key long, node long"),
-        spark.createDataFrame([(12, 12)], "u long, rep long"),
-    )
-    assert len(drops) == 2  # one DROP per table, only on the first touch
-    # and the post-registration append is still visible through the catalog
-    assert st.read_bands().count() == 3
+    state = IncrementalState(spark, str(tmp_path / "state"))
+    _, base_bands, base_assigns = _stages(pipe, base)
+    state.bootstrap(base_bands, base_assigns, meta_from_config(cfg))
+    out = str(tmp_path / "out")
+    assert pipe.fold(batch, state, out)["batch_id"] == 1
 
-
-def test_no_meta_legacy_batches_demote_bucketed_request(spark, tmp_path):
-    """Batches on disk with NO _META.json at all (state predating
-    fingerprinting) are plain parquet — a bucketed open request must be
-    demoted exactly like the tagless-meta case, or CLUSTERED BY tables get
-    created over non-bucketed files."""
-    import json
-    from pathlib import Path
-
-    bands = spark.createDataFrame([(1, 10), (1, 11)], "band_key long, node long")
-    assigns = spark.createDataFrame([(11, 10)], "u long, rep long")
-
-    root = str(tmp_path / "nometa")
-    IncrementalState(spark, root).bootstrap(
-        bands, assigns, meta_from_config(DedupeConfig())
-    )
-    meta_path = Path(root) / "_META.json"
-    meta_path.unlink()
-    (meta_path.parent / "._META.json.crc").unlink(missing_ok=True)
-
-    reopened = IncrementalState(spark, root, n_buckets=8)
-    assert reopened.n_buckets is None
-    assert reopened.is_state_root()
-    assert {(r["u"], r["rep"]) for r in reopened.read_assignments().collect()} == {
-        (11, 10)
-    }
+    got = {r[cfg.index_col]: r[cfg.component_col] for r in spark.read.parquet(f"{out}/clusters").collect()}
+    assert set(got) == set(batch_texts)
+    for twin, doc in twins.items():
+        rep = full.get(node_of[doc], node_of[doc])
+        assert rep == full.get(node_of[twin], node_of[twin]), f"{twin} left {doc}'s cluster"
+        assert got[twin] == rep, twin
+    greek = node_of["greek-0"]
+    assert got["greek-0"] == full.get(greek, greek)
+    merged = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
+    for n in nodes:
+        assert merged.get(n, n) == full.get(n, n), f"node {n}"
 
 
 def test_legacy_meta_missing_kernel_means_arrow(spark, tmp_path):
@@ -452,30 +488,6 @@ def test_fold_releases_cached_band_table(spark, tmp_path):
     spark.catalog.clearCache()
     pipe.fold(b, state, str(tmp_path / "out"))["delta"].collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
-
-
-def test_bucketed_read_recovers_externally_added_partitions(spark, tmp_path):
-    """Reads re-run RECOVER PARTITIONS (no DROP/CREATE) so batches appended
-    by another session — whose insertInto updated ITS catalog, not ours —
-    are visible. Simulated by dropping a partition from the catalog after
-    registration: the stale-catalog read must still see every batch."""
-    bands = spark.createDataFrame([(1, 10), (2, 20)], "band_key long, node long")
-    assigns = spark.createDataFrame([(10, 10)], "u long, rep long")
-
-    root = str(tmp_path / "xsession")
-    IncrementalState(spark, root, n_buckets=4).bootstrap(
-        bands, assigns, meta_from_config(DedupeConfig())
-    )
-    st = IncrementalState(spark, root)
-    assert st.read_bands().count() == 2  # registers tables
-    st.append(
-        spark.createDataFrame([(3, 30)], "band_key long, node long"),
-        spark.createDataFrame([(30, 30)], "u long, rep long"),
-    )
-    # simulate the stale catalog a DIFFERENT session would have: forget the
-    # appended partition, then read — RECOVER must re-discover it
-    spark.sql(f"ALTER TABLE {st._bands_table} DROP PARTITION (batch_id=1)")
-    assert st.read_bands().count() == 3
 
 
 def _jobs_of(spark, group, fn):

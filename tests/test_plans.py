@@ -78,48 +78,6 @@ def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
 
 
-def test_incremental_state_bucketed_fold_and_semijoin_shuffle_free(spark, tmp_path):
-    """The two per-batch state touches of incremental dedup must never
-    shuffle the corpus-sized side when the state uses the bucketed backend:
-    (a) the assignment fold (groupBy u over components CLUSTERED BY u) has
-    ZERO Exchange; (b) the old-bands semi-join on band_key shuffles ONLY the
-    new batch's touched-keys side (exactly one Exchange, none above the
-    bucketed scan)."""
-    from daft_minhash_dedupe_spark.operators.state import IncrementalState
-
-    state = IncrementalState(spark, str(tmp_path / "bstate"), n_buckets=8)
-    bands = spark.range(0, 2000).select(
-        (F.col("id") % 97).alias("band_key"), F.col("id").alias("node")
-    )
-    assigns = spark.range(0, 500).select(
-        F.col("id").alias("u"), (F.col("id") % 50).alias("rep")
-    )
-    state.bootstrap(bands, assigns, {"num_perm": 64})
-    state.append(bands.where("node >= 1900"), assigns.where("u >= 450"))
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        fold_plan = _plan(state.read_assignments())
-        assert "Exchange" not in fold_plan, fold_plan
-        assert "Bucketed: true" in fold_plan
-
-        touched = (
-            spark.range(0, 10).select((F.col("id") * 7).alias("band_key")).distinct()
-        )
-        joined = state.read_bands().join(touched, "band_key")
-        plan = _plan(joined)
-        import re
-
-        # formatted mode prints each node in the tree AND a detail section —
-        # count distinct Exchange node ids
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan  # touched side only
-        assert "Bucketed: true" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_curate_corpus_gates_in_scan_stage(spark):
     """The curation pipeline's quality and language gates must stay pure
     Catalyst (no Python nodes anywhere in the plan) and be evaluated against
