@@ -46,7 +46,10 @@ from daft_minhash_dedupe_spark.extras.text_analysis import (
 from daft_minhash_dedupe_spark.functions.minhash import add_shingles, minhash_signature
 from daft_minhash_dedupe_spark.functions.normalize import normalize_text
 from daft_minhash_dedupe_spark.operators.banding import lsh_band_buckets
-from daft_minhash_dedupe_spark.operators.components import connected_components
+from daft_minhash_dedupe_spark.operators.components import (
+    CC_DRIVER_FALLBACK_EDGES,
+    connected_components,
+)
 from daft_minhash_dedupe_spark.operators.edges import build_edges_from_buckets
 from daft_minhash_dedupe_spark.pipeline import MinHashDedupePipeline
 
@@ -168,7 +171,7 @@ def _verified_from_shared_stages(spark: SparkSession, sf_dir: str) -> dict:
         edges,
         algorithm=cfg.algorithm,
         max_loops=cfg.max_loops,
-        driver_fallback_edges=cfg.cc_driver_fallback_edges,
+        driver_fallback_edges=CC_DRIVER_FALLBACK_EDGES,
     )
     clusters, results = pipe.merge(base["prepped"], assignments, base["id_map"])
     return {
@@ -286,7 +289,7 @@ def _q_cc_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # under 100k edges the bounded-collect union-find replaces the multi-job
     # distributed loop — output-equality tested in tests/test_components.py
     assigns = connected_components(
-        edges, algorithm="two_phase", driver_fallback_edges=100_000
+        edges, algorithm="two_phase", driver_fallback_edges=CC_DRIVER_FALLBACK_EDGES
     )
     return (
         docs.join(assigns.withColumnRenamed("u", "doc_id"), "doc_id", "left")
@@ -941,14 +944,14 @@ def _q_kernel_fp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end incremental-dedup parity as a driver-adjudicated row: split
-    the corpus into two batches, fold batch B into batch A's state with
-    incremental_assignments, and count nodes whose cluster id differs from a
-    full run over A∪B — must be 0 (the oracle asserts it)."""
-    from daft_minhash_dedupe_spark.operators.components import connected_components
-    from daft_minhash_dedupe_spark.operators.edges import build_edges_from_buckets
-    from daft_minhash_dedupe_spark.operators.incremental import (
-        incremental_assignments,
-        merge_assignment_tables,
+    the corpus into two batches, fold batch B into batch A's persisted state
+    with incremental_assignments + IncrementalState.append (as pipe.fold
+    does), and count nodes whose cluster id differs from a full run over
+    A∪B — must be 0 (the oracle asserts it)."""
+    from daft_minhash_dedupe_spark.operators.incremental import incremental_assignments
+    from daft_minhash_dedupe_spark.operators.state import (
+        IncrementalState,
+        meta_from_config,
     )
 
     # Full A∪B run: reuse the memoized flagship pipeline (identical semantics
@@ -970,23 +973,28 @@ def _q_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_assigns = connected_components(
         build_edges_from_buckets(a_bands),
         algorithm="hash_to_min",
-        driver_fallback_edges=100_000,
+        driver_fallback_edges=CC_DRIVER_FALLBACK_EDGES,
     )
-    # the returned frame reads the fold's edges lazily, so their directory
-    # lives in this application's memo: it is removed when a later
-    # application drops the memo, or at interpreter exit
-    edges_dir = _memo(
-        spark, ("incremental_edges_dir", sf_dir),
-        lambda: tempfile.TemporaryDirectory(prefix="incr_edges_"),
+    # the returned frame reads the state and the fold's edges lazily, so
+    # they live under a directory in this application's memo: it is removed
+    # when a later application drops the memo, or at interpreter exit. Each
+    # call gets a fresh root, since bootstrap refuses a non-empty one.
+    work = _memo(
+        spark, ("incremental_parity_dir", sf_dir),
+        lambda: tempfile.TemporaryDirectory(prefix="incr_parity_"),
     )
+    run_dir = tempfile.mkdtemp(dir=work.name)
+    state = IncrementalState(spark, f"{run_dir}/state")
+    state.bootstrap(a_bands, a_assigns, meta_from_config(DedupeConfig()))
     new_assign, old_updates = incremental_assignments(
         b_bands,
-        a_bands,
-        a_assigns,
-        edges_dir.name,
-        driver_fallback_edges=100_000,
+        state.read_bands(),
+        state.read_assignments(),
+        run_dir,
+        driver_fallback_edges=CC_DRIVER_FALLBACK_EDGES,
     )
-    merged = merge_assignment_tables(a_assigns, new_assign, old_updates)
+    state.append(b_bands, new_assign.unionByName(old_updates))
+    merged = state.read_assignments()
 
     nodes = prepped_all.select("node_id").distinct()
     cmp = (

@@ -95,19 +95,10 @@ class DedupeConfig:
     max_loops: int = 100
     # North-star addition (not in reference): exact-Jaccard verification of
     # LSH candidate pairs before clustering. Verified paths generate pairwise
-    # within-bucket candidates (capped at pairwise_cap members, star fallback
-    # for hot buckets) — star edges alone can orphan a true pair whose bucket
-    # min fails verification against both endpoints.
+    # within-bucket candidates (star fallback for hot buckets) — star edges
+    # alone can orphan a true pair whose bucket min fails verification
+    # against both endpoints.
     verify_pairs: bool = False
-    pairwise_cap: int = 64
-    # Skew handling: number of salts for the two-phase salted band aggregation.
-    num_salts: int = 16
-    # Scale-adaptive CC: edge sets at or under this bound run driver-side
-    # union-find (identical output) instead of the iterative distributed
-    # loop — the AQE-broadcast analogue for tiny graphs. 100k edges ≈ 2 MB
-    # collected; bigger edge sets always take the distributed path.
-    cc_driver_fallback_edges: int = 100_000
-    checkpoint_dir: str | None = None
     B: int = field(init=False)
     R: int = field(init=False)
 

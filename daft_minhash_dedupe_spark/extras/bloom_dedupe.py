@@ -32,8 +32,7 @@ co-partitioned). The driver-side alternative
 (``DataFrameStatFunctions.bloomFilter``) collects the filter to the
 driver; this formulation keeps it distributed and incrementally
 unionable (new batch's bits ∪ old bits = updated filter, an append, not
-a rebuild). For the TRUE fixed-memory artifact see the packed-bitmap
-path below (``bloom_bitmap_build`` / ``flag_bloom_duplicates_bitmap``).
+a rebuild).
 
 Sizing: FPR ≈ (1 - e^(-k·n/m))^k; the classic optimum k = (m/n)·ln2.
 ``expected_fpr`` computes it so tests can assert the measured rate.
@@ -91,14 +90,6 @@ def bloom_build(
     )
 
 
-def _check_out_col(batch: DataFrame, out_col: str) -> None:
-    if out_col in batch.columns:
-        raise ValueError(
-            f"out_col {out_col!r} already exists in the batch frame; "
-            "pass a different out_col"
-        )
-
-
 def flag_bloom_duplicates(
     seen: DataFrame,
     batch: DataFrame,
@@ -120,11 +111,15 @@ def flag_bloom_duplicates(
     distinct matches so a self-colliding probe array can't inflate the count.
     The probe groups by (id, text-digest) — not id alone — so batch rows
     that share an id but carry different texts each get their OWN text's
-    flag, matching the per-row bitmap path exactly.
+    flag.
     """
     if "_th" in batch.columns:
         raise ValueError("batch must not carry a '_th' column (internal name)")
-    _check_out_col(batch, out_col)
+    if out_col in batch.columns:
+        raise ValueError(
+            f"out_col {out_col!r} already exists in the batch frame; "
+            "pass a different out_col"
+        )
     bits = bloom_build(seen, text_col, m, k, seed).withColumn("_set", F.lit(1))
     if broadcast_bits:
         bits = F.broadcast(bits)
@@ -166,154 +161,3 @@ def bloom_dedupe(
 def expected_fpr(n_items: int, m: int, k: int = 4) -> float:
     """Theoretical false-positive rate after inserting ``n_items``."""
     return (1.0 - math.exp(-k * n_items / m)) ** k
-
-
-# -- packed-bitmap path ------------------------------------------------------
-#
-# The relational bit table above is SQL-adjudicable, but its probe is a join
-# whose build side grows with min(m, n_history·k) — at 10^12 docs the honest
-# scale shape is the filter AS AN ACTUAL BITMAP: m/8 bytes (2^30 bits =
-# 128 MiB), built once by a log-depth OR-reduce, broadcast to every
-# executor, and probed map-side with ZERO shuffle and zero join. Positions
-# use the same md5 scheme as ``bloom_positions``, so the bitmap path's
-# flags are bit-identical to the relational path's (pinned by test).
-
-
-def _md5_positions_py(text: str, m: int, k: int, seed: int) -> list:
-    """Pure-Python twin of ``bloom_positions`` (same md5('seed:i:text')
-    first-15-hex-chars scheme) — a TEST-ONLY reference implementation (the
-    production probe computes positions JVM-side); pinned equal to the
-    Catalyst expression by test_bloom_python_position_twin_matches_catalyst.
-    Null text hashes as 'seed:i' — concat_ws skips SQL NULLs, so the twin
-    must too."""
-    import hashlib
-
-    return [
-        int(
-            hashlib.md5(
-                (
-                    f"{seed}:{i}:{text}" if text is not None else f"{seed}:{i}"
-                ).encode("utf-8")
-            ).hexdigest()[:15],
-            16,
-        )
-        % m
-        for i in range(k)
-    ]
-
-
-def bloom_bitmap_build(
-    seen: DataFrame,
-    text_col: str = "text",
-    m: int = 1 << 20,
-    k: int = 4,
-    seed: int = 0,
-) -> bytes:
-    """The Bloom filter as m/8 packed little-endian-bit bytes.
-
-    Build shape: each partition folds its rows' positions into ONE
-    m/8-byte array map-side (bitmap OR is idempotent, so duplicate
-    positions need no distinct — the build is ZERO-shuffle), then the
-    per-partition bitmaps OR-reduce tree-fashion — the driver ever holds
-    only O(m/8) bytes, never a bit list, and the reduce is log-depth in
-    partition count (the same shape ``DataFrameStatFunctions.bloomFilter``
-    uses internally, kept here in user space so the artifact is portable
-    and incrementally unionable via ``bloom_bitmap_union``)."""
-    import numpy as np
-
-    if m % 8:
-        raise ValueError(f"m must be a multiple of 8, got {m}")
-    nbytes = m // 8
-    pos = seen.select(bloom_positions(F.col(text_col), m, k, seed).alias("_bp"))
-
-    def part_bitmap(rows):
-        arr = np.zeros(nbytes, dtype=np.uint8)
-        got = False
-        for row in rows:
-            for b in row[0]:
-                arr[b >> 3] |= np.uint8(1 << (b & 7))
-            got = True
-        if got:
-            yield arr.tobytes()
-
-    parts = pos.rdd.mapPartitions(part_bitmap)
-    # lazy all-zero seed partition (empty-history guard): built INSIDE its
-    # task so the closure ships an int, not an m/8-byte buffer
-    zero = seen.sparkSession.sparkContext.parallelize([nbytes], 1).map(
-        lambda n: b"\x00" * n
-    )
-    return zero.union(parts).treeReduce(bloom_bitmap_union)
-
-
-def bloom_bitmap_union(a: bytes, b: bytes) -> bytes:
-    """OR of two same-m bitmaps == the bitmap of the union of their inputs
-    (incremental update = build the new batch's bitmap, OR it in)."""
-    import numpy as np
-
-    if len(a) != len(b):
-        raise ValueError(f"bitmap length mismatch: {len(a)} vs {len(b)}")
-    return (
-        np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)
-    ).tobytes()
-
-
-def flag_bloom_duplicates_bitmap(
-    bitmap: bytes,
-    batch: DataFrame,
-    text_col: str = "text",
-    m: int = 1 << 20,
-    k: int = 4,
-    seed: int = 0,
-    out_col: str = "bloom_hit",
-) -> DataFrame:
-    """``batch`` + boolean ``out_col`` probed against a packed bitmap from
-    ``bloom_bitmap_build`` — broadcast + mapInPandas, no shuffle, no join;
-    per-batch probe cost is O(batch·k) regardless of history size. Flags
-    are bit-identical to ``flag_bloom_duplicates`` at the same (m, k, seed).
-
-    ``bitmap`` may be raw bytes OR an existing ``pyspark.Broadcast`` of the
-    bytes. Passing bytes broadcasts them for THIS call and leaves the
-    broadcast alive as long as the returned DataFrame may be recomputed —
-    a long-lived app probing many batches against one filter should
-    broadcast once (``sc.broadcast(bitmap)``) and pass the Broadcast, so
-    filter memory on the executors stays one copy instead of one per call.
-
-    Division of labor: the k md5 positions are computed JVM-side with the
-    SAME Catalyst expression the relational path and the build use
-    (``bloom_positions`` — native md5, codegen), so the Python side is a
-    pure vectorized numpy bitmap gather over the Arrow batch — no per-row
-    Python hashing anywhere in the probe."""
-    import numpy as np
-    from pyspark import Broadcast
-    from pyspark.sql import types as T
-
-    if "_bp" in batch.columns:
-        raise ValueError("batch must not carry a '_bp' column (internal name)")
-    _check_out_col(batch, out_col)
-    is_bc = isinstance(bitmap, Broadcast)
-    raw = bitmap.value if is_bc else bitmap
-    if len(raw) * 8 != m:
-        raise ValueError(f"bitmap carries {len(raw) * 8} bits, expected m={m}")
-    bc = bitmap if is_bc else batch.sparkSession.sparkContext.broadcast(raw)
-    schema = T.StructType(
-        batch.schema.fields + [T.StructField(out_col, T.BooleanType(), False)]
-    )
-    cols = batch.columns
-    with_pos = batch.withColumn(
-        "_bp", bloom_positions(F.col(text_col), m, k, seed)
-    )
-
-    def probe(batches):
-        arr = np.frombuffer(bc.value, dtype=np.uint8)
-        for pdf in batches:
-            out = pdf[cols].copy()
-            if len(pdf) == 0:
-                out[out_col] = np.array([], dtype=bool)
-            else:
-                pos = np.vstack(pdf["_bp"].to_numpy())  # (rows, k) int64
-                out[out_col] = (
-                    ((arr[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
-                )
-            yield out
-
-    return with_pos.mapInPandas(probe, schema=schema)

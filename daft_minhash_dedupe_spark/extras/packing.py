@@ -111,23 +111,3 @@ def pack_sequences(
         )
         .withColumn("n_seqs", (F.col("last_seq") - F.col("first_seq") + 1))
     )
-
-
-def packing_stats(
-    packed: DataFrame, seq_len: int, tokens_col: str = "n_tokens"
-) -> DataFrame:
-    """One-row rollup of a packing plan: total tokens, sequence count, and
-    the tail-waste fraction (padding in the final, partial sequence)."""
-    return packed.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(tokens_col).alias("total_tokens"),
-        (F.ceil(F.max("end_offset") / seq_len)).cast("long").alias("n_sequences"),
-    ).select(
-        "n_docs",
-        "total_tokens",
-        "n_sequences",
-        (
-            (F.col("n_sequences") * seq_len - F.col("total_tokens"))
-            / (F.col("n_sequences") * seq_len)
-        ).alias("pad_fraction"),
-    )

@@ -1,86 +1,19 @@
-"""Deterministic stratified sampling — training-mix construction.
+"""Per-group caps — training-mix construction.
 
-After dedup/curation, assembling a training mix means sampling each
-stratum (language, domain, quality bucket …) at its own rate. Spark's
-``df.sample``/``sampleBy`` are seeded but PARTITIONING-DEPENDENT (they
-draw from a per-partition RNG stream), so the selected set changes when
-the upstream plan repartitions — unacceptable for reproducible data
-recipes and for incremental runs that must make the same keep/drop
-decision for a document every time they see it.
-
-This implements content-keyed sampling instead: a document is kept iff
-    xxhash64(key, salt) mod 10^6  <  rate * 10^6
-which is a pure per-row Catalyst predicate — no shuffle, no RNG state,
-evaluated in the scan stage, and stable under any repartitioning,
-resume, or incremental re-run (the keep decision is a function of the
-KEY, not of execution). Different ``salt`` values give independent
-samples (e.g. disjoint train/validation draws use salt="train" /
-salt="valid" with complementary predicates).
-
-Scale shape: the fractions map is driver-side tiny (one entry per
-stratum); it compiles into a single CASE expression — the corpus never
-joins anything. This is the 100-TB-safe analogue of ``sampleBy``.
+After dedup/curation, a web-text mix limits how much any one group (a
+domain, a site, a language) may contribute: ``cap_per_group`` keeps the
+``k`` best rows of each group under a caller-given total order. The rank
+is a deterministic function of the rows and the order, so the survivor set
+is stable under any repartitioning, resume or re-run.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-_BUCKETS = 1_000_000
-
-
-def sample_bucket(key: Column, salt: str = "") -> Column:
-    """Deterministic bucket in [0, 10^6) for a key column: the uniform
-    coordinate every sampling decision is made against."""
-    return F.pmod(F.xxhash64(key, F.lit(salt)), F.lit(_BUCKETS))
-
-
-def deterministic_sample(
-    df: DataFrame,
-    fraction: float,
-    key_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """Keep a deterministic ~``fraction`` of rows, decided per key.
-
-    Repartition-stable and replay-stable: the same (key, salt) is kept or
-    dropped identically in every run, plan, and batch.
-    """
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    threshold = int(round(fraction * _BUCKETS))
-    return df.where(sample_bucket(F.col(key_col), salt) < F.lit(threshold))
-
-
-def stratified_sample(
-    df: DataFrame,
-    fractions: Mapping[str, float],
-    strata_col: str = "lang",
-    key_col: str = "doc_id",
-    salt: str = "",
-    default_fraction: float = 0.0,
-) -> DataFrame:
-    """Per-stratum deterministic sampling (the training-mix recipe op).
-
-    ``fractions`` maps stratum value -> keep rate; strata absent from the
-    map keep ``default_fraction`` (0.0 = drop, the safe default for a
-    curated mix). One CASE expression, scan-stage, no joins.
-    """
-    for k, v in fractions.items():
-        if not 0.0 <= v <= 1.0:
-            raise ValueError(f"fraction for stratum {k!r} must be in [0, 1], got {v}")
-    if not 0.0 <= default_fraction <= 1.0:
-        raise ValueError(f"default_fraction must be in [0, 1], got {default_fraction}")
-    threshold = F.lit(int(round(default_fraction * _BUCKETS)))
-    for k, v in sorted(fractions.items()):
-        threshold = F.when(
-            F.col(strata_col) == F.lit(k), F.lit(int(round(v * _BUCKETS)))
-        ).otherwise(threshold)
-    return df.where(sample_bucket(F.col(key_col), salt) < threshold)
 
 
 def cap_per_group(
@@ -132,25 +65,3 @@ def cap_per_group(
         survivors.withColumn(rank_col, F.row_number().over(w2))
         .where(F.col(rank_col) <= k)
     )
-
-
-def train_validation_split(
-    df: DataFrame,
-    validation_fraction: float = 0.01,
-    key_col: str = "doc_id",
-    salt: str = "split",
-) -> tuple[DataFrame, DataFrame]:
-    """Disjoint, exhaustive, deterministic (train, validation) split.
-
-    The two sides partition the bucket space, so membership is exclusive
-    and stable — a document can never leak from validation into training
-    across re-runs or incremental batches (the contamination mode ad-hoc
-    random splits invite).
-    """
-    if not 0.0 <= validation_fraction <= 1.0:
-        raise ValueError(
-            f"validation_fraction must be in [0, 1], got {validation_fraction}"
-        )
-    cut = int(round(validation_fraction * _BUCKETS))
-    bucket = sample_bucket(F.col(key_col), salt)
-    return df.where(bucket >= F.lit(cut)), df.where(bucket < F.lit(cut))

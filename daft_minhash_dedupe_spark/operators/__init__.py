@@ -17,10 +17,7 @@ from daft_minhash_dedupe_spark.operators.components import (
     large_star,
     small_star,
 )
-from daft_minhash_dedupe_spark.operators.incremental import (
-    incremental_assignments,
-    merge_assignment_tables,
-)
+from daft_minhash_dedupe_spark.operators.incremental import incremental_assignments
 from daft_minhash_dedupe_spark.operators.merge import cluster_table, survivors
 from daft_minhash_dedupe_spark.operators.verify import verify_pairs_exact_jaccard
 
@@ -39,7 +36,6 @@ __all__ = [
     "large_star",
     "small_star",
     "incremental_assignments",
-    "merge_assignment_tables",
     "cluster_table",
     "survivors",
     "verify_pairs_exact_jaccard",

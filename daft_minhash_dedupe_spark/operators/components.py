@@ -47,6 +47,13 @@ from daft_minhash_dedupe_spark.operators.edges import (
 
 Checkpoint = Callable[[DataFrame, str], DataFrame]
 
+# Scale-adaptive CC: edge sets at or under this bound run driver-side
+# union-find (identical output) instead of the iterative distributed loop —
+# the AQE-broadcast analogue for tiny graphs. 100k edges ≈ 2 MB collected;
+# bigger edge sets always take the distributed path. The pipeline and the
+# driver queries pass it; connected_components itself defaults to None.
+CC_DRIVER_FALLBACK_EDGES = 100_000
+
 
 def _local_checkpoint(df: DataFrame, _name: str) -> DataFrame:
     # lazy: the convergence-signature aggregation that immediately follows is

@@ -60,8 +60,10 @@ def incremental_assignments(
                  representative (every new node that joined any cluster).
     old_updates: (u, rep) for every old representative among the edge
                  nodes, plus the old members of each representative that
-                 moved — apply with a left join + coalesce over the stored
-                 assignment table.
+                 moved.
+
+    Apply both as the batch's delta: ``IncrementalState.append(new_bands,
+    new_assign ∪ old_updates)``, whose reads let the latest batch's label win.
     """
     # one salted two-phase min over the batch's rows (tagged new) and the
     # stored rows of the buckets the batch touches (tagged old) gives each
@@ -128,16 +130,3 @@ def incremental_assignments(
         .select("u", F.col("_moved_to").alias("rep"))
     )
     return new_assign, old_updates
-
-
-def merge_assignment_tables(
-    old_assignments: DataFrame, new_assign: DataFrame, old_updates: DataFrame
-) -> DataFrame:
-    """Full updated assignment table: old rows (re-labeled where a new doc
-    bridged clusters) plus the new batch's rows."""
-    upd = old_updates.withColumnRenamed("rep", "_new_rep")
-    refreshed = (
-        old_assignments.join(upd, "u", "left")
-        .select("u", F.coalesce("_new_rep", "rep").alias("rep"))
-    )
-    return refreshed.unionByName(new_assign.select("u", "rep"))

@@ -35,7 +35,10 @@ from daft_minhash_dedupe_spark.functions.normalize import (
 )
 from daft_minhash_dedupe_spark.io import StageCheckpointer, write_table
 from daft_minhash_dedupe_spark.operators.banding import lsh_band_buckets
-from daft_minhash_dedupe_spark.operators.components import connected_components
+from daft_minhash_dedupe_spark.operators.components import (
+    CC_DRIVER_FALLBACK_EDGES,
+    connected_components,
+)
 from daft_minhash_dedupe_spark.operators.edges import (
     build_edges_from_buckets,
     build_pair_edges_from_buckets,
@@ -166,16 +169,12 @@ class MinHashDedupePipeline:
         if c.verify_pairs:
             # pairwise within-bucket candidates so verification can't orphan
             # a true pair via a dropped star edge (see operators/verify.py)
-            edges = build_pair_edges_from_buckets(
-                buckets.select("band_key", "node"),
-                max_bucket_pairwise=c.pairwise_cap,
-                num_salts=c.num_salts,
-            )
+            edges = build_pair_edges_from_buckets(buckets.select("band_key", "node"))
             edges = verify_pairs_exact_jaccard(
                 edges, signatures, c.threshold, node_col="node_id", shingle_col="shingles"
             )
         else:
-            edges = build_edges_from_buckets(buckets, num_salts=c.num_salts)
+            edges = build_edges_from_buckets(buckets)
         return edges
 
     def merge(
@@ -203,7 +202,7 @@ class MinHashDedupePipeline:
         stage boundaries fall back to localCheckpoint (lineage severing only).
         """
         c = self.cfg
-        ck = checkpointer or StageCheckpointer(df.sparkSession, root=c.checkpoint_dir)
+        ck = checkpointer or StageCheckpointer(df.sparkSession)
 
         prepped = ck.stage("prepped", self.prep(df))
         id_map = prepped.select(c.index_col, "node_id").distinct()
@@ -240,7 +239,7 @@ class MinHashDedupePipeline:
                 algorithm=c.algorithm,
                 max_loops=c.max_loops,
                 checkpoint=ck.iter_checkpoint,
-                driver_fallback_edges=c.cc_driver_fallback_edges,
+                driver_fallback_edges=CC_DRIVER_FALLBACK_EDGES,
             ),
         )
         clusters, results = self.merge(prepped, assignments, id_map)
@@ -279,9 +278,8 @@ class MinHashDedupePipeline:
             state.read_bands(),
             state.read_assignments(),
             algorithm=c.algorithm,
-            num_salts=c.num_salts,
             edges_checkpoint_dir=f"{out_dir}/_work",
-            driver_fallback_edges=c.cc_driver_fallback_edges,
+            driver_fallback_edges=CC_DRIVER_FALLBACK_EDGES,
         )
         delta = (
             new_assign.withColumn("relabel", F.lit(False))

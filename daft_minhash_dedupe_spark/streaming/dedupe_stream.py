@@ -1,10 +1,9 @@
 """Structured Streaming operators (additive — the reference is pure batch,
 SURVEY §2.8; a continuously-crawled corpus needs an incremental ingest path).
 
-Patterns: ``withWatermark`` + ``dropDuplicates`` for bounded-state streaming
-exact dedup; watermarked tumbling-window aggregation for ingest monitoring.
-Both are transformations on an unbounded DataFrame — the caller picks the
-sink/trigger (tests use file source + availableNow + memory sink).
+Pattern: ``withWatermark`` + ``dropDuplicates`` for bounded-state streaming
+exact dedup. It is a transformation on an unbounded DataFrame — the caller
+picks the sink/trigger (tests use file source + availableNow + memory sink).
 """
 
 from __future__ import annotations
@@ -33,25 +32,4 @@ def streaming_exact_dedupe(
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["_digest"])
         .drop("_digest")
-    )
-
-
-def streaming_lang_counts(
-    stream: DataFrame,
-    ts_col: str = "warc_ts",
-    lang_col: str = "lang",
-    window: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Tumbling-window per-language ingest counts with late-data handling."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(lang_col))
-        .agg(F.count("*").alias("n_docs"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            lang_col,
-            "n_docs",
-        )
     )

@@ -207,7 +207,6 @@ def main() -> None:
         seed=args.seed,
         algorithm=args.algorithm,
         verify_pairs=args.verify_pairs,
-        checkpoint_dir=args.checkpoint,
     )
     if args.prior_checkpoint:
         run_incremental(spark, args, df, cfg, t0)

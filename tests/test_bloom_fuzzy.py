@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import functions as F
 
 
@@ -10,6 +12,26 @@ def _docs(spark, texts, id_offset=0):
         [(i + id_offset, t) for i, t in enumerate(texts)],
         "doc_id long, text string",
     )
+
+
+def _md5_positions_py(text, m, k, seed):
+    """Pure-Python twin of ``bloom_positions`` (same md5('seed:i:text')
+    first-15-hex-chars scheme) — the reference the Catalyst positions are
+    pinned against by test_bloom_python_position_twin_matches_catalyst.
+    Null text hashes as 'seed:i' — concat_ws skips SQL NULLs, so the twin
+    must too."""
+    return [
+        int(
+            hashlib.md5(
+                (
+                    f"{seed}:{i}:{text}" if text is not None else f"{seed}:{i}"
+                ).encode("utf-8")
+            ).hexdigest()[:15],
+            16,
+        )
+        % m
+        for i in range(k)
+    ]
 
 
 # -- fuzzy contamination -----------------------------------------------------
@@ -157,50 +179,12 @@ def test_bloom_filter_is_incrementally_unionable(spark):
     assert union_of_parts == direct
 
 
-def test_bloom_bitmap_flags_bit_identical_to_relational(spark):
-    """The packed-bitmap probe (broadcast + mapInPandas, zero shuffle) must
-    produce EXACTLY the relational path's flags — including the
-    deterministic false positives at a saturated m=512 — because both use
-    the same md5('seed:i:text') position scheme."""
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        flag_bloom_duplicates,
-        flag_bloom_duplicates_bitmap,
-    )
-
-    seen = _docs(spark, [f"history doc {i} body" for i in range(120)])
-    batch = _docs(
-        spark,
-        [f"novel doc {i} words" for i in range(60)]
-        + [f"history doc {i} body" for i in range(0, 120, 7)],  # recrawls
-        1000,
-    )
-    for m in (512, 1 << 16):
-        rel = sorted(
-            (r["doc_id"], r["bloom_hit"])
-            for r in flag_bloom_duplicates(seen, batch, m=m, k=3).collect()
-        )
-        bm = bloom_bitmap_build(seen, m=m, k=3)
-        bit = sorted(
-            (r["doc_id"], r["bloom_hit"])
-            for r in flag_bloom_duplicates_bitmap(bm, batch, m=m, k=3).collect()
-        )
-        assert bit == rel
-        # sanity: every recrawl flagged on both paths
-        hits = dict(bit)
-        assert all(hits[1060 + j] for j in range(len(range(0, 120, 7))))
-
-
 def test_bloom_paths_agree_on_duplicate_doc_ids(spark):
     """Batch rows sharing a doc_id but carrying DIFFERENT texts must each
-    get their own text's flag on BOTH paths (the relational probe groups by
-    (id, text-digest), not id alone — an id-only group would let an unseen
-    text's unset bits veto a seen sibling row)."""
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        flag_bloom_duplicates,
-        flag_bloom_duplicates_bitmap,
-    )
+    get their own text's flag (the probe groups by (id, text-digest), not
+    id alone — an id-only group would let an unseen text's unset bits veto
+    a seen sibling row)."""
+    from daft_minhash_dedupe_spark.extras.bloom_dedupe import flag_bloom_duplicates
 
     seen = _docs(spark, ["the seen text body"])
     batch = spark.createDataFrame(
@@ -212,12 +196,6 @@ def test_bloom_paths_agree_on_duplicate_doc_ids(spark):
         (r["doc_id"], r["text"], r["bloom_hit"])
         for r in flag_bloom_duplicates(seen, batch, m=m, k=k).collect()
     )
-    bm = bloom_bitmap_build(seen, m=m, k=k)
-    bit = sorted(
-        (r["doc_id"], r["text"], r["bloom_hit"])
-        for r in flag_bloom_duplicates_bitmap(bm, batch, m=m, k=k).collect()
-    )
-    assert rel == bit
     assert rel == [
         (7, "a never inserted text", False),
         (7, "the seen text body", True),
@@ -225,36 +203,11 @@ def test_bloom_paths_agree_on_duplicate_doc_ids(spark):
     ]
 
 
-def test_bloom_bitmap_accepts_prebuilt_broadcast(spark):
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        flag_bloom_duplicates_bitmap,
-    )
-
-    seen = _docs(spark, ["alpha", "beta"])
-    batch = _docs(spark, ["alpha", "gamma"], 10)
-    m = 1 << 16
-    bm = bloom_bitmap_build(seen, m=m, k=3)
-    bc = spark.sparkContext.broadcast(bm)
-    via_bytes = sorted(
-        (r["doc_id"], r["bloom_hit"])
-        for r in flag_bloom_duplicates_bitmap(bm, batch, m=m, k=3).collect()
-    )
-    via_bc = sorted(
-        (r["doc_id"], r["bloom_hit"])
-        for r in flag_bloom_duplicates_bitmap(bc, batch, m=m, k=3).collect()
-    )
-    assert via_bytes == via_bc == [(10, True), (11, False)]
-
-
 def test_bloom_python_position_twin_matches_catalyst(spark):
     """_md5_positions_py is the documented pure-Python reference for the
     Catalyst position scheme — pin them equal, including the NULL-text
     concat_ws edge."""
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        _md5_positions_py,
-        bloom_positions,
-    )
+    from daft_minhash_dedupe_spark.extras.bloom_dedupe import bloom_positions
 
     df = spark.createDataFrame(
         [("hello world",), ("",), (None,), ("päge ünïcode",)], "text string"
@@ -271,89 +224,46 @@ def test_bloom_python_position_twin_matches_catalyst(spark):
     assert got == want
 
 
-def test_bloom_bitmap_union_equals_bitmap_of_union(spark):
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        bloom_bitmap_union,
-    )
+def test_bloom_null_text_matches_python_twin(spark):
+    """concat_ws skips NULLs on the Catalyst side, so a null text hashes
+    the 'seed:i' key; the flags must equal the Python twin's derivation,
+    which hashes a null text the same way."""
+    from daft_minhash_dedupe_spark.extras.bloom_dedupe import flag_bloom_duplicates
 
-    a = _docs(spark, [f"wave one {i}" for i in range(40)])
-    b = _docs(spark, [f"wave two {i}" for i in range(40)], 100)
-    direct = bloom_bitmap_build(a.unionByName(b), m=4096, k=3)
-    ored = bloom_bitmap_union(
-        bloom_bitmap_build(a, m=4096, k=3), bloom_bitmap_build(b, m=4096, k=3)
-    )
-    assert direct == ored
-
-
-def test_bloom_bitmap_null_text_matches_relational(spark):
-    """concat_ws skips NULLs on the Catalyst side; the Python twin must hash
-    the same 'seed:i' key for a null text so the paths stay bit-identical."""
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        flag_bloom_duplicates,
-        flag_bloom_duplicates_bitmap,
-    )
-
+    seen_texts = [None, "real text"]
+    batch_texts = {10: None, 11: "real text", 12: "unseen"}
     seen = spark.createDataFrame(
-        [(0, None), (1, "real text")], "doc_id long, text string"
+        list(enumerate(seen_texts)), "doc_id long, text string"
     )
     batch = spark.createDataFrame(
-        [(10, None), (11, "real text"), (12, "unseen")],
-        "doc_id long, text string",
+        list(batch_texts.items()), "doc_id long, text string"
     )
-    m, k = 1 << 16, 3
-    rel = sorted(
-        (r["doc_id"], r["bloom_hit"])
-        for r in flag_bloom_duplicates(seen, batch, m=m, k=k).collect()
-    )
-    bm = bloom_bitmap_build(seen, m=m, k=k)
-    bit = sorted(
-        (r["doc_id"], r["bloom_hit"])
-        for r in flag_bloom_duplicates_bitmap(bm, batch, m=m, k=k).collect()
-    )
-    assert bit == rel
-    assert dict(bit)[10] is True and dict(bit)[11] is True
+    m, k, seed = 1 << 16, 3, 0
+    bits = {p for t in seen_texts for p in _md5_positions_py(t, m, k, seed)}
+    want = {
+        i: all(p in bits for p in _md5_positions_py(t, m, k, seed))
+        for i, t in batch_texts.items()
+    }
+    rel = {
+        r["doc_id"]: r["bloom_hit"]
+        for r in flag_bloom_duplicates(seen, batch, m=m, k=k, seed=seed).collect()
+    }
+    assert rel == want
+    assert rel[10] is True and rel[11] is True
 
 
 def test_bloom_rejects_internal_column_collisions(spark):
-    """The probes add temp columns _th / _bp; a batch already carrying one
-    must fail loudly instead of having user data silently clobbered."""
+    """The probe adds the temp column _th; a batch already carrying it must
+    fail loudly instead of having user data silently clobbered."""
     import pytest
 
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        flag_bloom_duplicates,
-        flag_bloom_duplicates_bitmap,
-    )
+    from daft_minhash_dedupe_spark.extras.bloom_dedupe import flag_bloom_duplicates
 
     seen = _docs(spark, ["x"])
     with pytest.raises(ValueError, match="_th"):
         flag_bloom_duplicates(
             seen, _docs(spark, ["y"]).withColumn("_th", F.lit(1)), m=4096
         )
-    bm = bloom_bitmap_build(seen, m=4096, k=3)
-    with pytest.raises(ValueError, match="_bp"):
-        flag_bloom_duplicates_bitmap(
-            bm, _docs(spark, ["y"]).withColumn("_bp", F.lit(1)), m=4096, k=3
-        )
-
-
-def test_bloom_bitmap_rejects_bad_sizing(spark):
-    import pytest
-
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        bloom_bitmap_union,
-        flag_bloom_duplicates_bitmap,
-    )
-
-    with pytest.raises(ValueError):
-        bloom_bitmap_build(_docs(spark, ["x"]), m=100, k=3)  # not mult of 8
-    with pytest.raises(ValueError):
-        bloom_bitmap_union(b"\x00" * 8, b"\x00" * 16)
-    with pytest.raises(ValueError):
-        flag_bloom_duplicates_bitmap(b"\x00" * 8, _docs(spark, ["x"]), m=4096)
 
 
 from hypothesis import given, settings  # noqa: E402
@@ -369,16 +279,11 @@ _bloom_texts = st.lists(
 def test_bloom_paths_match_python_oracle_on_random_texts(
     spark, seen_texts, batch_texts
 ):
-    """Three-way pin over arbitrary unicode: relational flags == bitmap
-    flags == a dependency-free pure-Python Bloom oracle, at a deliberately
-    tiny m=256 where false positives are common (so the FP sets must agree
-    too, not just the planted hits)."""
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        _md5_positions_py,
-        bloom_bitmap_build,
-        flag_bloom_duplicates,
-        flag_bloom_duplicates_bitmap,
-    )
+    """Pin over arbitrary unicode: relational flags == a dependency-free
+    pure-Python Bloom oracle, at a deliberately tiny m=256 where false
+    positives are common (so the FP sets must agree too, not just the
+    planted hits)."""
+    from daft_minhash_dedupe_spark.extras.bloom_dedupe import flag_bloom_duplicates
 
     m, k, seed = 256, 3, 0
     seen = _docs(spark, seen_texts)
@@ -394,13 +299,7 @@ def test_bloom_paths_match_python_oracle_on_random_texts(
         r["doc_id"]: r["bloom_hit"]
         for r in flag_bloom_duplicates(seen, batch, m=m, k=k, seed=seed).collect()
     }
-    bm = bloom_bitmap_build(seen, m=m, k=k, seed=seed)
-    bit = {
-        r["doc_id"]: r["bloom_hit"]
-        for r in flag_bloom_duplicates_bitmap(bm, batch, m=m, k=k, seed=seed).collect()
-    }
     assert rel == want
-    assert bit == want
 
 
 def test_bloom_positions_rejects_bad_sizing(spark):
@@ -415,15 +314,11 @@ def test_bloom_positions_rejects_bad_sizing(spark):
 
 
 def test_bloom_out_col_collision_rejected(spark):
-    """ADVICE r5: a batch already carrying the out_col name must be rejected
-    (both probe paths), not silently produce duplicate/ambiguous columns."""
+    """ADVICE r5: a batch already carrying the out_col name must be rejected,
+    not silently produce duplicate/ambiguous columns."""
     import pytest
 
-    from daft_minhash_dedupe_spark.extras.bloom_dedupe import (
-        bloom_bitmap_build,
-        flag_bloom_duplicates,
-        flag_bloom_duplicates_bitmap,
-    )
+    from daft_minhash_dedupe_spark.extras.bloom_dedupe import flag_bloom_duplicates
 
     seen = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     batch = spark.createDataFrame(
@@ -431,6 +326,3 @@ def test_bloom_out_col_collision_rejected(spark):
     )
     with pytest.raises(ValueError, match="out_col"):
         flag_bloom_duplicates(seen, batch, m=64, k=2)
-    bitmap = bloom_bitmap_build(seen, m=64, k=2)
-    with pytest.raises(ValueError, match="out_col"):
-        flag_bloom_duplicates_bitmap(bitmap, batch, m=64, k=2)

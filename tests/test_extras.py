@@ -563,31 +563,6 @@ def test_curate_corpus_each_gate(spark):
     assert {"doc_id", "text", "quality", "lang"} <= cols
 
 
-def test_audio_fp64_unit():
-    from daft_minhash_dedupe_spark.extras.media_fingerprint import audio_fp64
-
-    # 8 windows of 1 sample each: bit k = x[(k+1)%8] > x[k], hand-checked
-    x = np.array([10, 20, 5, 5, 30, 10, 40, 40], dtype=np.uint8)
-    # deltas: 20>10 T, 5>20 F, 5>5 F, 30>5 T, 10>30 F, 40>10 T, 40>40 F, 10>40 F
-    assert audio_fp64(x, n_windows=8) == 0b0101001
-    # constant DC offset cancels in the deltas
-    assert audio_fp64(x + 50, n_windows=8) == audio_fp64(x, n_windows=8)
-    # 256 samples -> 64 windows of 4; offset invariance at the real shape
-    rng = np.random.default_rng(5)
-    y = rng.integers(0, 200, size=256, dtype=np.uint8)
-    assert audio_fp64(y) == audio_fp64(y + 20)
-
-
-def test_video_fp64_majority_vote():
-    from daft_minhash_dedupe_spark.extras.media_fingerprint import video_fp64
-
-    assert video_fp64([0b1011, 0b1011, 0b0100]) == 0b1011
-    assert video_fp64([-1, -1, 0]) == -1  # signed int64 round trip
-    assert video_fp64([0b01, 0b10]) == 0  # even split: strict majority
-    with pytest.raises(ValueError):
-        video_fp64([])
-
-
 def test_asof_join_random_vs_bruteforce(spark):
     """Randomized property: for every left row, asof value equals the
     brute-force 'latest right row with ts <= left.ts and same key' (with the
@@ -1177,82 +1152,6 @@ def test_curate_corpus_perplexity_gate(spark):
 
 
 # ---------------------------------------------------------------------------
-# Deterministic stratified sampling (extras/sampling.py)
-# ---------------------------------------------------------------------------
-
-
-def test_deterministic_sample_stable_under_repartition(spark):
-    """The kept set is a function of (key, salt) only — identical across
-    plans, partitionings, and re-runs; different salts draw independently."""
-    from daft_minhash_dedupe_spark.extras.sampling import deterministic_sample
-
-    df = spark.range(0, 4000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in deterministic_sample(df, 0.25).collect()}
-    b = {
-        r["doc_id"]
-        for r in deterministic_sample(df.repartition(17, "doc_id"), 0.25).collect()
-    }
-    assert a == b
-    # rate lands near 25% (xxhash64 uniformity; 4k keys -> ~2% sigma)
-    assert 0.20 <= len(a) / 4000 <= 0.30
-    c = {r["doc_id"] for r in deterministic_sample(df, 0.25, salt="other").collect()}
-    assert c != a  # independent draw
-    # monotone nesting: a higher rate with the same salt is a superset
-    sup = {r["doc_id"] for r in deterministic_sample(df, 0.5).collect()}
-    assert a <= sup
-
-
-def test_stratified_sample_per_stratum_rates(spark):
-    from daft_minhash_dedupe_spark.extras.sampling import stratified_sample
-
-    rows = [(i, "en" if i % 2 == 0 else ("fr" if i % 4 == 1 else "de"))
-            for i in range(6000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = stratified_sample(df, {"en": 0.5, "fr": 0.1}).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], set()).add(r["doc_id"])
-    n_en, n_fr = 3000, 1500
-    assert 0.42 <= len(by_lang.get("en", ())) / n_en <= 0.58
-    assert 0.05 <= len(by_lang.get("fr", ())) / n_fr <= 0.16
-    assert "de" not in by_lang  # default_fraction=0 drops unmapped strata
-    # keep decision matches the single-rate sampler at the same salt
-    from daft_minhash_dedupe_spark.extras.sampling import deterministic_sample
-
-    solo = {r["doc_id"] for r in
-            deterministic_sample(df.where("lang = 'en'"), 0.5).collect()}
-    assert by_lang["en"] == solo
-
-
-def test_train_validation_split_disjoint_exhaustive(spark):
-    from daft_minhash_dedupe_spark.extras.sampling import train_validation_split
-
-    df = spark.range(0, 3000).withColumnRenamed("id", "doc_id")
-    train, valid = train_validation_split(df, validation_fraction=0.1)
-    t = {r["doc_id"] for r in train.collect()}
-    v = {r["doc_id"] for r in valid.collect()}
-    assert t & v == set()
-    assert t | v == set(range(3000))
-    assert 0.05 <= len(v) / 3000 <= 0.16
-
-
-def test_sampling_rejects_bad_fractions(spark):
-    from daft_minhash_dedupe_spark.extras.sampling import (
-        deterministic_sample,
-        stratified_sample,
-        train_validation_split,
-    )
-
-    df = spark.range(3).withColumnRenamed("id", "doc_id")
-    with pytest.raises(ValueError):
-        deterministic_sample(df, 1.5)
-    with pytest.raises(ValueError):
-        stratified_sample(df.withColumn("lang", F.lit("en")), {"en": -0.1})
-    with pytest.raises(ValueError):
-        train_validation_split(df, 2.0)
-
-
-# ---------------------------------------------------------------------------
 # Per-group caps (extras/sampling.cap_per_group)
 # ---------------------------------------------------------------------------
 
@@ -1417,24 +1316,6 @@ def test_pack_sequences_bucket_count_invariance(spark):
         assert cur[2] == prev[3]
 
 
-def test_packing_stats_rollup(spark):
-    from daft_minhash_dedupe_spark.extras.packing import (
-        pack_sequences,
-        packing_stats,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 100), (2, 50), (3, 0), (4, 30)], "doc_id long, n_tokens long"
-    )
-    packed = pack_sequences(df, seq_len=64, n_buckets=2)
-    row = packing_stats(packed, 64).collect()[0]
-    # 180 tokens total (zero-token doc dropped) -> ceil(180/64) = 3 sequences
-    assert row["n_docs"] == 3
-    assert row["total_tokens"] == 180
-    assert row["n_sequences"] == 3
-    assert abs(row["pad_fraction"] - (3 * 64 - 180) / (3 * 64)) < 1e-12
-
-
 def test_pack_sequences_rejects_bad_args(spark):
     from daft_minhash_dedupe_spark.extras.packing import pack_sequences
 
@@ -1443,163 +1324,6 @@ def test_pack_sequences_rejects_bad_args(spark):
         pack_sequences(df, 0)
     with pytest.raises(ValueError):
         pack_sequences(df, 10, n_buckets=-1)
-
-
-# ---------------------------------------------------------------------------
-# DSIR importance resampling (extras/dsir.py)
-# ---------------------------------------------------------------------------
-
-
-def _py_dsir_buckets(text, n_buckets):
-    """Pure-Python mirror of ngram_feature_buckets via the repo's xxh64
-    oracle (pmod of a signed long by B == unsigned % B is NOT generally
-    true, but Spark's pmod is the math mod, which python's % matches)."""
-    from daft_minhash_dedupe_spark.oracle import xxh64_signed
-
-    toks = [t for t in text.lower().split() if t]
-    uni = [xxh64_signed(t.encode("utf-8")) % n_buckets for t in toks]
-    bi = [
-        xxh64_signed(f"{a} {b}".encode("utf-8")) % n_buckets
-        for a, b in zip(toks, toks[1:])
-    ]
-    return uni + bi
-
-
-def _py_dsir_weights(raw_docs, target_docs, n_buckets):
-    import math as _math
-    from collections import Counter
-
-    tc = Counter(b for _, t in target_docs for b in _py_dsir_buckets(t, n_buckets))
-    rc = Counter(b for _, t in raw_docs for b in _py_dsir_buckets(t, n_buckets))
-    tt, rt = sum(tc.values()), sum(rc.values())
-    t_denom, r_denom = _math.log(tt + n_buckets), _math.log(rt + n_buckets)
-    out = {}
-    for did, t in raw_docs:
-        w, feats = 0.0, _py_dsir_buckets(t, n_buckets)
-        for b in feats:
-            lt = _math.log(tc[b] + 1) - t_denom if b in tc else -t_denom
-            lr = _math.log(rc[b] + 1) - r_denom if b in rc else -r_denom
-            w += lt - lr
-        out[did] = (len(feats), w)
-    return out
-
-
-def test_dsir_weights_match_pure_python_oracle(spark):
-    """Spark DSIR log-weights == the dependency-free python implementation,
-    feature count exactly and weight to float precision. B=64 forces hash
-    collisions so the bucketing itself is exercised."""
-    from daft_minhash_dedupe_spark.extras.dsir import dsir_weights
-
-    raw_docs = [
-        (i, f"the quick brown fox {i} jumps over the lazy dog number {i % 5}")
-        for i in range(30)
-    ] + [(100 + i, f"zzq{i} qqz{i * 7} xjv kwp{i}") for i in range(10)]
-    target_docs = [
-        (i, f"the quick red fox likes the calm dog and number {i % 3}")
-        for i in range(15)
-    ]
-    raw = spark.createDataFrame(raw_docs, "doc_id long, text string")
-    target = spark.createDataFrame(target_docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_features"], r["log_weight"])
-        for r in dsir_weights(raw, target, n_buckets=64).collect()
-    }
-    want = _py_dsir_weights(raw_docs, target_docs, 64)
-    assert set(got) == set(want)
-    for did, (nf, w) in want.items():
-        assert got[did][0] == nf
-        assert abs(got[did][1] - w) <= 1e-8 * max(1.0, abs(w))
-
-
-def test_dsir_empty_doc_gets_zero_weight(spark):
-    from daft_minhash_dedupe_spark.extras.dsir import dsir_weights
-
-    raw = spark.createDataFrame(
-        [(1, "hello world"), (2, ""), (3, "   ")], "doc_id long, text string"
-    )
-    target = spark.createDataFrame([(1, "hello there")], "doc_id long, text string")
-    got = {r["doc_id"]: r for r in dsir_weights(raw, target, n_buckets=32).collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[2]["n_features"] == 0 and got[2]["log_weight"] == 0.0
-    assert got[3]["n_features"] == 0 and got[3]["log_weight"] == 0.0
-
-
-def test_gumbel_key_matches_python_derivation(spark):
-    import math as _math
-
-    from daft_minhash_dedupe_spark.extras.dsir import gumbel_key
-    from daft_minhash_dedupe_spark.oracle import xxh64, xxh64_signed  # noqa: F401
-
-    df = spark.range(0, 50).withColumnRenamed("id", "doc_id")
-    got = {
-        r["doc_id"]: r["g"]
-        for r in df.select(
-            "doc_id", gumbel_key(F.col("doc_id"), "s1").alias("g")
-        ).collect()
-    }
-    for did in range(50):
-        h1 = xxh64((did % (1 << 64)).to_bytes(8, "little"), 42)
-        h2 = xxh64(b"s1", h1)
-        u = (h2 % (1 << 20) + 0.5) / float(1 << 20)
-        g = -_math.log(-_math.log(u))
-        assert abs(got[did] - g) < 1e-10
-
-
-def test_dsir_select_prefers_target_like_docs(spark):
-    """End-to-end: raw pool = 60 target-like + 60 spam docs (spam vocab is
-    COMMON in raw, absent from target — the distribution shape DSIR is
-    built to reject; per-doc-unique gibberish would instead be upweighted
-    by the p_target/p_raw ratio, correctly per the paper). Resampling at
-    low temperature must pick overwhelmingly from the target-like half,
-    and the draw is deterministic across repartitionings."""
-    from daft_minhash_dedupe_spark.extras.dsir import dsir_select, dsir_weights
-
-    like = [
-        (i, f"science papers discuss the method and the results of study {i % 7}")
-        for i in range(60)
-    ]
-    junk = [
-        (1000 + i, f"buy cheap pills now click here best offer deal win prize {i % 3}")
-        for i in range(60)
-    ]
-    raw = spark.createDataFrame(like + junk, "doc_id long, text string")
-    target = spark.createDataFrame(
-        [(i, f"the study method shows results in science of papers {i % 4}")
-         for i in range(25)],
-        "doc_id long, text string",
-    )
-    w = dsir_weights(raw, target, n_buckets=2048)
-    picked = {r["doc_id"] for r in dsir_select(w, k=40, temperature=0.05).collect()}
-    assert len(picked) == 40
-    assert sum(1 for d in picked if d < 1000) >= 36  # >=90% target-like
-    # deterministic under repartition
-    picked2 = {
-        r["doc_id"]
-        for r in dsir_select(w.repartition(13), k=40, temperature=0.05).collect()
-    }
-    assert picked == picked2
-
-
-def test_dsir_select_fraction_and_validation(spark):
-    from daft_minhash_dedupe_spark.extras.dsir import dsir_select
-
-    w = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 17).cast("double").alias("log_weight")
-    )
-    out = dsir_select(w, fraction=0.25)
-    n = out.count()
-    assert 400 <= n <= 600  # approxQuantile threshold, 25% +/- tolerance
-    assert dsir_select(w, fraction=1.0).count() == 2000
-    with pytest.raises(ValueError):
-        dsir_select(w)
-    with pytest.raises(ValueError):
-        dsir_select(w, k=10, fraction=0.5)
-    with pytest.raises(ValueError):
-        dsir_select(w, k=0)
-    with pytest.raises(ValueError):
-        dsir_select(w, fraction=0.0)
-    with pytest.raises(ValueError):
-        dsir_select(w, k=5, temperature=0.0)
 
 
 def test_curate_corpus_split_gates_match_fused(spark):
@@ -1640,3 +1364,40 @@ def test_curate_corpus_split_gates_match_fused(spark):
     assert sorted(map(key, got.collect())) == sorted(map(key, fused.collect()))
 
 
+
+
+def test_every_extras_module_has_a_program_caller():
+    """Each extras module must be imported by a program file — main.py,
+    __spark_entry__.py or another package module — not only by tests.
+    Static: parses the imports, starts no Spark."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    pkg = repo / "daft_minhash_dedupe_spark"
+    extras = {p.stem for p in (pkg / "extras").glob("*.py")} - {"__init__"}
+    prefix = "daft_minhash_dedupe_spark.extras"
+
+    def imported_extras(path):
+        found = set()
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                names = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+            else:
+                continue
+            found.update(
+                n[len(prefix) + 1:].split(".")[0]
+                for n in names
+                if n.startswith(prefix + ".")
+            )
+        return found
+
+    called = set()
+    for path in [repo / "main.py", repo / "__spark_entry__.py", *pkg.rglob("*.py")]:
+        mods = imported_extras(path)
+        if path.parent == pkg / "extras":
+            mods.discard(path.stem)  # a module is not its own caller
+        called |= mods
+    assert sorted(extras - called) == []

@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 from daft_minhash_dedupe_spark.config import DedupeConfig
 from daft_minhash_dedupe_spark.operators.components import connected_components
 from daft_minhash_dedupe_spark.operators.edges import build_edges_from_buckets
-from daft_minhash_dedupe_spark.operators.incremental import (
-    incremental_assignments,
-    merge_assignment_tables,
-)
+from daft_minhash_dedupe_spark.operators.incremental import incremental_assignments
 from daft_minhash_dedupe_spark.operators.state import (
     IncrementalState,
     meta_from_config,
@@ -109,11 +106,15 @@ def test_incremental_equals_full_run(spark, seed, mod, tmp_path):
     _, a_bands, a_assigns = _stages(pipe, part_a)
     b_nodes, b_bands, _ = _stages(pipe, part_b)
 
+    # apply the delta the way pipe.fold does: batch A is the bootstrapped
+    # state, batch B appends its bands with new_assign ∪ old_updates
+    state = IncrementalState(spark, str(tmp_path / "state"))
+    state.bootstrap(a_bands, a_assigns, meta_from_config(pipe.cfg))
     new_assign, old_updates = incremental_assignments(
-        b_bands, a_bands, a_assigns, str(tmp_path)
+        b_bands, state.read_bands(), state.read_assignments(), str(tmp_path)
     )
-    merged_df = merge_assignment_tables(a_assigns, new_assign, old_updates)
-    merged = {r["u"]: r["rep"] for r in merged_df.collect()}
+    state.append(b_bands, new_assign.unionByName(old_updates))
+    merged = {r["u"]: r["rep"] for r in state.read_assignments().collect()}
 
     # some cross-batch duplicate structure must actually exist for the test
     # to mean anything

@@ -58,34 +58,6 @@ def test_stage_checkpointer_metrics_and_resume(spark, tmp_path):
     assert out2.count() == 100
 
 
-def test_streaming_lang_counts(spark, tmp_path):
-    from daft_minhash_dedupe_spark.streaming import streaming_lang_counts
-
-    src = tmp_path / "src"
-    batch = spark.createDataFrame(
-        [
-            ("u1", "2024-01-01 00:01:00", "en"),
-            ("u2", "2024-01-01 00:02:00", "en"),
-            ("u3", "2024-01-01 00:15:00", "fr"),
-        ],
-        "url string, warc_ts string, lang string",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    batch.write.parquet(str(src))
-    stream = spark.readStream.schema(batch.schema).parquet(str(src))
-    q = (
-        streaming_lang_counts(stream)
-        .writeStream.format("memory")
-        .queryName("lang_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {(r["lang"], r["n_docs"]) for r in spark.sql("select * from lang_counts").collect()}
-    assert ("en", 2) in rows and ("fr", 1) in rows
-
-
 def test_iceberg_dispatch_logic(monkeypatch):
     """The Iceberg branch can't run live here (no runtime jar on the box),
     so pin its dispatch contract with recording stand-ins: a dotted table

@@ -105,9 +105,9 @@ def test_checkpoint_resume(spark, tmp_path):
     dup = " ".join(f"tok{i:03d}" for i in range(40))
     unique = " ".join(f"zz{i:03d}" for i in range(40))
     df = _docs_df(spark, [dup, dup, unique])
-    cfg = DedupeConfig(checkpoint_dir=str(tmp_path / "ckpt"))
-    pipe = MinHashDedupePipeline(cfg)
-    ck1 = StageCheckpointer(spark, root=cfg.checkpoint_dir)
+    root = str(tmp_path / "ckpt")
+    pipe = MinHashDedupePipeline(DedupeConfig())
+    ck1 = StageCheckpointer(spark, root=root)
     r1 = pipe.run(df, checkpointer=ck1)
     first = sorted(r["block_id"] for r in r1["results"].collect())
     assert ck1.has("signatures") and ck1.has("pairs") and ck1.has("components")
@@ -116,7 +116,7 @@ def test_checkpoint_resume(spark, tmp_path):
     assert not (tmp_path / "ckpt" / "_metrics").exists()
 
     # resume: a new checkpointer must reuse completed stages (no recompute)
-    ck2 = StageCheckpointer(spark, root=cfg.checkpoint_dir, resume=True)
+    ck2 = StageCheckpointer(spark, root=root, resume=True)
     r2 = pipe.run(df, checkpointer=ck2)
     assert sorted(r["block_id"] for r in r2["results"].collect()) == first
     # metrics recorded only for the first run (stages were skipped on resume)

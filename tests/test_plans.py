@@ -125,16 +125,3 @@ def test_exact_substring_removal_plan_shape(spark):
     bl = _plan(duplicated_windows(window_postings(docs, window_tokens=8), "doc_id"))
     # distinct (partial+final) then count (partial+final)
     assert bl.count("HashAggregate") >= 4
-
-
-def test_deterministic_sample_is_scan_stage(spark):
-    """The sampling predicate is a pure per-row filter over the scan — no
-    Exchange, no join, no aggregate anywhere in the plan (the property that
-    makes it 100-TB-safe and repartition-stable)."""
-    from daft_minhash_dedupe_spark.extras.sampling import stratified_sample
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(stratified_sample(docs, {"en": 0.5, "fr": 0.1}, strata_col="lang"))
-    for node in ("Exchange", "Join", "Aggregate", "Generate"):
-        assert node not in plan, node
-    assert "Filter" in plan
