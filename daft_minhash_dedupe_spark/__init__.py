@@ -8,8 +8,9 @@ star accelerators), plus the surrounding training-data operators (exact dedup,
 SimHash, n-gram Jaccard, embedding ANN, text analysis).
 
 Architecture is DataFrame/Catalyst/AQE-first: every stage is a declarative
-plan; Python appears only in two Arrow-batched pandas UDFs (NFD normalize and
-the minhash permutation kernel) — no per-row Python anywhere.
+plan; on the pipeline path Python appears only in one Arrow-batched pandas
+UDF, the minhash permutation kernel (NFD normalize runs in the JVM through
+ICU4J) — no per-row Python anywhere.
 
 Reference behavior contract: /root/reference/workload/minhash_dedupe.py
 (cited per-function as file:line in docstrings).

@@ -43,6 +43,7 @@ tests with hand-derived per-tier counts (tests/test_tiered.py).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -194,7 +195,8 @@ def tiered_stats(result: dict) -> DataFrame:
     """Metrics as a one-row-per-tier DataFrame (for sinks/reporting)."""
     survivors = result["survivors"]
     spark = survivors.sparkSession
-    return spark.createDataFrame(
-        [(m["tier"], m["docs_in"], m["docs_out"]) for m in result["metrics"]],
-        "tier string, docs_in long, docs_out long",
+    metrics = result["metrics"]
+    table = pa.table(
+        {k: [m[k] for m in metrics] for k in ("tier", "docs_in", "docs_out")}
     )
+    return spark.createDataFrame(table, "tier string, docs_in long, docs_out long")

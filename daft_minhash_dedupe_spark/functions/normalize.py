@@ -8,45 +8,36 @@ reference tests/test_minhash_dedupe_unit.py:194-214:
   whitespace runs collapsed to single space, trimmed);
 - idempotent for every flag combination.
 
-Everything except NFD runs JVM-side as Catalyst expressions (whole-stage
-codegen); NFD is the one step Spark has no builtin for, so it is an
-Arrow-batched pandas UDF applied only when ``nfd_unicode=True``. Application
-order (remove_punct → lowercase → NFD → whitespace) is chosen so the
-composition is idempotent: no later step reintroduces anything an earlier
-step removes.
+All four steps run JVM-side as Catalyst expressions, so normalization starts
+no Python worker. NFD, the one step Spark has no builtin for, calls ICU4J's
+``Normalizer.decompose`` through ``reflect`` (ICU4J ships in Spark's own
+``jars/``). On every codepoint assigned in Python 3.11's Unicode 14.0 it
+equals ``unicodedata.normalize("NFD")``. ICU4J 77 follows Unicode 16.0, so
+codepoints assigned in 15.0-16.0 (unassigned to Python 3.11) can decompose
+or reorder where Python would leave them as they are.
+Application order (remove_punct → lowercase → NFD → whitespace) is chosen so
+the composition is idempotent: no later step reintroduces anything an
+earlier step removes.
 """
 
 from __future__ import annotations
 
-import unicodedata
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # ASCII punctuation (Python string.punctuation), regex-escaped as a class.
 _PUNCT_CLASS = r"""[!"#$%&'()*+,\-./:;<=>?@\[\\\]^_`{|}~]"""
 
 
-@F.pandas_udf(T.StringType())
-def _nfd_udf(s: pd.Series) -> pd.Series:
-    """Unicode NFD normalization, vectorized over an Arrow batch.
-
-    Fast path: NFD is the identity on pure-ASCII text, detected vectorized
-    (utf-8 byte length == char length); per-element Python runs only on the
-    non-ASCII minority. There is no Catalyst unicode-normalize builtin, so
-    this one pandas UDF is the entire Python surface of normalization.
-    """
-    notnull = s.notna()
-    if not notnull.any():
-        return s
-    non_ascii = notnull & (s.str.len() != s.str.encode("utf-8").str.len())
-    if not non_ascii.any():
-        return s
-    out = s.copy()
-    out[non_ascii] = s[non_ascii].map(lambda x: unicodedata.normalize("NFD", x))
-    return out
+def _nfd(col: Column) -> Column:
+    """Unicode NFD in the JVM. ``reflect`` raises on a null argument, so
+    nulls stay null without reaching ICU."""
+    return F.when(
+        col.isNotNull(),
+        F.reflect(
+            F.lit("com.ibm.icu.text.Normalizer"), F.lit("decompose"), col, F.lit(False)
+        ),
+    )
 
 
 def normalize_text(
@@ -63,48 +54,7 @@ def normalize_text(
     if lowercase:
         out = F.lower(out)
     if nfd_unicode:
-        out = _nfd_udf(out)
+        out = _nfd(out)
     if white_space:
         out = F.trim(F.regexp_replace(out, r"\s+", " "))
     return out
-
-
-def normalize_dataframe(
-    df,
-    text_col: str,
-    out_col: str,
-    remove_punct: bool = True,
-    lowercase: bool = False,
-    nfd_unicode: bool = True,
-    white_space: bool = True,
-):
-    """DataFrame-level normalize that keeps ASCII rows OUT of Python.
-
-    NFD is the identity on ASCII text, but Catalyst extracts python UDFs out
-    of conditionals and evaluates them on every row — a `when(ascii, x)
-    .otherwise(nfd(x))` still ships the whole corpus through the Arrow
-    socket both ways. Splitting the frame JVM-side (`rlike` ASCII test) and
-    unioning back means the UDF transport pays only for the non-ASCII
-    minority of real webtext. Column order/semantics identical to
-    ``normalize_text``.
-    """
-    if not nfd_unicode:
-        return df.withColumn(
-            out_col,
-            normalize_text(F.col(text_col), remove_punct, lowercase, False, white_space),
-        )
-    pre = F.col(text_col)
-    if remove_punct:
-        pre = F.regexp_replace(pre, _PUNCT_CLASS, "")
-    if lowercase:
-        pre = F.lower(pre)
-    staged = df.withColumn("__pre", pre)
-    is_ascii = F.col("__pre").rlike(r"^[\x00-\x7F]*$") | F.col("__pre").isNull()
-    post = F.col("__pre")
-    post_nfd: Column = _nfd_udf(F.col("__pre"))
-    if white_space:
-        post = F.trim(F.regexp_replace(post, r"\s+", " "))
-        post_nfd = F.trim(F.regexp_replace(post_nfd, r"\s+", " "))
-    ascii_rows = staged.where(is_ascii).withColumn(out_col, post)
-    other_rows = staged.where(~is_ascii).withColumn(out_col, post_nfd)
-    return ascii_rows.unionByName(other_rows).drop("__pre")

@@ -35,6 +35,7 @@ from __future__ import annotations
 import logging
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -212,10 +213,11 @@ def connected_components(
         head = edges.select("u", "v").limit(driver_fallback_edges + 1).collect()
         if len(head) <= driver_fallback_edges:
             mapping = union_find_components([(r["u"], r["v"]) for r in head])
-            spark = edges.sparkSession
-            return spark.createDataFrame(
-                sorted(mapping.items()) or [], "u long, rep long"
-            )
+            nodes = sorted(mapping)
+            # an Arrow table plans as a LocalTableScan; a Python list would
+            # plan as a pickled RDD whose scan starts a Python task per slice
+            table = pa.table({"u": nodes, "rep": [mapping[n] for n in nodes]})
+            return edges.sparkSession.createDataFrame(table, "u long, rep long")
     if algorithm == "hash_to_min":
         # no star contraction: seed label(u) = min(u, neighbours) and diffuse.
         # Fastest option on low-diameter LSH graphs (~2× vs alternating);

@@ -6,7 +6,7 @@ resumable parquet/Iceberg checkpoint with per-partition metrics):
 
     input (url, warc_ts, html, text, lang)  [input_hint table]
       → prep (select natural key + text; deterministic node_id = xxhash64)
-      → normalize (Catalyst + one NFD pandas UDF)
+      → normalize (Catalyst; NFD through ICU4J in the JVM, no Python)
       → signatures (JVM shingle hashing + numpy permutation kernel)   [ckpt]
       → bands (posexplode banded slices → 8-byte band_key)            [ckpt]
       → pairs (salted bucket-min star edges; optional exact-Jaccard
@@ -29,10 +29,7 @@ from daft_minhash_dedupe_spark.functions.minhash import (
     add_shingles,
     minhash_signature,
 )
-from daft_minhash_dedupe_spark.functions.normalize import (
-    normalize_dataframe,
-    normalize_text,
-)
+from daft_minhash_dedupe_spark.functions.normalize import normalize_text
 from daft_minhash_dedupe_spark.io import StageCheckpointer, write_table
 from daft_minhash_dedupe_spark.operators.banding import lsh_band_buckets
 from daft_minhash_dedupe_spark.operators.components import (
@@ -75,7 +72,9 @@ def prepare_web_pages(
 def _python_stage_parallelism(
     n_rows: int, default_par: int, rows_per_task: int = 200_000
 ) -> int:
-    """Partition count for the CPU-heavy narrow Python stages.
+    """Partition count for the CPU-heavy narrow text stages: normalize (JVM
+    regex and ICU NFD) and the shingle + MinHash stage, whose kernel is the
+    pipeline's one Python UDF (one Python task per partition).
 
     Three regimes:
     - tiny inputs clamp DOWN to ceil(rows/1000): fanning 500 docs over 32+
@@ -118,22 +117,23 @@ class MinHashDedupePipeline:
 
     def normalize(self, df: DataFrame) -> DataFrame:
         c = self.cfg
-        return normalize_dataframe(
-            df,
-            c.content_col,
+        return df.withColumn(
             "content_normalized",
-            remove_punct=c.remove_punct,
-            lowercase=c.lowercase,
-            nfd_unicode=c.nfd_unicode,
-            white_space=c.white_space,
+            normalize_text(
+                F.col(c.content_col),
+                remove_punct=c.remove_punct,
+                lowercase=c.lowercase,
+                nfd_unicode=c.nfd_unicode,
+                white_space=c.white_space,
+            ),
         )
 
     def shingles(self, norm: DataFrame) -> DataFrame:
         """(node_id, shingles) — distinct shingle hashes, pure Catalyst.
 
         Lazily materialized: the signature kernel must read the shingle
-        arrays as a bound column. Feeding the pandas-UDF kernel an expensive
-        unmaterialized projection (or the NFD pandas UDF upstream of it)
+        arrays as a bound column. Feeding the pandas-UDF kernel (the
+        pipeline's one Python UDF) an expensive unmaterialized projection
         measured 6–8× slower — the JVM re-buffers/spills the full input rows
         around the Python exchange."""
         return (
@@ -215,10 +215,9 @@ class MinHashDedupePipeline:
             n_rows, df.sparkSession.sparkContext.defaultParallelism
         )
 
-        # normalize is its own stage boundary: chaining the NFD pandas UDF and
-        # the minhash Arrow kernel inside ONE stage measured ~6× slower (two
-        # ArrowEvalPython nodes pipelined back-to-back); the reference makes
-        # the same call eagerly (FRICTION_LOG.md:32)
+        # normalize is its own stage boundary: a resumable stage, and the
+        # boundary a trace attributes normalize's time to (the reference
+        # also materializes it eagerly, FRICTION_LOG.md:32)
         # downstream of prep, rows travel by integer node_id only — the string
         # key stays in id_map and rejoins at merge (smaller caches, and the
         # pandas-UDF stage doesn't ship passthrough strings to Python)

@@ -2,9 +2,11 @@
 
 AQE on (runtime re-plan, partition coalescing, skew-join splitting) replaces
 the prior art's static shuffle-partition tuning
-(references/chengmao_minhash_spark.py:382-397). Arrow is enabled for the two
-pandas UDFs. Iceberg catalog config is attached only when the runtime jar is
-actually present (the sandbox has none — parquet fallback in io.py).
+(references/chengmao_minhash_spark.py:382-397). Arrow is enabled for the one
+pandas UDF on the pipeline path (the MinHash kernel) and for frames built from
+driver-side Arrow tables. Iceberg catalog config is attached only when the
+runtime jar is actually present (the sandbox has none — parquet fallback in
+io.py).
 
 Local driver JVMs raise C2 thresholds: C2 threads took 11-14.5 s of a cold op's ~25 s CPU.
 A 2000-class codegen cache stops each fold re-running Janino on 131-138 evicted classes.

@@ -40,6 +40,7 @@ suppress any document at-or-after a caller-supplied event-time frontier.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -154,7 +155,8 @@ class StreamingNearDedupe:
         from daft_minhash_dedupe_spark.operators.state import _exists
 
         if not _exists(spark, self._bands_root):
-            return spark.createDataFrame([], _STATE_SCHEMA)
+            cols = ("band_key", "last_ts", "ts_bucket", "batch_id")
+            return spark.createDataFrame(pa.table({c: [] for c in cols}), _STATE_SCHEMA)
         return (
             spark.read.parquet(self._bands_root)
             .where(F.col("batch_id") < F.lit(int(batch_id)))

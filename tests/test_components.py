@@ -144,7 +144,9 @@ def test_driver_fallback_identical_to_distributed(spark):
     assert still_dist == dist
 
     empty = spark.createDataFrame([], "u long, v long")
-    assert connected_components(empty, driver_fallback_edges=100).count() == 0
+    none = connected_components(empty, driver_fallback_edges=100)
+    assert none.count() == 0
+    assert none.schema.simpleString() == "struct<u:bigint,rep:bigint>"
 
 
 def _cc_stress_edges(spark, n_nodes: int, star_size: int):

@@ -393,9 +393,9 @@ def test_legacy_root_reads_and_folds(spark, tmp_path, kind):
 
 
 def test_fold_nfd_twins_join_their_base_clusters(spark, tmp_path):
-    """Non-ASCII text takes normalize's NFD UDF branch in a fold: a batch of
-    decomposed-accent twins ("cafe\\u0301") of composed-accent base docs
-    ("caf\\u00e9"), plus one non-Latin doc. Each twin's cluster row carries
+    """Non-ASCII text takes normalize's NFD (ICU4J in the JVM) in a fold: a
+    batch of decomposed-accent twins ("cafe\\u0301") of composed-accent base
+    docs ("caf\\u00e9"), plus one non-Latin doc. Each twin's cluster row carries
     its base doc's representative, and the folded state equals a full run
     over base ∪ batch."""
     import random
@@ -426,8 +426,8 @@ def test_fold_nfd_twins_join_their_base_clusters(spark, tmp_path):
     base = spark.createDataFrame(sorted(base_texts.items()), schema)
     batch = spark.createDataFrame(sorted(batch_texts.items()), schema)
 
-    # every batch row is still non-ASCII after punctuation removal, so it
-    # takes normalize's NFD UDF branch, not the JVM-only ASCII branch
+    # every batch row is still non-ASCII after punctuation removal, so NFD
+    # has work to do on every row of the batch
     stripped = F.regexp_replace(cfg.content_col, _PUNCT_CLASS, "")
     assert batch.where(~stripped.rlike(r"^[\x00-\x7F]*$")).count() == len(batch_texts)
 

@@ -1,10 +1,15 @@
 """Normalization semantics pinned by the reference
 (tests/test_minhash_dedupe_unit.py:194-214)."""
 
+import re
+import sys
+import unicodedata
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from daft_minhash_dedupe_spark.functions.normalize import normalize_text
+from daft_minhash_dedupe_spark.functions.normalize import _PUNCT_CLASS, normalize_text
 
 # composed form on input; NFD keeps the combining acute after decomposition
 PINNED_IN = "Hello, World! cafés  \t\n"
@@ -62,18 +67,63 @@ def test_normalize_null_safe(spark):
     assert out is None
 
 
-def test_normalize_dataframe_matches_column_expr(spark):
-    from daft_minhash_dedupe_spark.functions.normalize import normalize_dataframe
+def _reference(text, flags):
+    """Pure-Python normalize: ``re`` plus ``unicodedata.normalize("NFD")``.
+    Java's ``\\s`` and Spark's ``trim`` are ASCII-only, so the whitespace
+    step spells out the same classes."""
+    if text is None:
+        return None
+    remove_punct, lowercase, nfd, ws = flags
+    if remove_punct:
+        text = re.sub(_PUNCT_CLASS, "", text)
+    if lowercase:
+        text = text.lower()
+    if nfd:
+        text = unicodedata.normalize("NFD", text)
+    if ws:
+        text = re.sub(r"[ \t\n\x0b\f\r]+", " ", text).strip(" ")
+    return text
 
-    samples = [PINNED_IN, "pure ascii text  here", "", None, "mixé ascii ñon", "Ünïcode  only"]
+
+def test_normalize_text_matches_python_reference(spark):
+    """The JVM's NFD (ICU4J through ``reflect``) against ``unicodedata``."""
+    samples = [
+        PINNED_IN,
+        "pure ascii text  here",
+        "",
+        None,
+        "mixé ascii ñon",
+        "Ünïcode  only",
+        # marks of combining class 230 then 220 reorder to 220 then 230
+        "a\u0301\u0323",
+        # a Hangul syllable decomposes into its three jamo
+        "\ud55c",
+    ]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(samples)], "i long, t string")
     for flags in [(True, True, True, True), (True, False, True, True), (False, False, True, False)]:
-        via_df = {
-            r["i"]: r["n"]
-            for r in normalize_dataframe(df, "t", "n", *flags).collect()
-        }
-        via_col = {
+        got = {
             r["i"]: r["n"]
             for r in df.select("i", normalize_text(F.col("t"), *flags).alias("n")).collect()
         }
-        assert via_df == via_col, flags
+        assert got == {i: _reference(s, flags) for i, s in enumerate(samples)}, flags
+    # NFD alone (the last flags): canonical reordering and Hangul
+    assert got[6] == "a\u0323\u0301"
+    assert got[7] == "\u1112\u1161\u11ab"
+
+    # every codepoint Python's Unicode database assigns, surrogates excluded
+    # (Cs is a category of its own, not Cn), NFD alone, checked in one job
+    assigned = [
+        chr(cp)
+        for cp in range(sys.maxunicode + 1)
+        if unicodedata.category(chr(cp)) not in ("Cn", "Cs")
+    ]
+    chars = spark.createDataFrame(pa.table({"c": assigned}), "c string")
+    nfd = normalize_text(F.col("c"), False, False, True, False)
+    changed = chars.select("c", nfd.alias("n")).where(F.col("n") != F.col("c"))
+    decomposed = {r["c"]: r["n"] for r in changed.collect()}
+    expected = {
+        c: unicodedata.normalize("NFD", c)
+        for c in assigned
+        if unicodedata.normalize("NFD", c) != c
+    }
+    assert decomposed == expected

@@ -125,3 +125,24 @@ def test_exact_substring_removal_plan_shape(spark):
     bl = _plan(duplicated_windows(window_postings(docs, window_tokens=8), "doc_id"))
     # distinct (partial+final) then count (partial+final)
     assert bl.count("HashAggregate") >= 4
+
+
+def test_python_runs_only_in_the_minhash_kernel(spark):
+    """Normalize is pure Catalyst (NFD through ICU4J's ``reflect``), and the
+    driver-fallback CC result is a local Arrow table: neither plan starts a
+    Python task."""
+    from daft_minhash_dedupe_spark.operators.components import connected_components
+    from daft_minhash_dedupe_spark.pipeline import MinHashDedupePipeline
+
+    docs = spark.range(4).select(
+        F.col("id").cast("string").alias("block_id"),
+        F.lit("Caf\u00e9, caf\u00e9!").alias("block_text"),
+        F.col("id").alias("node_id"),
+    )
+    norm = _plan(MinHashDedupePipeline().normalize(docs))
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Union"):
+        assert node not in norm, norm
+
+    edges = spark.range(3).select(F.col("id").alias("u"), (F.col("id") + 1).alias("v"))
+    cc = _plan(connected_components(edges, driver_fallback_edges=100))
+    assert "LocalTableScan" in cc and "ExistingRDD" not in cc, cc
