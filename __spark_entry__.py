@@ -378,19 +378,6 @@ def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(_t(sf_dir, "events"))
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.unix_timestamp("win.start").alias("hour_epoch"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
 def _q_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-sf run: instead of sampling doc_id < 2000, the hot-window posting
     cap (max_posting) bounds the quadratic blowup the way the operator is
@@ -469,25 +456,6 @@ def _q_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.round("O", 2).alias("qty_open"),
         F.round("F", 2).alias("qty_filled"),
-    )
-
-
-def _q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(_t(sf_dir, "events"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    with_flag = ev.withColumn(
-        "_new", F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0))
-    )
-    with_sid = with_flag.withColumn(
-        "session_id",
-        F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return with_sid.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min(F.unix_timestamp("ts")).alias("start_epoch"),
     )
 
 
@@ -653,39 +621,6 @@ def _q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n").desc(), F.col("token"))
         .limit(50)
     )
-
-
-def _q_asof_purchase_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join, BOTH execution paths in one adjudicated row: arm 'single'
-    is the plain union + one-window-per-key plan, arm 'split' is the hot-key
-    mitigation (split_buckets: per-(key, time bucket) windows + boundary
-    carry stitch). Each arm's full result is value-hash-compared against the
-    same DuckDB ASOF JOIN — the arms were separate queries in rounds 2–3
-    (asof_purchase / asof_purchase_split, both green); packed so every
-    oracle row stays inside the driver's adjudication window."""
-    from daft_minhash_dedupe_spark.extras.temporal import asof_join
-
-    ev = spark.read.parquet(_t(sf_dir, "events"))
-    clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.unix_timestamp("ts").alias("purchase_epoch")
-    )
-    arms = []
-    for arm, buckets in (("single", None), ("split", 8)):
-        out = asof_join(
-            clicks, purchases, key="user_id", ts="ts",
-            value_cols=["purchase_epoch"], split_buckets=buckets,
-        )
-        arms.append(
-            out.select(
-                F.lit(arm).alias("arm"),
-                "event_id",
-                "user_id",
-                F.unix_timestamp("ts").alias("click_epoch"),
-                F.col("purchase_epoch_asof").alias("purchase_epoch"),
-            )
-        )
-    return arms[0].unionByName(arms[1])
 
 
 def _q_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,27 +1057,6 @@ def _q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(_t(sf_dir, "events"))
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_id", F.unix_timestamp("ts").alias("ts_epoch"))
-    )
-
-
-def _q_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(_t(sf_dir, "events"))
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
 def _q_embedding_topk_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force AND IVF top-k as two arm-tagged slices of one row (the
     round-4 packing pattern) — IVF probes every list, so both arms must
@@ -1199,17 +1113,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": _q_text_quality,
         "lm_perplexity": _q_lm_perplexity,
         "knn_join": _q_knn_join,
-        "events_hourly": _q_events_hourly,
         "substring_dup_pairs": _q_substring_dups,
         "substring_span_removal": _q_substring_span_removal,
         "html_blocks": _q_html_blocks,
         "pricing_rollup": _q_pricing_rollup,
         "status_pivot": _q_status_pivot,
-        "user_sessions": _q_user_sessions,
         "canonical_urls": _q_canonical_urls,
         "domain_doc_stats": _q_domain_doc_stats,
         "token_topk": _q_token_topk,
-        "asof_purchase_arms": _q_asof_purchase_arms,
         "contamination_pairs": _q_contamination,
         "fuzzy_contamination": _q_fuzzy_contamination,
         "bloom_dedupe_flags": _q_bloom_dedupe_flags,
@@ -1224,8 +1135,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_pricing_summary": _q_tpch_pricing,
         "customer_revenue": _q_customer_revenue,
         "customers_without_orders": _q_customers_without_orders,
-        "latest_event_per_user": _q_latest_event_per_user,
-        "events_agg": _q_events_agg,
         "embedding_topk_arms": _q_embedding_topk_arms,
         "embedding_near_dup": _q_embedding_near_dup,
         "semantic_dedupe": _q_semantic_dedupe,
@@ -1384,17 +1293,6 @@ def oracle_sql() -> dict[str, str]:
             WITH tok AS (SELECT unnest({toks}) AS token FROM documents),
             c AS (SELECT token, count(*) AS n FROM tok GROUP BY token)
             SELECT token, n FROM c ORDER BY n DESC, token LIMIT 50
-        """,
-        "asof_purchase_arms": """
-            WITH aj AS (
-              SELECT l.event_id, l.user_id,
-                     CAST(floor(epoch(l.ts)) AS BIGINT) AS click_epoch,
-                     CAST(floor(epoch(r.ts)) AS BIGINT) AS purchase_epoch
-              FROM (SELECT * FROM events WHERE event_type = 'click') l
-              ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-                ON l.user_id = r.user_id AND l.ts >= r.ts)
-            SELECT arm, event_id, user_id, click_epoch, purchase_epoch
-            FROM aj CROSS JOIN (SELECT unnest(['single', 'split']) AS arm) arms
         """,
         "contamination_pairs": f"""
             WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
@@ -1603,11 +1501,6 @@ def oracle_sql() -> dict[str, str]:
               FROM scored)
             WHERE rank <= 3
         """,
-        "events_hourly": """
-            SELECT CAST(floor(epoch(time_bucket(INTERVAL '1 hour', ts))) AS BIGINT) AS hour_epoch,
-                   event_type, count(*) AS n_events
-            FROM events GROUP BY 1, 2
-        """,
         "substring_dup_pairs": f"""
             WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
             w0 AS (
@@ -1733,25 +1626,6 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_filled
             FROM lineitem GROUP BY l_returnflag
         """,
-        "user_sessions": """
-            WITH flagged AS (
-              SELECT user_id, event_id, ts, epoch(ts) AS e,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                               OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                          THEN 1 ELSE 0 END AS new_s
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            sess AS (
-              SELECT user_id, ts,
-                     -- BIGINT (not HUGEINT) + (ts, event_id) order to match
-                     -- Spark's int64 running sum and its tiebreak exactly
-                     CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-              FROM flagged)
-            SELECT user_id, session_id, count(*) AS n_events,
-                   CAST(min(floor(epoch(ts))) AS BIGINT) AS start_epoch
-            FROM sess GROUP BY user_id, session_id
-        """,
         "tpch_pricing_summary": """
             SELECT l_returnflag, l_linestatus,
                    round(sum(l_quantity), 2) AS sum_qty,
@@ -1771,19 +1645,6 @@ def oracle_sql() -> dict[str, str]:
         "customers_without_orders": """
             SELECT c_custkey, c_name FROM customer
             WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        """,
-        "latest_event_per_user": """
-            SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
-            FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                                               ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events)
-            WHERE rn = 1
-        """,
-        "events_agg": """
-            SELECT event_type, count(*) AS n_events,
-                   round(sum(value), 4) AS sum_value,
-                   count(DISTINCT user_id) AS n_users
-            FROM events GROUP BY event_type
         """,
         "embedding_near_dup": """
             WITH e AS (

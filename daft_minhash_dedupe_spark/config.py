@@ -104,11 +104,12 @@ class DedupeConfig:
 
     def __post_init__(self) -> None:
         b, r = optimal_param(self.threshold, self.num_perm)
-        # B*R <= num_perm is all banding needs: lsh_banding / the oracle
-        # slice only the first B*R signature values (operators/banding.py:41,
-        # oracle.py:182). Most (threshold, num_perm) combos have an optimal
-        # (B, R) with B*R < num_perm — e.g. (0.8, 64) -> (5, 11) = 55 — so
-        # requiring equality would reject nearly every non-default config.
+        # B*R <= num_perm is all banding needs:
+        # operators/banding.lsh_band_buckets and oracle.minhash_lsh_clusters
+        # each slice only the first B*R signature values. Most (threshold,
+        # num_perm) combos have an optimal (B, R) with B*R < num_perm — e.g.
+        # (0.8, 64) -> (5, 11) = 55 — so requiring equality would reject
+        # nearly every non-default config.
         if b < 1 or r < 1 or b * r > self.num_perm:
             raise ValueError(
                 f"no valid LSH banding for threshold={self.threshold}, "

@@ -315,48 +315,6 @@ def test_hyperplane_band_bits_expr_matmul_parity(spark):
     }
 
 
-def test_asof_join_semantics(spark):
-    from daft_minhash_dedupe_spark.extras.temporal import asof_join
-    import datetime as dt
-
-    def t(m):
-        return dt.datetime(2024, 1, 1, 0, m)
-
-    left = spark.createDataFrame(
-        [(1, 100, t(5)), (2, 100, t(10)), (3, 100, t(2)), (4, 200, t(5))],
-        "event_id long, user_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(100, t(5), 50), (100, t(8), 80), (300, t(1), 10)],
-        "user_id long, ts timestamp, v long",
-    )
-    out = {
-        r["event_id"]: r["v_asof"]
-        for r in asof_join(left, right, key="user_id", ts="ts", value_cols=["v"]).collect()
-    }
-    # event 1 at :05 matches the :05 purchase (inclusive); event 2 at :10 the
-    # :08 one; event 3 at :02 predates all -> null; user 200 has none -> null
-    assert out == {1: 50, 2: 80, 3: None, 4: None}
-
-
-def test_asof_join_null_in_latest_right_row(spark):
-    """The latest matched right row wins WHOLE — a NULL there must not fall
-    back to an older row's value (merge_asof/ASOF JOIN semantics)."""
-    from daft_minhash_dedupe_spark.extras.temporal import asof_join
-    import datetime as dt
-
-    def t(m):
-        return dt.datetime(2024, 1, 1, 0, m)
-
-    left = spark.createDataFrame([(1, 100, t(12))], "event_id long, user_id long, ts timestamp")
-    right = spark.createDataFrame(
-        [(100, t(5), 50, 7), (100, t(10), None, 9)],
-        "user_id long, ts timestamp, a long, b long",
-    )
-    row = asof_join(left, right, key="user_id", ts="ts", value_cols=["a", "b"]).first()
-    assert row["a_asof"] is None and row["b_asof"] == 9
-
-
 def test_decontaminate_custom_id_col(spark):
     from daft_minhash_dedupe_spark.extras.decontaminate import decontaminate
 
@@ -561,124 +519,6 @@ def test_curate_corpus_each_gate(spark):
     assert got == [10, 15]
     cols = set(out.columns)
     assert {"doc_id", "text", "quality", "lang"} <= cols
-
-
-def test_asof_join_random_vs_bruteforce(spark):
-    """Randomized property: for every left row, asof value equals the
-    brute-force 'latest right row with ts <= left.ts and same key' (with the
-    documented tie-break: max value among equal-latest-ts rows). Both the
-    single-window and split_buckets paths must match it."""
-    import datetime as dt
-    import random
-
-    from daft_minhash_dedupe_spark.extras.temporal import asof_join
-
-    rng = random.Random(17)
-    t0 = dt.datetime(2024, 1, 1)
-
-    def stamp(m):
-        return t0 + dt.timedelta(minutes=m)
-
-    lrows = [
-        (i, rng.randint(0, 4), stamp(rng.randint(0, 200))) for i in range(120)
-    ]
-    rrows = [
-        (rng.randint(0, 4), stamp(rng.randint(0, 200)), rng.randint(0, 999))
-        for _ in range(80)
-    ]
-    left = spark.createDataFrame(lrows, "event_id long, user_id long, ts timestamp")
-    right = spark.createDataFrame(rrows, "user_id long, ts timestamp, v long")
-
-    def brute(k, ts):
-        cands = [(rts, v) for (rk, rts, v) in rrows if rk == k and rts <= ts]
-        if not cands:
-            return None
-        latest = max(rts for rts, _ in cands)
-        return max(v for rts, v in cands if rts == latest)
-
-    want = {eid: brute(k, ts) for eid, k, ts in lrows}
-    for sb in (None, 7):
-        got = {
-            r["event_id"]: r["v_asof"]
-            for r in asof_join(
-                left, right, key="user_id", ts="ts", value_cols=["v"],
-                split_buckets=sb,
-            ).collect()
-        }
-        assert got == want, f"split_buckets={sb}"
-
-
-def test_asof_join_split_buckets_equals_single_window(spark):
-    """The hot-key mitigation path must return byte-identical results to the
-    single-window path on a skewed input (one key holding ~all rows), and
-    the carry must propagate across buckets that contain no right rows."""
-    import datetime as dt
-
-    from daft_minhash_dedupe_spark.extras.temporal import asof_join
-
-    def t(m):
-        return dt.datetime(2024, 1, 1, 0, 0) + dt.timedelta(minutes=m)
-
-    # hot key 1: 3000 left rows over 3000 minutes; right rows only in the
-    # FIRST sixth of the range so later buckets are right-empty
-    left_rows = [(i, 1, t(i)) for i in range(3000)] + [(9001, 2, t(17))]
-    right_rows = [(1, t(m), m) for m in range(0, 500, 50)] + [(2, t(10), 999)]
-    left = spark.createDataFrame(left_rows, "event_id long, user_id long, ts timestamp")
-    right = spark.createDataFrame(right_rows, "user_id long, ts timestamp, v long")
-
-    base = {
-        r["event_id"]: r["v_asof"]
-        for r in asof_join(left, right, key="user_id", ts="ts", value_cols=["v"]).collect()
-    }
-    split = {
-        r["event_id"]: r["v_asof"]
-        for r in asof_join(
-            left, right, key="user_id", ts="ts", value_cols=["v"], split_buckets=8
-        ).collect()
-    }
-    assert split == base
-    # spot-check semantics: last bucket's rows still see minute-450 purchase
-    assert split[2999] == 450 and split[9001] == 999 and split[0] == 0
-
-    # the bucketed plan really windows on (key, bucket)
-    plan = asof_join(
-        left, right, key="user_id", ts="ts", value_cols=["v"], split_buckets=8
-    )._sc._jvm.PythonSQLUtils.explainString(
-        asof_join(
-            left, right, key="user_id", ts="ts", value_cols=["v"], split_buckets=8
-        )._jdf.queryExecution(),
-        "formatted",
-    )
-    assert "_bucket" in plan
-
-
-def test_asof_join_split_buckets_null_struct_and_ties(spark):
-    """Tie/NULL semantics must survive bucketing: latest right row wins WHOLE
-    even when its fields are NULL; equal-ts right row matches inclusively."""
-    import datetime as dt
-
-    from daft_minhash_dedupe_spark.extras.temporal import asof_join
-
-    def t(m):
-        return dt.datetime(2024, 1, 1, 0, m)
-
-    left = spark.createDataFrame(
-        [(1, 100, t(12)), (2, 100, t(5)), (3, 200, t(59))],
-        "event_id long, user_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(100, t(5), 50, 7), (100, t(10), None, 9), (200, t(59), 1, 1)],
-        "user_id long, ts timestamp, a long, b long",
-    )
-    for sb in (None, 4):
-        out = {
-            r["event_id"]: (r["a_asof"], r["b_asof"])
-            for r in asof_join(
-                left, right, key="user_id", ts="ts",
-                value_cols=["a", "b"], split_buckets=sb,
-            ).collect()
-        }
-        assert out == {1: (None, 9), 2: (50, 7), 3: (1, 1)}, (sb, out)
 
 
 # -- line-level boilerplate dedup -------------------------------------------
